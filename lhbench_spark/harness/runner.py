@@ -113,7 +113,6 @@ class BenchmarkRunner:
         iteration times the real operation, never a no-op re-run."""
         sc = self.spark.sparkContext
         group = f"{name}-i{iteration}"
-        sc.setJobGroup(group, f"{name} iteration {iteration}")
         # Measurement isolation: operators that persist intermediates
         # (dedup signature sets) must not carry cached state into the next
         # query or iteration — every measurement is a clean cold run, and
@@ -124,10 +123,12 @@ class BenchmarkRunner:
         try:
             if setup is not None:
                 setup()
-            # (re)open the timing window AFTER setup: setup cost must
-            # not count, but a setup failure must still be captured as
+            # Open the job group and (re)open the timing window AFTER
+            # setup: neither its wall time nor its jobs may be billed to
+            # the query, but a setup failure must still be captured as
             # this query's error like any make_df failure — not abort
             # the whole suite past ignore_errors.
+            sc.setJobGroup(group, f"{name} iteration {iteration}")
             t0 = time.monotonic_ns()
             df = make_df()
             # Force planning through the physical plan (cached inside the

@@ -50,6 +50,29 @@ def _process_checkpoint_root() -> str:
     return _CHECKPOINT_ROOT
 
 
+_MAX_DRIVER_MEM_MB = 48 * 1024
+
+
+def _driver_mem_for(meminfo: str) -> str:
+    """Default driver heap for a host described by ``/proc/meminfo``
+    text: half of MemTotal, capped at 48g (local mode runs every
+    executor thread inside the driver JVM, and the other half stays for
+    Python workers, off-heap shuffle and the OS). The cap is also the
+    answer when MemTotal is unknown."""
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            return f"{min(int(line.split()[1]) // 2048, _MAX_DRIVER_MEM_MB)}m"
+    return f"{_MAX_DRIVER_MEM_MB}m"
+
+
+def _host_driver_mem() -> str:
+    try:
+        with open("/proc/meminfo") as f:
+            return _driver_mem_for(f.read())
+    except OSError:
+        return _driver_mem_for("")
+
+
 def get_spark(
     app_name: str = "lhbench_spark",
     *,
@@ -83,22 +106,12 @@ def get_spark(
         # reference parity (TPCDSBenchmark.scala:84-87)
         .config("spark.sql.crossJoin.enabled", "true")
         .config("spark.sql.broadcastTimeout", "7200")
-        # Guide §9 join/shuffle knobs, parameterized for A/B runs
-        # (tools/qtime.py with the env flipped) — defaults hold the
-        # values measured best on this suite; see OPTIMIZATION_r11.md §6
-        # for the per-family A/B table and production sizing notes.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "64m"),
-        )
+        # Guide §9 join/shuffle knobs at the values measured best on this
+        # suite; see OPTIMIZATION_r11.md §6 for the per-family A/B table
+        # and production sizing notes.
+        .config("spark.sql.join.preferSortMergeJoin", "true")
+        .config("spark.io.compression.codec", "lz4")
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         # Streaming state stores keep the last N committed versions of
         # every operator partition's map IN MEMORY (default N=100). The
         # drained availableNow pipelines re-run per bench iteration with
@@ -110,7 +123,10 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         # arrow for the few pandas-UDF paths (multimodal / embeddings)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem(),
+        )
         # Kryo for the non-SQL serialization paths (task results,
         # broadcast builds, RDD/localCheckpoint blocks; SQL shuffles use
         # UnsafeRowSerializer regardless). Diagnosed from a thread dump:

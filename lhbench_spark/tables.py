@@ -11,14 +11,14 @@ TPCDSDataLoad.scala:91-129 CTAS + count validation).
 Layout (Iceberg-style, not Hive-style):
 
     <root>/_manifests/v00000.json, v00001.json, …
-    <root>/data/v00000/part-*.parquet, data/v00001/…
+    <root>/data/v00000-<token>/part-*.parquet, data/v00001-<token>/…
 
 - The manifest IS the file listing. Readers never list directories —
   planning is O(manifest), not O(S3 LIST). Data files are immutable;
   a version references any subset of files from any earlier write.
 - Files carry ALL columns (no Hive key=value path encoding), so a
   version's files can be handed to ``spark.read.parquet(*files)``
-  directly. Clustering (``cluster_by``) hash-repartitions + sorts on the
+  directly. Clustering (``cluster_by``) range-partitions + sorts on the
   cluster keys before write, and the manifest records per-file min/max
   stats on the cluster keys PLUS every other stat-able column up to
   ``STATS_MAX_COLS`` (Delta's dataSkippingNumIndexedCols analog) — file
@@ -28,6 +28,16 @@ Layout (Iceberg-style, not Hive-style):
   key are rewritten; untouched files carry over by reference. The
   only driver-side collect is the matched FILE list (metadata-sized,
   same as Delta's own implementation).
+- Every write commits through the same two steps, in the add/remove
+  action model of Delta and Iceberg. ``ManagedTable._stage`` claims a
+  private tokened staging dir (``data/vNNNNN-<token>``), sizes the file
+  count from a row bound, writes the frame and returns its footer-statted
+  ``FileEntry`` list. ``ManagedTable._commit`` builds the next manifest
+  from the files carried by reference plus the staged entries and the
+  operation metrics, and commits it with one atomic put-if-absent. CoW and
+  MoR differ only in the change set they hand over: CoW stages rewritten
+  data files and drops the files it touched, MoR stages delta/tombstone
+  files and carries every existing file.
 - All manifest/metadata IO goes through the :class:`TableFS` seam
   (enumeration happens only in the writer, for the files it just wrote);
   an object-store deployment implements TableFS over the S3/GCS SDK (or
@@ -50,6 +60,7 @@ import shutil
 import threading
 import time
 import uuid
+from collections.abc import Callable
 from dataclasses import asdict, dataclass, field
 
 import pyarrow.parquet as pq
@@ -74,9 +85,7 @@ TOMBSTONE_TARGET_FILE_ROWS = 4 * DEFAULT_TARGET_FILE_ROWS
 # costs more than a small frame is worth); above it — or when no bound
 # is derivable — DISK_ONLY keeps O(rewrite-set) blocks out of executor
 # storage memory (r10 VERDICT #5).
-SPILL_SAFE_CKPT_ROWS = int(
-    os.environ.get("LHBENCH_CKPT_SPILL_ROWS", str(8 * DEFAULT_TARGET_FILE_ROWS))
-)
+SPILL_SAFE_CKPT_ROWS = 8 * DEFAULT_TARGET_FILE_ROWS
 
 
 def _ckpt_level(rows_bound: int | None) -> StorageLevel:
@@ -589,6 +598,15 @@ class ManagedTable:
         if not self.manifests:
             raise FileNotFoundError(f"not a managed table (no manifests): {root}")
 
+    @classmethod
+    def _new(cls, spark: SparkSession, root: str, fs: TableFS) -> "ManagedTable":
+        """Writer handle on a table with no commits yet: ``create`` and
+        ``clone`` stage and commit version 0 through it, then open the
+        table from its manifests like any reader."""
+        t = cls.__new__(cls)
+        t.spark, t.root, t.fs, t.manifests = spark, root, fs, []
+        return t
+
     @property
     def table_mode(self) -> str:
         return self.current.properties.get("table_mode", "cow")
@@ -621,7 +639,7 @@ class ManagedTable:
     ) -> "ManagedTable":
         """CTAS: write ``df`` as version 0.
 
-        ``cluster_by`` hash-repartitions and sorts on the given keys so
+        ``cluster_by`` range-partitions and sorts on the given keys so
         per-file min/max ranges are tight (the sorted-write sink,
         FileCountBenchmark.scala:230-237); ``num_files`` pins the exact
         output file count (the repartition-to-N sink, :177).
@@ -646,6 +664,8 @@ class ManagedTable:
             raise ValueError(f"table_mode must be cow|mor, got {table_mode!r}")
         if table_mode == "mor" and not primary_keys:
             raise ValueError("mor tables require primary_keys (the merge/resolve key)")
+        if cluster_by and zorder_by:
+            raise ValueError("cluster_by and zorder_by are exclusive")
         if checks:
             _enforce_checks(df, checks)
         if table_mode == "mor":
@@ -655,7 +675,6 @@ class ManagedTable:
                 fs.rmtree(root)
             else:
                 raise FileExistsError(root)
-        data_dir = os.path.join(root, "data", "v00000")
         # Load validation WITHOUT a second full source pass: an
         # Observation counts the rows flowing into the write job itself
         # (guide §1.2 — one pass where one pass suffices; the old
@@ -693,23 +712,15 @@ class ManagedTable:
                         else None
                     )
                 )
-        if zorder_by:
-            if cluster_by:
-                raise ValueError("cluster_by and zorder_by are exclusive")
-            shaped = _zorder_shaped(df, zorder_by, num_files)
-            stat_cols = list(zorder_by)
-        else:
-            shaped = _shape_for_write(df, cluster_by, num_files)
-            stat_cols = list(cluster_by)
-        shaped.write.parquet(data_dir)
-        entries = _file_entries(root, data_dir, stat_cols, fs)
-        manifest = Manifest(
-            version=0,
-            operation="CREATE",
-            timestamp_ms=int(time.time() * 1000),
-            files=entries,
-            cluster_by=stat_cols,
-            metrics={"num_output_rows": sum(e.rows for e in entries)},
+        writer = cls._new(spark, root, fs)
+        entries = writer._stage(
+            None, df, num_files=num_files, cluster_by=cluster_by,
+            zorder_by=zorder_by,
+        )
+        writer._commit(
+            None, "CREATE", [], entries,
+            {"num_output_rows": sum(e.rows for e in entries)},
+            cluster_by=list(zorder_by or cluster_by),
             properties={
                 "table_mode": table_mode,
                 "primary_keys": list(primary_keys),
@@ -720,14 +731,13 @@ class ManagedTable:
                 "schema": df.schema.json(),
             },
         )
-        _write_manifest(root, manifest, fs)
         table = cls(spark, root, fs)
         if obs is not None:
             src_rows = int(obs.get["rows"])
-            if src_rows != manifest.num_rows:
+            if src_rows != table.current.num_rows:
                 raise AssertionError(
                     f"load validation failed: source={src_rows} "
-                    f"target={manifest.num_rows} ({root})"
+                    f"target={table.current.num_rows} ({root})"
                 )
         return table
 
@@ -792,6 +802,100 @@ class ManagedTable:
                 "(another writer is ahead — reload and retry)"
             )
         return d
+
+    # ---------- the commit path: every write is _stage* then _commit ----------
+
+    def _stage(
+        self,
+        prev: Manifest | None,
+        df: DataFrame,
+        kind: str = "data",
+        rows: int | None = None,
+        per_file: int | None = None,
+        num_files: int | None = None,
+        cluster_by: tuple[str, ...] | list[str] | None = None,
+        zorder_by: tuple[str, str] | None = None,
+    ) -> list[FileEntry]:
+        """Write ``df`` as files of the commit after ``prev`` (None = the
+        version-0 load) and return their ``FileEntry`` list of ``kind``.
+
+        The files land in a freshly claimed tokened staging dir
+        (``_claim_data_dir``). The file count is ``num_files`` when the
+        caller pins it, else derived from the ``rows`` upper bound at
+        ``per_file`` rows a file (default ``TOMBSTONE_TARGET_FILE_ROWS``
+        for pk-only tombstones, ``DEFAULT_TARGET_FILE_ROWS`` otherwise).
+        Data and delta files are range-clustered and statted first on
+        ``cluster_by`` (default: ``prev``'s keys) via ``_shape_for_write``;
+        tombstones are never clustered; ``zorder_by`` writes the
+        Z-ordered layout instead (``_zorder_shaped``). Footer stats are
+        read back by ``_file_entries``."""
+        data_dir = self._claim_data_dir(0 if prev is None else prev.version + 1)
+        if zorder_by:
+            keys = list(zorder_by)
+            shaped = _zorder_shaped(df, zorder_by, num_files)
+        else:
+            if kind == "tombstone":
+                keys = []
+            else:
+                keys = list(prev.cluster_by if cluster_by is None else cluster_by)
+            if num_files is None and rows is not None:
+                if per_file is None:
+                    per_file = (
+                        TOMBSTONE_TARGET_FILE_ROWS
+                        if kind == "tombstone"
+                        else DEFAULT_TARGET_FILE_ROWS
+                    )
+                num_files = max(1, math.ceil(rows / per_file))
+            shaped = _shape_for_write(df, tuple(keys), num_files)
+        shaped.write.parquet(data_dir)
+        return _file_entries(self.root, data_dir, keys, self.fs, kind)
+
+    def _commit(
+        self,
+        prev: Manifest | None,
+        operation: str,
+        carried: list[FileEntry],
+        added: list[FileEntry],
+        metrics: dict[str, int],
+        cluster_by: list[str] | None = None,
+        properties: dict | None = None,
+    ) -> dict[str, int]:
+        """Commit the version after ``prev`` (None = version 0): the
+        ``carried`` files by reference plus the ``added`` ones, with the
+        operation's ``metrics``; cluster keys and table properties carry
+        over from ``prev`` unless overridden. One atomic put-if-absent
+        (``_write_manifest``): a writer that lost the version race gets
+        ``ConcurrentWriteError`` and the in-memory log is left as it
+        was; on success the manifest is appended to it. Returns
+        ``metrics``."""
+        manifest = Manifest(
+            version=0 if prev is None else prev.version + 1,
+            operation=operation,
+            timestamp_ms=int(time.time() * 1000),
+            files=[*carried, *added],
+            cluster_by=list(prev.cluster_by if cluster_by is None else cluster_by),
+            metrics=metrics,
+            properties=prev.properties if properties is None else properties,
+        )
+        _write_manifest(self.root, manifest, self.fs)
+        self.manifests.append(manifest)
+        return metrics
+
+    def _split_touched(
+        self, files: list[FileEntry], hits: DataFrame
+    ) -> tuple[list[FileEntry], list[FileEntry]]:
+        """(carried, rewritten): split ``files`` by whether any row of
+        ``hits`` — a probe carrying the ``_file`` column — came from them.
+        The only driver-side collect is the distinct touched path list
+        (metadata-sized, same as Delta's own implementation)."""
+        touched = {
+            _strip_uri(r["_file"])
+            for r in hits.select("_file").distinct().collect()
+        }
+        return (
+            [e for e in files if self._abs(e) not in touched],
+            [e for e in files if self._abs(e) in touched],
+        )
 
     def read(self, version: int | None = None, prune: dict | None = None) -> DataFrame:
         """Scan a table version. ``prune={col: value}`` drops files whose
@@ -1066,6 +1170,11 @@ class ManagedTable:
             )
         if self.checks:
             _enforce_checks(source, self.checks)
+        if self.table_mode == "mor" and list(on) != self.primary_keys:
+            raise ValueError(
+                f"mor merge key {on} must equal the declared primary key "
+                f"{self.primary_keys}"
+            )
         if when_not_matched_by_source:
             if self.table_mode == "mor":
                 return self._merge_mor_full_sync(
@@ -1085,127 +1194,97 @@ class ManagedTable:
         # rows" proxy of guide §8; the payload-bearing source itself is
         # never checkpointed.
         skeys = source.select(*on).dropDuplicates().localCheckpoint()
-
-        # Candidate pruning BEFORE the touch probe — the range stage of
-        # Hudi's bloom index: a file whose manifest [min,max] range on
-        # the first merge key contains NO source key cannot hold a
-        # match, so it is excluded from the probe scan entirely. The
-        # check is one pass over the SOURCE keys against a
-        # metadata-sized broadcast of file ranges — at 100 TB a 1%-keys
-        # merge probes ~1% of the files instead of scanning the whole
-        # table to discover that 99% of it matched nothing. Exactness:
-        # stats are true ranges, so every file holding a source key IS a
-        # candidate — which also makes the insert anti-join below exact
-        # when restricted to candidate files (a key absent from every
-        # candidate is absent from the table). Files without a usable
-        # range stay candidates (never a false skip).
-        candidates = self._maybe_prune_candidates(m.files, skeys, on[0])
-        # _read_conformed keeps the FULL current schema even when no
-        # candidate file carries an evolved column — the insert path
-        # selects target.columns, which must never drop one.
-        target = (
-            self._read_conformed(candidates) if candidates else target.limit(0)
-        )
-
-        # No forced broadcast on the source key set: the reference's
-        # refresh merges touch ~3% of the base table per round
-        # (experiment-instructions.md:277-296) — billions of keys at
-        # 100 TB, far beyond broadcast. AQE converts the semi-join to a
-        # broadcast automatically when the source is actually small.
-        touched_rows = (
-            target.withColumn("_file", F.input_file_name())
-            .join(skeys, on, "left_semi")
-            .select("_file")
-            .distinct()
-            .collect()
-        )
-        touched = {_strip_uri(r["_file"]) for r in touched_rows}
-        untouched = [e for e in m.files if self._abs(e) not in touched]
-        rewritten = [e for e in m.files if self._abs(e) in touched]
-        rewritten_rows = sum(e.rows for e in rewritten)
-
         if when_matched == "delete":
             # WHEN MATCHED DELETE: drop matched rows from the touched
             # files; insert only the source rows that matched NOTHING
-            # (one anti-join against the target's pruned key columns).
-            inserts = source.select(*target.columns).join(
-                target.select(*on), on, "left_anti"
-            )
-            inserted_rows = _count_job(inserts)
-            if rewritten:
-                touched_df = self._read_conformed(rewritten)
-                kept = touched_df.select(*target.columns).join(
-                    skeys, on, "left_anti"
+            # (one anti-join against the probe's pruned key columns).
+            def incoming(probe: DataFrame) -> tuple[DataFrame, int]:
+                inserts = source.select(*probe.columns).join(
+                    probe.select(*on), on, "left_anti"
                 )
-                new_data = kept.unionByName(inserts)
-            else:
-                new_data = inserts
-            source_rows = inserted_rows  # sizing: only inserts land
+                return inserts, _count_job(inserts)
         else:
-            # Source count (reused from the fused dup-check pass when it
-            # ran); matched/inserted are derived from parquet footer row
-            # counts after the write:
-            #   new_rows = (rewritten_rows - matched) + source_rows
-            #   matched  = rewritten_rows + source_rows - new_rows
-            # (exact given unique keys on both sides — validated above).
-            if source_rows is None:
-                source_rows = _count_job(source)
-            if rewritten:
-                touched_df = self._read_conformed(rewritten)
-                kept = touched_df.select(*target.columns).join(skeys, on, "left_anti")
-                new_data = kept.unionByName(source.select(*target.columns))
-            else:
-                new_data = source.select(*target.columns)
+            # Every source row lands; the count is reused from the fused
+            # dup-check pass when it ran.
+            def incoming(probe: DataFrame) -> tuple[DataFrame, int]:
+                n = source_rows if source_rows is not None else _count_job(source)
+                return source.select(*probe.columns), n
 
-        version = m.version + 1
-        data_dir = self._claim_data_dir(version)
-        n_files = max(
-            1, math.ceil((rewritten_rows + source_rows) / DEFAULT_TARGET_FILE_ROWS)
+        carried, rewritten, added, n_in = self._rewrite_keys(
+            m, target, on, skeys, incoming
         )
+        # Footer math, exact given unique keys on both sides (validated
+        # above): new_rows = (rewritten_rows - matched) + incoming rows.
+        matched = (
+            sum(e.rows for e in rewritten) + n_in - sum(e.rows for e in added)
+        )
+        if when_matched == "delete":
+            metrics = {"matched_deleted": matched, "inserted": n_in}
+        else:
+            metrics = {"matched_updated": matched, "inserted": n_in - matched}
+        metrics.update(files_rewritten=len(rewritten), files_added=len(added))
+        return self._commit(m, "MERGE", carried, added, metrics)
+
+    def _rewrite_keys(
+        self,
+        m: Manifest,
+        target: DataFrame,
+        keys: list[str],
+        skeys: DataFrame,
+        incoming: Callable[[DataFrame], tuple[DataFrame, int]],
+    ) -> tuple[list[FileEntry], list[FileEntry], list[FileEntry], int]:
+        """CoW key rewrite — the change set of merge (update and matched
+        delete) and apply_changes. Touch probe: the candidate files that
+        hold a key of ``skeys``; kept rows: the touched files anti-joined
+        on those keys; ``incoming(probe)`` gives the rows that land in
+        their place and their count; kept ∪ incoming is staged as data
+        files sized by the rewrite-set row bound. Returns (carried,
+        rewritten, added, incoming row count) for the caller's commit.
+
+        Candidate pruning runs BEFORE the touch probe — the range stage
+        of Hudi's bloom index: a file whose manifest [min,max] range on
+        the first key contains NO incoming key cannot hold a match, so
+        it is excluded from the probe scan entirely (at 100 TB a
+        1%-keys merge probes ~1% of the files). Stats are true ranges,
+        so every file holding an incoming key IS a candidate — which
+        also makes an insert anti-join against the probe exact (a key
+        absent from every candidate is absent from the table)."""
+        keys = list(keys)
+        candidates = self._maybe_prune_candidates(m.files, skeys, keys[0])
+        # _read_conformed keeps the FULL current schema even when no
+        # candidate file carries an evolved column — the insert path
+        # selects probe.columns, which must never drop one.
+        probe = self._read_conformed(candidates) if candidates else target.limit(0)
+        # No forced broadcast on the key set: the reference's refresh
+        # merges touch ~3% of the base table per round
+        # (experiment-instructions.md:277-296) — billions of keys at
+        # 100 TB, far beyond broadcast. AQE converts the semi-join to a
+        # broadcast automatically when the source is actually small.
+        carried, rewritten = self._split_touched(
+            m.files,
+            probe.withColumn("_file", F.input_file_name()).join(
+                skeys, keys, "left_semi"
+            ),
+        )
+        new_data, n_in = incoming(probe)
+        if rewritten:
+            kept = (
+                self._read_conformed(rewritten)
+                .select(*probe.columns)
+                .join(skeys, keys, "left_anti")
+            )
+            new_data = kept.unionByName(new_data)
+        bound = sum(e.rows for e in rewritten) + n_in
         if m.cluster_by:
             # Clustered commit: the range write would evaluate the
-            # kept∪source lineage (touched-file reads + anti-join)
+            # kept ∪ incoming lineage (touched-file reads + anti-join)
             # twice — sampling pass + shuffle. Materialize once. The
             # storage level follows the known rewrite-set row bound
             # (_ckpt_level): a 100 TB rewrite set must not pin executor
             # storage memory (r10 VERDICT #5), a bench-scale one keeps
             # the cheap deserialized blocks.
-            new_data = new_data.localCheckpoint(
-                storageLevel=_ckpt_level(rewritten_rows + source_rows)
-            )
-        shaped = _shape_for_write(new_data, tuple(m.cluster_by), n_files)
-        shaped.write.parquet(data_dir)
-        new_entries = _file_entries(self.root, data_dir, m.cluster_by, self.fs)
-        new_rows = sum(e.rows for e in new_entries)
-        if when_matched == "delete":
-            # new_rows = kept + inserted; kept = rewritten - deleted
-            inserted = source_rows
-            metrics = {
-                "matched_deleted": rewritten_rows + inserted - new_rows,
-                "inserted": inserted,
-                "files_rewritten": len(rewritten),
-                "files_added": len(new_entries),
-            }
-        else:
-            matched = rewritten_rows + source_rows - new_rows
-            metrics = {
-                "matched_updated": matched,
-                "inserted": source_rows - matched,
-                "files_rewritten": len(rewritten),
-                "files_added": len(new_entries),
-            }
-        manifest = Manifest(
-            version=version,
-            operation="MERGE",
-            timestamp_ms=int(time.time() * 1000),
-            files=untouched + new_entries,
-            cluster_by=m.cluster_by,
-            metrics=metrics,
-            properties=m.properties,
-        )
-        _write_manifest(self.root, manifest, self.fs)
-        self.manifests.append(manifest)
-        return manifest.metrics
+            new_data = new_data.localCheckpoint(storageLevel=_ckpt_level(bound))
+        return carried, rewritten, self._stage(m, new_data, rows=bound), n_in
 
     def _maybe_prune_candidates(
         self, files: list[FileEntry], skeys: DataFrame, key: str
@@ -1291,11 +1370,6 @@ class ManagedTable:
         1.3-1.4x faster than CoW, README.md:33-36). One metadata-sized
         counting job derives the matched count for history parity with
         the CoW path."""
-        pk = self.primary_keys
-        if list(on) != pk:
-            raise ValueError(
-                f"mor merge key {on} must equal the declared primary key {pk}"
-            )
         # ONE evaluation of the source projection: on clustered tables
         # the range write alone evaluates it twice (sampling + shuffle),
         # and the matched-count semi join would add a third — lazy
@@ -1318,32 +1392,15 @@ class ManagedTable:
             matched = target.join(skeys, on, "left_semi").count()
         else:
             matched = -1
-        version = m.version + 1
-        data_dir = self._claim_data_dir(version)
         if source_rows is None:
             source_rows = _count_job(src)
-        n_files = max(1, math.ceil(source_rows / DEFAULT_TARGET_FILE_ROWS))
-        _shape_for_write(src, tuple(m.cluster_by), n_files).write.parquet(data_dir)
-        new_entries = _file_entries(
-            self.root, data_dir, m.cluster_by, self.fs, kind="delta"
-        )
-        manifest = Manifest(
-            version=version,
-            operation="MERGE",
-            timestamp_ms=int(time.time() * 1000),
-            files=m.files + new_entries,
-            cluster_by=m.cluster_by,
-            metrics={
-                "matched_updated": matched,
-                "inserted": source_rows - matched if matched >= 0 else -1,
-                "files_rewritten": 0,
-                "files_added": len(new_entries),
-            },
-            properties=m.properties,
-        )
-        _write_manifest(self.root, manifest, self.fs)
-        self.manifests.append(manifest)
-        return manifest.metrics
+        added = self._stage(m, src, "delta", rows=source_rows)
+        return self._commit(m, "MERGE", m.files, added, {
+            "matched_updated": matched,
+            "inserted": source_rows - matched if matched >= 0 else -1,
+            "files_rewritten": 0,
+            "files_added": len(added),
+        })
 
     def _merge_mor_delete(
         self,
@@ -1366,11 +1423,6 @@ class ManagedTable:
         on a multi-version layout, latest-per-key-resolves — the table
         ONCE (r10 VERDICT #3). Both writes are sized by the source row count
         (matched ∪ inserted ⊆ source), not pinned to one partition."""
-        pk = self.primary_keys
-        if list(on) != pk:
-            raise ValueError(
-                f"mor merge key {on} must equal the declared primary key {pk}"
-            )
         tkeys = target.select(*on).localCheckpoint(
             eager=False, storageLevel=_ckpt_level(sum(e.rows for e in m.files))
         )
@@ -1379,41 +1431,21 @@ class ManagedTable:
         inserts = source.select(*target.columns).join(tkeys, on, "left_anti")
         if source_rows is None:
             source_rows = _count_job(source)
-        version = m.version + 1
-        ts_dir = self._claim_data_dir(version)
-        n_ts = max(1, math.ceil(source_rows / TOMBSTONE_TARGET_FILE_ROWS))
-        matched_keys.repartition(n_ts).write.parquet(ts_dir)
-        ts_entries = _file_entries(self.root, ts_dir, [], self.fs, kind="tombstone")
-        rows_dir = self._claim_data_dir(version)
-        n_rows = max(1, math.ceil(source_rows / DEFAULT_TARGET_FILE_ROWS))
-        _shape_for_write(inserts, tuple(m.cluster_by), n_rows).write.parquet(rows_dir)
-        row_entries = _file_entries(
-            self.root, rows_dir, m.cluster_by, self.fs, kind="delta"
-        )
+        ts_entries = self._stage(m, matched_keys, "tombstone", rows=source_rows)
+        row_entries = self._stage(m, inserts, "delta", rows=source_rows)
         deleted = sum(e.rows for e in ts_entries)
         inserted = sum(e.rows for e in row_entries)
         # drop an all-empty side from the commit (its staged file is
         # orphan garbage, same class as a losing racer's)
-        new_entries = ([] if deleted == 0 else ts_entries) + (
+        added = ([] if deleted == 0 else ts_entries) + (
             [] if inserted == 0 else row_entries
         )
-        manifest = Manifest(
-            version=version,
-            operation="MERGE",
-            timestamp_ms=int(time.time() * 1000),
-            files=m.files + new_entries,
-            cluster_by=m.cluster_by,
-            metrics={
-                "matched_deleted": deleted,
-                "inserted": inserted,
-                "files_rewritten": 0,
-                "files_added": len(new_entries),
-            },
-            properties=m.properties,
-        )
-        _write_manifest(self.root, manifest, self.fs)
-        self.manifests.append(manifest)
-        return manifest.metrics
+        return self._commit(m, "MERGE", m.files, added, {
+            "matched_deleted": deleted,
+            "inserted": inserted,
+            "files_rewritten": 0,
+            "files_added": len(added),
+        })
 
     def _merge_full_sync_cow(
         self,
@@ -1438,16 +1470,12 @@ class ManagedTable:
         # materialization instead of repeated source scans (see merge()).
         skeys = source.select(*on).dropDuplicates().localCheckpoint()
         target_f = target.withColumn("_file", F.input_file_name())
-        touched_rows = (
+        carried, rewritten = self._split_touched(
+            m.files,
             target_f.join(skeys, on, "left_semi")
             .select("_file")
-            .union(target_f.filter(in_scope).select("_file"))
-            .distinct()
-            .collect()
+            .union(target_f.filter(in_scope).select("_file")),
         )
-        touched = {_strip_uri(r["_file"]) for r in touched_rows}
-        untouched = [e for e in m.files if self._abs(e) not in touched]
-        rewritten = [e for e in m.files if self._abs(e) in touched]
         rewritten_rows = sum(e.rows for e in rewritten)
         if source_rows is None:
             source_rows = _count_job(source)
@@ -1483,44 +1511,21 @@ class ManagedTable:
         else:
             matched = 0
             new_data = source.select(*target.columns)
-        version = m.version + 1
-        data_dir = self._claim_data_dir(version)
-        n_files = max(
-            1, math.ceil((rewritten_rows + source_rows) / DEFAULT_TARGET_FILE_ROWS)
-        )
+        bound = rewritten_rows + source_rows
         if m.cluster_by:
             # same single-evaluation rationale (and storage-level rule)
-            # as merge(): the range write's sampling pass would otherwise
-            # re-evaluate kept ∪ source.
-            new_data = new_data.localCheckpoint(
-                storageLevel=_ckpt_level(rewritten_rows + source_rows)
-            )
-        _shape_for_write(new_data, tuple(m.cluster_by), n_files).write.parquet(
-            data_dir
-        )
-        new_entries = _file_entries(self.root, data_dir, m.cluster_by, self.fs)
-        new_rows = sum(e.rows for e in new_entries)
-        kept_rows = new_rows - source_rows
-        manifest = Manifest(
-            version=version,
-            operation="MERGE",
-            timestamp_ms=int(time.time() * 1000),
-            files=untouched + new_entries,
-            cluster_by=m.cluster_by,
-            metrics={
-                "matched_updated": matched,
-                "inserted": source_rows - matched,
-                "deleted_not_matched_by_source": rewritten_rows
-                - kept_rows
-                - matched,
-                "files_rewritten": len(rewritten),
-                "files_added": len(new_entries),
-            },
-            properties=m.properties,
-        )
-        _write_manifest(self.root, manifest, self.fs)
-        self.manifests.append(manifest)
-        return manifest.metrics
+            # as _rewrite_keys: the range write's sampling pass would
+            # otherwise re-evaluate kept ∪ source.
+            new_data = new_data.localCheckpoint(storageLevel=_ckpt_level(bound))
+        added = self._stage(m, new_data, rows=bound)
+        kept_rows = sum(e.rows for e in added) - source_rows
+        return self._commit(m, "MERGE", carried, added, {
+            "matched_updated": matched,
+            "inserted": source_rows - matched,
+            "deleted_not_matched_by_source": rewritten_rows - kept_rows - matched,
+            "files_rewritten": len(rewritten),
+            "files_added": len(added),
+        })
 
     def _merge_mor_full_sync(
         self,
@@ -1536,11 +1541,6 @@ class ManagedTable:
         not name, plus the whole source as a delta (matched keys
         supersede at read time, fresh keys insert) — zero rewrites,
         write cost O(source + dead keys)."""
-        pk = self.primary_keys
-        if list(on) != pk:
-            raise ValueError(
-                f"mor merge key {on} must equal the declared primary key {pk}"
-            )
         scope = F.expr(source_scope) if source_scope else F.lit(True)
         # ONE pass over source and target each (r10 VERDICT #3; the r10
         # shape read the target twice — dead-keys anti + matched semi —
@@ -1580,39 +1580,19 @@ class ManagedTable:
         dead_keys = flagged.filter(
             F.col("_in_scope") & F.col("_m").isNull()
         ).select(*on)
-        version = m.version + 1
-        ts_dir = self._claim_data_dir(version)
-        n_ts = max(1, math.ceil(dead_rows / TOMBSTONE_TARGET_FILE_ROWS))
-        dead_keys.repartition(n_ts).write.parquet(ts_dir)
-        ts_entries = _file_entries(self.root, ts_dir, [], self.fs, kind="tombstone")
-        rows_dir = self._claim_data_dir(version)
+        ts_entries = self._stage(m, dead_keys, "tombstone", rows=dead_rows)
         if source_rows is None:
             source_rows = _count_job(src)
-        n_files = max(1, math.ceil(source_rows / DEFAULT_TARGET_FILE_ROWS))
-        _shape_for_write(src, tuple(m.cluster_by), n_files).write.parquet(rows_dir)
-        row_entries = _file_entries(
-            self.root, rows_dir, m.cluster_by, self.fs, kind="delta"
-        )
+        row_entries = self._stage(m, src, "delta", rows=source_rows)
         deleted = sum(e.rows for e in ts_entries)
-        new_entries = ([] if deleted == 0 else ts_entries) + row_entries
-        manifest = Manifest(
-            version=version,
-            operation="MERGE",
-            timestamp_ms=int(time.time() * 1000),
-            files=m.files + new_entries,
-            cluster_by=m.cluster_by,
-            metrics={
-                "matched_updated": matched,
-                "inserted": source_rows - matched,
-                "deleted_not_matched_by_source": deleted,
-                "files_rewritten": 0,
-                "files_added": len(new_entries),
-            },
-            properties=m.properties,
-        )
-        _write_manifest(self.root, manifest, self.fs)
-        self.manifests.append(manifest)
-        return manifest.metrics
+        added = ([] if deleted == 0 else ts_entries) + row_entries
+        return self._commit(m, "MERGE", m.files, added, {
+            "matched_updated": matched,
+            "inserted": source_rows - matched,
+            "deleted_not_matched_by_source": deleted,
+            "files_rewritten": 0,
+            "files_added": len(added),
+        })
 
     # ---------- APPEND (writer append mode + schema evolution) ----------
 
@@ -1653,11 +1633,19 @@ class ManagedTable:
         if (txn_app_id is None) != (txn_version is None):
             raise ValueError("txn_app_id and txn_version must be passed together")
         m = self.current
-        if txn_app_id is not None:
+        txn_noop = {"rows_appended": 0, "files_added": 0, "skipped_txn": 1}
+
+        def _txn_committed() -> bool:
+            """Has version ``m`` already recorded this txn — a replayed
+            batch, or a racing writer of the same app id that landed it
+            first? Then the append is an exactly-once no-op."""
+            if txn_app_id is None:
+                return False
             last = m.properties.get("txns", {}).get(txn_app_id)
-            if last is not None and txn_version <= last:
-                # Replayed batch: already committed — exactly-once no-op.
-                return {"rows_appended": 0, "files_added": 0, "skipped_txn": 1}
+            return last is not None and txn_version <= last
+
+        if _txn_committed():
+            return txn_noop
         if self.checks:
             _enforce_checks(df, self.checks)
         if self.table_mode == "mor":
@@ -1682,39 +1670,27 @@ class ManagedTable:
             cur_types = {f.name: f.dataType for f in table_schema.fields}
             for c in missing:
                 df = df.withColumn(c, F.lit(None).cast(cur_types[c]))
-        def _skipped_after_rebase() -> bool:
-            """After a reload, did another writer of the same app id land
-            this txn first? (Then our append is already in — no-op.)"""
-            if txn_app_id is None:
-                return False
-            last = m.properties.get("txns", {}).get(txn_app_id)
-            return last is not None and txn_version <= last
-
-        _TXN_NOOP = {"rows_appended": 0, "files_added": 0, "skipped_txn": 1}
-        version = m.version + 1
-        # Claim a staging dir, rebasing past writers that got ahead since
-        # this handle loaded (the eager writer-is-behind check would
-        # otherwise surface a conflict a blind append need not have).
+        # Stage, rebasing past writers that got ahead since this handle
+        # loaded (the eager writer-is-behind check in _claim_data_dir
+        # would otherwise surface a conflict a blind append need not
+        # have).
         for _ in range(20):
             try:
-                data_dir = self._claim_data_dir(version)
+                added = self._stage(m, df, num_files=num_files)
                 break
             except ConcurrentWriteError:
                 self.manifests = _load_manifests(self.root, self.fs)
                 m = self.current
-                if _skipped_after_rebase():
-                    return dict(_TXN_NOOP)
-                version = m.version + 1
+                if _txn_committed():
+                    return txn_noop
         else:
             raise ConcurrentWriteError(
                 f"append could not claim a staging dir in {self.root} "
                 "after 20 rebases — pathological contention"
             )
-        _shape_for_write(df, tuple(m.cluster_by), num_files).write.parquet(data_dir)
-        new_entries = _file_entries(self.root, data_dir, m.cluster_by, self.fs)
         metrics = {
-            "rows_appended": sum(e.rows for e in new_entries),
-            "files_added": len(new_entries),
+            "rows_appended": sum(e.rows for e in added),
+            "files_added": len(added),
             "columns_added": len(extra),
         }
         # Commit with automatic REBASE on a concurrent winner — the
@@ -1730,48 +1706,36 @@ class ManagedTable:
         # re-derive (ConcurrentWriteError, Delta's ConcurrentModification
         # class). Bounded retries guard against livelock.
         for _ in range(20):
+            if _txn_committed():
+                # Our staged files become orphans (vacuum-class
+                # garbage); the batch is already in.
+                return txn_noop
+            props = m.properties
+            if txn_app_id is not None:
+                props = dict(props)
+                props["txns"] = {
+                    **props.get("txns", {}),
+                    txn_app_id: int(txn_version),
+                }
+            if extra and props.get("schema"):
+                # Additive evolution: extend the recorded table
+                # schema with the new columns (df order), so future
+                # reads get the union without a mergeSchema pass.
+                base_st = StructType.fromJson(json.loads(props["schema"]))
+                have = {f.name for f in base_st.fields}
+                new_fields = list(base_st.fields) + [
+                    f for f in df.schema.fields if f.name not in have
+                ]
+                props = dict(props)
+                props["schema"] = StructType(new_fields).json()
             try:
-                if _skipped_after_rebase():
-                    # A racing writer of the SAME app id committed this
-                    # batch first: our staged files become orphans
-                    # (vacuum-class garbage), the batch is already in.
-                    return dict(_TXN_NOOP)
-                props = m.properties
-                if txn_app_id is not None:
-                    props = dict(props)
-                    props["txns"] = {
-                        **props.get("txns", {}),
-                        txn_app_id: int(txn_version),
-                    }
-                if extra and props.get("schema"):
-                    # Additive evolution: extend the recorded table
-                    # schema with the new columns (df order), so future
-                    # reads get the union without a mergeSchema pass.
-                    base_st = StructType.fromJson(json.loads(props["schema"]))
-                    have = {f.name for f in base_st.fields}
-                    new_fields = list(base_st.fields) + [
-                        f for f in df.schema.fields if f.name not in have
-                    ]
-                    props = dict(props)
-                    props["schema"] = StructType(new_fields).json()
-                manifest = Manifest(
-                    version=version,
-                    operation="APPEND",
-                    timestamp_ms=int(time.time() * 1000),
-                    files=m.files + new_entries,
-                    cluster_by=m.cluster_by,
-                    metrics=metrics,
-                    properties=props,
+                return self._commit(
+                    m, "APPEND", m.files, added, metrics, properties=props
                 )
-                _write_manifest(self.root, manifest, self.fs)
             except ConcurrentWriteError:
                 self.manifests = _load_manifests(self.root, self.fs)
                 self.manifests.sort(key=lambda mm: mm.version)
                 m = self.current
-                version = m.version + 1
-                continue
-            self.manifests.append(manifest)
-            return metrics
         raise ConcurrentWriteError(
             f"append lost the commit race 20 times in {self.root} — "
             "pathological contention, reload and retry"
@@ -1795,57 +1759,29 @@ class ManagedTable:
                 df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
         return df
 
-    def _touched_files(self, cond, cond_str: str | None = None) -> set[str]:
-        """Files containing at least one row where ``cond`` is TRUE.
+    def _split_by_predicate(
+        self, condition: str
+    ) -> tuple[list[FileEntry], list[FileEntry]]:
+        """(carried, rewritten) for a CoW DELETE/UPDATE: rewritten are
+        the files holding at least one row where ``condition`` is TRUE.
 
-        With ``cond_str``, the probe is restricted to files whose
-        manifest stats say the predicate MAY hold (``_StatsPredicate``,
-        the Delta data-skipping evaluation): a ``DELETE WHERE date <
-        cutoff`` on a time-ordered table probes only the old slices,
-        not the whole table. Files the evaluator rules out contain no
-        TRUE row by construction (true ranges, tri-state logic), so the
-        touch set is exact."""
+        The probe reads only files whose manifest stats say the
+        predicate MAY hold (``_StatsPredicate``, the Delta data-skipping
+        evaluation): a ``DELETE WHERE date < cutoff`` on a time-ordered
+        table probes only the old slices, not the whole table. Files the
+        evaluator rules out contain no TRUE row by construction (true
+        ranges, tri-state logic), so the split is exact."""
         files = self.current.files
-        if cond_str is not None:
-            pred = _StatsPredicate(self.spark, cond_str)
-            files = [e for e in files if pred.may_match(e.stats)]
-            if not files:
-                return set()
-        rows = (
-            self._read_conformed(files)
+        pred = _StatsPredicate(self.spark, condition)
+        probe = [e for e in files if pred.may_match(e.stats)]
+        if not probe:
+            return files, []
+        return self._split_touched(
+            files,
+            self._read_conformed(probe)
             .withColumn("_file", F.input_file_name())
-            .filter(cond)
-            .select("_file")
-            .distinct()
-            .collect()
+            .filter(F.expr(condition)),
         )
-        return {_strip_uri(r["_file"]) for r in rows}
-
-    def _commit_rewrite(
-        self, operation: str, untouched, new_data, est_rows: int, metrics_fn
-    ) -> dict[str, int]:
-        """Write ``new_data``, then commit untouched + new files as the
-        next version. ``metrics_fn(new_entries)`` builds the manifest
-        metrics once the footer row counts of the new files are known."""
-        m = self.current
-        version = m.version + 1
-        data_dir = self._claim_data_dir(version)
-        n_files = max(1, math.ceil(est_rows / DEFAULT_TARGET_FILE_ROWS))
-        _shape_for_write(new_data, tuple(m.cluster_by), n_files).write.parquet(data_dir)
-        new_entries = _file_entries(self.root, data_dir, m.cluster_by, self.fs)
-        metrics = dict(metrics_fn(new_entries), files_added=len(new_entries))
-        manifest = Manifest(
-            version=version,
-            operation=operation,
-            timestamp_ms=int(time.time() * 1000),
-            files=untouched + new_entries,
-            cluster_by=m.cluster_by,
-            metrics=metrics,
-            properties=m.properties,
-        )
-        _write_manifest(self.root, manifest, self.fs)
-        self.manifests.append(manifest)
-        return metrics
 
     def delete(self, condition: str) -> dict[str, int]:
         """DELETE WHERE (Delta `DELETE FROM t WHERE ...` analog): rewrite
@@ -1863,28 +1799,25 @@ class ManagedTable:
             return self._delete_mor(condition)
         self._fold_deltas_if_any()
         m = self.current
-        cond = F.expr(condition)
-        touched = self._touched_files(cond, cond_str=condition)
-        untouched = [e for e in m.files if self._abs(e) not in touched]
-        rewritten = [e for e in m.files if self._abs(e) in touched]
+        carried, rewritten = self._split_by_predicate(condition)
         if not rewritten:
             return {"rows_deleted": 0, "files_rewritten": 0, "files_added": 0}
         rewritten_rows = sum(e.rows for e in rewritten)
-        touched_df = self._read_conformed(rewritten)
-        kept = touched_df.filter(~F.coalesce(cond, F.lit(False)))
+        kept = self._read_conformed(rewritten).filter(
+            ~F.coalesce(F.expr(condition), F.lit(False))
+        )
         if m.cluster_by:
             # A range-clustered commit write evaluates its input twice
             # (partition-boundary sampling + the shuffle); materialize
             # the kept rows once instead. Storage level from the
             # rewrite-set row bound (r10 VERDICT #5).
             kept = kept.localCheckpoint(storageLevel=_ckpt_level(rewritten_rows))
-        return self._commit_rewrite(
-            "DELETE", untouched, kept, rewritten_rows,
-            lambda new_entries: {
-                "rows_deleted": rewritten_rows - sum(e.rows for e in new_entries),
-                "files_rewritten": len(rewritten),
-            },
-        )
+        added = self._stage(m, kept, rows=rewritten_rows)
+        return self._commit(m, "DELETE", carried, added, {
+            "rows_deleted": rewritten_rows - sum(e.rows for e in added),
+            "files_rewritten": len(rewritten),
+            "files_added": len(added),
+        })
 
     def _delete_mor(self, condition: str) -> dict[str, int]:
         """MoR DELETE WHERE via a deletion-vector commit: the matching
@@ -1906,8 +1839,6 @@ class ManagedTable:
         # (sound on MoR: only resolve LOSERS can be pruned; deltas and
         # tombstones always participate).
         keys = self.scan(condition).select(*pk)
-        version = m.version + 1
-        ts_dir = self._claim_data_dir(version)
         # Tombstone write sizing (r10 VERDICT #4): when the manifest row
         # bound proves the keys fit one file, write the single file
         # directly (no sizing job — every small/bench-scale delete);
@@ -1915,39 +1846,23 @@ class ManagedTable:
         # the write by the EXACT key count, so write parallelism scales
         # with the deletion vector instead of serializing through one
         # straggler partition.
-        row_bound = sum(e.rows for e in m.files)
-        if row_bound <= TOMBSTONE_TARGET_FILE_ROWS:
-            keys.repartition(1).write.parquet(ts_dir)
-        else:
-            keys = keys.localCheckpoint(
-                eager=False, storageLevel=_ckpt_level(row_bound)
-            )
-            n_ts = max(1, math.ceil(_count_job(keys) / TOMBSTONE_TARGET_FILE_ROWS))
-            keys.repartition(n_ts).write.parquet(ts_dir)
-        entries = _file_entries(self.root, ts_dir, [], self.fs, kind="tombstone")
-        deleted = sum(e.rows for e in entries)
+        rows = sum(e.rows for e in m.files)
+        if rows > TOMBSTONE_TARGET_FILE_ROWS:
+            keys = keys.localCheckpoint(eager=False, storageLevel=_ckpt_level(rows))
+            rows = _count_job(keys)
+        added = self._stage(m, keys, "tombstone", rows=rows)
+        deleted = sum(e.rows for e in added)
         if deleted == 0:
             # Nothing matched: no commit. The staged empty file is
             # unreferenced garbage — same orphan class as a losing
             # concurrent writer's staging dir.
             return {"rows_deleted": 0, "files_rewritten": 0, "files_added": 0}
-        manifest = Manifest(
-            version=version,
-            operation="DELETE",
-            timestamp_ms=int(time.time() * 1000),
-            files=m.files + entries,
-            cluster_by=m.cluster_by,
-            metrics={
-                "rows_deleted": deleted,
-                "files_rewritten": 0,
-                "files_added": len(entries),
-                "tombstones_added": len(entries),
-            },
-            properties=m.properties,
-        )
-        _write_manifest(self.root, manifest, self.fs)
-        self.manifests.append(manifest)
-        return manifest.metrics
+        return self._commit(m, "DELETE", m.files, added, {
+            "rows_deleted": deleted,
+            "files_rewritten": 0,
+            "files_added": len(added),
+            "tombstones_added": len(added),
+        })
 
     def _update_mor(
         self, assignments: dict[str, str], condition: str
@@ -2004,31 +1919,12 @@ class ManagedTable:
             return {"rows_updated": 0, "files_rewritten": 0, "files_added": 0}
         if self.checks:
             _enforce_checks(updated, self.checks)
-        version = m.version + 1
-        data_dir = self._claim_data_dir(version)
-        n_files = max(1, math.ceil(rows_updated / DEFAULT_TARGET_FILE_ROWS))
-        _shape_for_write(updated, tuple(m.cluster_by), n_files).write.parquet(
-            data_dir
-        )
-        entries = _file_entries(
-            self.root, data_dir, m.cluster_by, self.fs, kind="delta"
-        )
-        manifest = Manifest(
-            version=version,
-            operation="UPDATE",
-            timestamp_ms=int(time.time() * 1000),
-            files=m.files + entries,
-            cluster_by=m.cluster_by,
-            metrics={
-                "rows_updated": rows_updated,
-                "files_rewritten": 0,
-                "files_added": len(entries),
-            },
-            properties=m.properties,
-        )
-        _write_manifest(self.root, manifest, self.fs)
-        self.manifests.append(manifest)
-        return manifest.metrics
+        added = self._stage(m, updated, "delta", rows=rows_updated)
+        return self._commit(m, "UPDATE", m.files, added, {
+            "rows_updated": rows_updated,
+            "files_rewritten": 0,
+            "files_added": len(added),
+        })
 
     def update(self, assignments: dict[str, str], condition: str) -> dict[str, int]:
         """UPDATE SET ... WHERE ...: copy-on-write rewrite of the touched
@@ -2049,9 +1945,7 @@ class ManagedTable:
         self._fold_deltas_if_any()
         m = self.current
         cond = F.expr(condition)
-        touched = self._touched_files(cond, cond_str=condition)
-        untouched = [e for e in m.files if self._abs(e) not in touched]
-        rewritten = [e for e in m.files if self._abs(e) in touched]
+        carried, rewritten = self._split_by_predicate(condition)
         if not rewritten:
             return {"rows_updated": 0, "files_rewritten": 0, "files_added": 0}
         rewritten_rows = sum(e.rows for e in rewritten)
@@ -2084,13 +1978,12 @@ class ManagedTable:
             # assignments can produce violating values; probe the
             # REWRITTEN rows (touched files only — bounded) before commit
             _enforce_checks(updated, self.checks)
-        return self._commit_rewrite(
-            "UPDATE", untouched, updated, rewritten_rows,
-            lambda _new: {
-                "rows_updated": rows_updated,
-                "files_rewritten": len(rewritten),
-            },
-        )
+        added = self._stage(m, updated, rows=rewritten_rows)
+        return self._commit(m, "UPDATE", carried, added, {
+            "rows_updated": rows_updated,
+            "files_rewritten": len(rewritten),
+            "files_added": len(added),
+        })
 
     # ---------- OPTIMIZE (compaction, IncrementalTPCDSBenchmark.scala:186-204) ----------
 
@@ -2146,29 +2039,16 @@ class ManagedTable:
         out_of_scope = [e for e in m.files if e.path not in scope_paths]
         small = [e for e in in_scope if e.rows < target_file_rows]
         big = [e for e in in_scope if e.rows >= target_file_rows] + out_of_scope
-        metrics = {"files_removed": 0, "files_added": 0}
-        if len(small) > 1:
-            df = self._reader(m).parquet(*[self._abs(e) for e in small])
-            n = max(1, math.ceil(sum(e.rows for e in small) / target_file_rows))
-            version = m.version + 1
-            data_dir = self._claim_data_dir(version)
-            _shape_for_write(df, tuple(m.cluster_by), n).write.parquet(data_dir)
-            new_entries = _file_entries(
-                self.root, data_dir, m.cluster_by, self.fs
-            )
-            metrics = {"files_removed": len(small), "files_added": len(new_entries)}
-            manifest = Manifest(
-                version=version,
-                operation="OPTIMIZE",
-                timestamp_ms=int(time.time() * 1000),
-                files=big + new_entries,
-                cluster_by=m.cluster_by,
-                metrics=metrics,
-                properties=m.properties,
-            )
-            _write_manifest(self.root, manifest, self.fs)
-            self.manifests.append(manifest)
-        return metrics
+        if len(small) <= 1:
+            return {"files_removed": 0, "files_added": 0}
+        df = self._reader(m).parquet(*[self._abs(e) for e in small])
+        added = self._stage(
+            m, df, rows=sum(e.rows for e in small), per_file=target_file_rows
+        )
+        return self._commit(m, "OPTIMIZE", big, added, {
+            "files_removed": len(small),
+            "files_added": len(added),
+        })
 
     def zorder(
         self, by: tuple[str, str], num_files: int | None = None
@@ -2183,28 +2063,11 @@ class ManagedTable:
         precedence is row-order-independent only within a resolve)."""
         self._fold_deltas_if_any()
         m = self.current
-        df = self.read()
-        shaped = _zorder_shaped(df, by, num_files)
-        version = m.version + 1
-        data_dir = self._claim_data_dir(version)
-        shaped.write.parquet(data_dir)
-        new_entries = _file_entries(self.root, data_dir, list(by), self.fs)
-        metrics = {
+        added = self._stage(m, self.read(), num_files=num_files, zorder_by=by)
+        return self._commit(m, "OPTIMIZE", [], added, {
             "files_removed": len(m.files),
-            "files_added": len(new_entries),
-        }
-        manifest = Manifest(
-            version=version,
-            operation="OPTIMIZE",
-            timestamp_ms=int(time.time() * 1000),
-            files=new_entries,
-            cluster_by=list(by),
-            metrics=metrics,
-            properties=m.properties,
-        )
-        _write_manifest(self.root, manifest, self.fs)
-        self.manifests.append(manifest)
-        return metrics
+            "files_added": len(added),
+        }, cluster_by=list(by))
 
     def _compact_mor(
         self, m: Manifest, target_file_rows: int
@@ -2215,29 +2078,13 @@ class ManagedTable:
         # Physical base+delta row total over-counts the resolved rows by
         # exactly the superseded ones — an upper bound, so the file count
         # never undersizes (no counting job needed before the write).
-        n = max(1, math.ceil(m.num_rows / target_file_rows))
-        version = m.version + 1
-        data_dir = self._claim_data_dir(version)
-        _shape_for_write(resolved, tuple(m.cluster_by), n).write.parquet(data_dir)
-        new_entries = _file_entries(self.root, data_dir, m.cluster_by, self.fs)
-        metrics = {
+        added = self._stage(m, resolved, rows=m.num_rows, per_file=target_file_rows)
+        return self._commit(m, "OPTIMIZE", [], added, {
             "files_removed": len(m.files),
-            "files_added": len(new_entries),
+            "files_added": len(added),
             "deltas_folded": n_deltas,
             "tombstones_folded": n_tombstones,
-        }
-        manifest = Manifest(
-            version=version,
-            operation="OPTIMIZE",
-            timestamp_ms=int(time.time() * 1000),
-            files=new_entries,
-            cluster_by=m.cluster_by,
-            metrics=metrics,
-            properties=m.properties,
-        )
-        _write_manifest(self.root, manifest, self.fs)
-        self.manifests.append(manifest)
-        return metrics
+        })
 
     # ---------- VACUUM (retention cleanup) ----------
 
@@ -2339,25 +2186,13 @@ class ManagedTable:
         VACUUMed version raises (its manifest is gone — the same
         retention hazard Delta documents)."""
         src = self.version_manifest(version)  # KeyError if vacuumed/unknown
-        m = self.current
-        manifest = Manifest(
-            version=m.version + 1,
-            operation="RESTORE",
-            timestamp_ms=int(time.time() * 1000),
-            files=list(src.files),
-            cluster_by=src.cluster_by,
-            metrics={
-                "restored_from": version,
-                "files_referenced": len(src.files),
-            },
-            # table-level config (mode/PKs/checks) is NOT rolled back —
-            # restore rewinds data, not table configuration (Delta keeps
-            # protocol/properties current too)
-            properties=m.properties,
-        )
-        _write_manifest(self.root, manifest, self.fs)
-        self.manifests.append(manifest)
-        return manifest.metrics
+        # Table-level config (mode/PKs/checks) is NOT rolled back —
+        # restore rewinds data, not table configuration (Delta keeps
+        # protocol/properties current too).
+        return self._commit(self.current, "RESTORE", src.files, [], {
+            "restored_from": version,
+            "files_referenced": len(src.files),
+        }, cluster_by=src.cluster_by)
 
     # ---------- ALTER CLUSTER BY (layout-spec evolution) ----------
 
@@ -2385,21 +2220,10 @@ class ManagedTable:
         missing = [k for k in keys if k not in cols]
         if missing:
             raise ValueError(f"cluster keys not in schema: {missing}")
-        manifest = Manifest(
-            version=m.version + 1,
-            operation="ALTER",
-            timestamp_ms=int(time.time() * 1000),
-            files=list(m.files),
-            cluster_by=list(keys),
-            metrics={
-                "files_carried": len(m.files),
-                "files_rewritten": 0,
-            },
-            properties=m.properties,
-        )
-        _write_manifest(self.root, manifest, self.fs)
-        self.manifests.append(manifest)
-        return manifest.metrics
+        return self._commit(m, "ALTER", m.files, [], {
+            "files_carried": len(m.files),
+            "files_rewritten": 0,
+        }, cluster_by=list(keys))
 
     # ---------- HISTORY / DETAIL ----------
 
@@ -2481,19 +2305,12 @@ class ManagedTable:
             )
             for e in m.files
         ]
-        manifest = Manifest(
-            version=0,
-            operation="CLONE",
-            timestamp_ms=int(time.time() * 1000),
-            files=entries,
-            cluster_by=m.cluster_by,
-            metrics={
+        ManagedTable._new(self.spark, target_root, self.fs)._commit(
+            None, "CLONE", entries, [], {
                 "source_version": m.version,
                 "files_referenced": len(entries),
-            },
-            properties=m.properties,
+            }, cluster_by=m.cluster_by, properties=m.properties,
         )
-        _write_manifest(target_root, manifest, self.fs)
         return ManagedTable(self.spark, target_root, self.fs)
 
     # ---------- CHANGES (change-data-feed analog) ----------
@@ -2688,7 +2505,6 @@ class ManagedTable:
             raise ValueError("apply_changes() needs key columns")
         m = self.current
         target = self.read()
-        data_cols = [c for c in target.columns]
         acted = changes.filter(
             F.col("_change_type").isin("insert", "update_postimage", "delete")
         )
@@ -2703,7 +2519,9 @@ class ManagedTable:
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         ).localCheckpoint()
-        upserts = final.filter(F.col("_change_type") != "delete").select(*data_cols)
+        upserts = final.filter(F.col("_change_type") != "delete").select(
+            *target.columns
+        )
         by_type = {
             r["_change_type"]: r["_n"]
             for r in final.groupBy("_change_type")
@@ -2714,64 +2532,18 @@ class ManagedTable:
         n_upserts = int(sum(v for k, v in by_type.items() if k != "delete"))
         allkeys = final.select(*keys).dropDuplicates()
 
-        # Same manifest-stats candidate pruning as merge(): the touch
-        # probe scans only files whose key range may hold a feed key —
-        # a CDC feed touches O(feed) files, never O(table).
-        cands = self._maybe_prune_candidates(m.files, allkeys, keys[0])
-        probe = self._read_conformed(cands) if cands else target.limit(0)
-        touched_rows = (
-            probe.withColumn("_file", F.input_file_name())
-            .join(allkeys, list(keys), "left_semi")
-            .select("_file")
-            .distinct()
-            .collect()
+        # Same key rewrite as a CoW merge: the touch probe scans only
+        # files whose key range may hold a feed key — a CDC feed touches
+        # O(feed) files, never O(table).
+        carried, rewritten, added, _ = self._rewrite_keys(
+            m, target, keys, allkeys, lambda _probe: (upserts, n_upserts)
         )
-        touched = {_strip_uri(r["_file"]) for r in touched_rows}
-        untouched = [e for e in m.files if self._abs(e) not in touched]
-        rewritten = [e for e in m.files if self._abs(e) in touched]
-        rewritten_rows = sum(e.rows for e in rewritten)
-        if rewritten:
-            kept = (
-                self._read_conformed(rewritten)
-                .select(*data_cols)
-                .join(allkeys, list(keys), "left_anti")
-            )
-            new_data = kept.unionByName(upserts)
-        else:
-            new_data = upserts
-
-        version = m.version + 1
-        data_dir = self._claim_data_dir(version)
-        n_files = max(
-            1, math.ceil((rewritten_rows + n_upserts) / DEFAULT_TARGET_FILE_ROWS)
-        )
-        if m.cluster_by:
-            # same single-evaluation rationale (and storage-level rule)
-            # as merge()
-            new_data = new_data.localCheckpoint(
-                storageLevel=_ckpt_level(rewritten_rows + n_upserts)
-            )
-        _shape_for_write(new_data, tuple(m.cluster_by), n_files).write.parquet(
-            data_dir
-        )
-        new_entries = _file_entries(self.root, data_dir, m.cluster_by, self.fs)
-        manifest = Manifest(
-            version=version,
-            operation="APPLY_CHANGES",
-            timestamp_ms=int(time.time() * 1000),
-            files=untouched + new_entries,
-            cluster_by=m.cluster_by,
-            metrics={
-                "upserts_applied": n_upserts,
-                "deletes_applied": n_deletes,
-                "files_rewritten": len(rewritten),
-                "files_added": len(new_entries),
-            },
-            properties=m.properties,
-        )
-        _write_manifest(self.root, manifest, self.fs)
-        self.manifests.append(manifest)
-        return manifest.metrics
+        return self._commit(m, "APPLY_CHANGES", carried, added, {
+            "upserts_applied": n_upserts,
+            "deletes_applied": n_deletes,
+            "files_rewritten": len(rewritten),
+            "files_added": len(added),
+        })
 
 
 def _strip_uri(p: str) -> str:

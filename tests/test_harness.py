@@ -111,3 +111,27 @@ def test_run_query_setup_failure_is_captured(spark):
     # the runner keeps running afterwards
     ok = r.run_query("next", lambda: spark.range(1))
     assert ok.error_msg is None and ok.row_count == 1
+
+
+def test_run_query_setup_jobs_are_not_billed_to_the_query(spark):
+    """setup() runs before the query's job group opens: its Spark jobs
+    must not inflate the measured query's ``jobs`` count."""
+    r = BenchmarkRunner(spark, iterations=1)
+
+    def make():
+        return spark.range(10).selectExpr("sum(id) AS s")
+
+    bare = r.run_query("bare", make)
+    res = r.run_query("with_setup", make, setup=lambda: spark.range(5).count())
+    assert bare.jobs is not None and bare.jobs > 0
+    assert res.error_msg is None and res.jobs == bare.jobs
+
+
+def test_driver_mem_default_is_half_of_ram_capped():
+    from lhbench_spark.session import _driver_mem_for
+
+    gib = 1024 * 1024  # MemTotal is reported in kB
+    assert _driver_mem_for(f"MemFree: 1 kB\nMemTotal: {16 * gib} kB\n") == "8192m"
+    assert _driver_mem_for(f"MemTotal:       {15 * gib + 512} kB") == "7680m"
+    assert _driver_mem_for(f"MemTotal: {512 * gib} kB") == "49152m"  # 48g cap
+    assert _driver_mem_for("") == "49152m"  # unknown host: the cap

@@ -1182,12 +1182,15 @@ def test_merge_when_matched_delete(spark, tmp_path):
     assert tm.read().count() == 50
 
 
-@pytest.mark.slow
-def test_mor_many_deltas_bounded_plan(spark, tmp_path):
-    """50 un-compacted delta commits must resolve through ONE scan node
+@pytest.mark.parametrize(
+    "n_deltas", [5, pytest.param(50, marks=pytest.mark.slow)]
+)
+def test_mor_many_deltas_bounded_plan(spark, tmp_path, n_deltas):
+    """N un-compacted delta commits must resolve through ONE scan node
     (flat path→version lookup), not an O(versions) union — the plan a
     table accumulates between OPTIMIZE runs at 100 TB. Also proves the
-    resolve is correct: latest-per-key across all 50 versions."""
+    resolve is correct: latest-per-key across all N versions. The
+    5-delta case keeps the plan-shape guard in the default gate."""
     from lhbench_spark.tables import ManagedTable
 
     base = spark.range(0, 100).selectExpr("id AS k", "CAST(0 AS DOUBLE) AS v")
@@ -1195,12 +1198,12 @@ def test_mor_many_deltas_bounded_plan(spark, tmp_path):
         spark, str(tmp_path / "m"), base, num_files=2,
         table_mode="mor", primary_keys=("k",),
     )
-    for i in range(1, 51):
+    for i in range(1, n_deltas + 1):
         src = spark.range(i, i + 2).selectExpr(
             "id AS k", f"CAST({i} AS DOUBLE) AS v"
         )
         t.merge(src, on=["k"])
-    assert sum(e.kind == "delta" for e in t.current.files) >= 50
+    assert sum(e.kind == "delta" for e in t.current.files) >= n_deltas
 
     df = t.read()
     plan = df._jdf.queryExecution().optimizedPlan().toString()
@@ -1209,9 +1212,10 @@ def test_mor_many_deltas_bounded_plan(spark, tmp_path):
     got = {r.k: r.v for r in df.collect()}
     assert len(got) == 100  # commit i touches k=i,i+1 — all inside 0..99
     # key k was last touched by commit i = max(i in {k-1, k}) -> v = k
-    for k in range(1, 51):
+    for k in range(1, n_deltas + 1):
         assert got[k] == float(k), (k, got[k])
-    assert got[0] == 0.0 and got[51] == 50.0 and got[52] == 0.0
+    assert got[0] == 0.0 and got[n_deltas + 1] == float(n_deltas)
+    assert got[n_deltas + 2] == 0.0
 
 
 # ---------- MoR deletion vectors (tombstones) ----------
@@ -2164,3 +2168,229 @@ def test_mor_fresh_key_appends_skip_resolve(spark, tmp_path):
     assert t._needs_resolve(t.current.files)
     assert t.read().count() == 300
     assert t.read().filter("key = 50").collect()[0]["value"] == -5.0
+
+
+# ---------- commit-path matrix ----------
+#
+# Every ManagedTable write commits through one staging function and one
+# commit function; this matrix runs each write on a clustered CoW and MoR
+# table through a recording TableFS, so each (mode, op) cell is also an
+# enumerable fault-injection point for the commit protocol. The pinned
+# metrics feed history() and the oracle-checked DML result columns, and
+# the pinned Spark job counts are each write's job budget: a commit-path
+# change that moves either changes behaviour.
+
+
+def _mx_rows(spark, lo, hi, tag):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("key"),
+        (F.col("id") % 7).alias("part"),
+        (F.col("id") * 2.5).alias("value"),
+        F.lit(tag).alias("tag"),
+    )
+
+
+def _mx_feed(spark):
+    upserts = _mx_rows(spark, 190, 210, "fed").withColumn(
+        "_change_type",
+        F.when(F.col("key") < 200, "update_postimage").otherwise("insert"),
+    )
+    deletes = _mx_rows(spark, 0, 5, "gone").withColumn(
+        "_change_type", F.lit("delete")
+    )
+    return upserts.unionByName(deletes).withColumn(
+        "_commit_version", F.lit(1).cast("long")
+    )
+
+
+# op -> (setup or None, measured op); "create" measures the load itself
+_MATRIX_OPS = {
+    "create": (None, None),
+    "merge": (None, lambda s, t, d: t.merge(_mx_rows(s, 150, 250, "m"), on=["key"])),
+    "merge_delete": (None, lambda s, t, d: t.merge(
+        _mx_rows(s, 150, 250, "m"), on=["key"], when_matched="delete")),
+    "merge_full_sync": (None, lambda s, t, d: t.merge(
+        _mx_rows(s, 150, 250, "m"), on=["key"],
+        when_not_matched_by_source="delete", source_scope="part = 3")),
+    "append": (None, lambda s, t, d: t.append(_mx_rows(s, 1000, 1020, "a"))),
+    "delete": (None, lambda s, t, d: t.delete("part = 3")),
+    "update": (None, lambda s, t, d: t.update({"value": "value + 1"}, "part = 2")),
+    "optimize": (
+        lambda s, t, d: t.merge(_mx_rows(s, 150, 250, "m"), on=["key"]),
+        lambda s, t, d: t.optimize(),
+    ),
+    "zorder": (None, lambda s, t, d: t.zorder(("key", "part"))),
+    "restore": (lambda s, t, d: t.delete("part = 3"), lambda s, t, d: t.restore(0)),
+    "set_cluster_by": (None, lambda s, t, d: t.set_cluster_by(["part"])),
+    "clone": (None, lambda s, t, d: t.clone(os.path.join(d, "clone"))),
+    "apply_changes": (None, lambda s, t, d: t.apply_changes(_mx_feed(s))),
+}
+
+# (mode, op) -> (metrics, spark jobs)
+_MATRIX_PINNED = {
+    ("cow", "append"): ({"rows_appended": 20, "files_added": 1, "columns_added": 0}, 2),
+    ("cow", "apply_changes"): (
+        {
+            "upserts_applied": 20,
+            "deletes_applied": 5,
+            "files_rewritten": 2,
+            "files_added": 1,
+        },
+        13,
+    ),
+    ("cow", "clone"): ({"source_version": 0, "files_referenced": 4}, 0),
+    ("cow", "create"): ({"num_output_rows": 200}, 4),
+    ("cow", "delete"): (
+        {"rows_deleted": 29, "files_rewritten": 4, "files_added": 1},
+        5,
+    ),
+    ("cow", "merge"): (
+        {"matched_updated": 50, "inserted": 50, "files_rewritten": 1, "files_added": 1},
+        10,
+    ),
+    ("cow", "merge_delete"): (
+        {"matched_deleted": 50, "inserted": 50, "files_rewritten": 1, "files_added": 1},
+        14,
+    ),
+    ("cow", "merge_full_sync"): (
+        {
+            "matched_updated": 50,
+            "inserted": 50,
+            "deleted_not_matched_by_source": 21,
+            "files_rewritten": 4,
+            "files_added": 1,
+        },
+        12,
+    ),
+    ("cow", "optimize"): ({"files_removed": 4, "files_added": 1}, 2),
+    ("cow", "restore"): ({"restored_from": 0, "files_referenced": 4}, 0),
+    ("cow", "set_cluster_by"): ({"files_carried": 4, "files_rewritten": 0}, 0),
+    ("cow", "update"): (
+        {"rows_updated": 29, "files_rewritten": 4, "files_added": 1},
+        5,
+    ),
+    ("cow", "zorder"): ({"files_removed": 4, "files_added": 8}, 5),
+    ("mor", "append"): ({"rows_appended": 20, "files_added": 1, "columns_added": 0}, 4),
+    ("mor", "apply_changes"): (
+        {
+            "upserts_applied": 20,
+            "deletes_applied": 5,
+            "files_rewritten": 2,
+            "files_added": 1,
+        },
+        13,
+    ),
+    ("mor", "clone"): ({"source_version": 0, "files_referenced": 4}, 0),
+    ("mor", "create"): ({"num_output_rows": 200}, 6),
+    ("mor", "delete"): (
+        {
+            "rows_deleted": 29,
+            "files_rewritten": 0,
+            "files_added": 1,
+            "tombstones_added": 1,
+        },
+        2,
+    ),
+    ("mor", "merge"): (
+        {"matched_updated": 50, "inserted": 50, "files_rewritten": 0, "files_added": 1},
+        7,
+    ),
+    ("mor", "merge_delete"): (
+        {"matched_deleted": 50, "inserted": 50, "files_rewritten": 0, "files_added": 2},
+        8,
+    ),
+    ("mor", "merge_full_sync"): (
+        {
+            "matched_updated": 50,
+            "inserted": 50,
+            "deleted_not_matched_by_source": 21,
+            "files_rewritten": 0,
+            "files_added": 2,
+        },
+        9,
+    ),
+    ("mor", "optimize"): (
+        {
+            "files_removed": 5,
+            "files_added": 1,
+            "deltas_folded": 1,
+            "tombstones_folded": 0,
+        },
+        3,
+    ),
+    ("mor", "restore"): ({"restored_from": 0, "files_referenced": 4}, 0),
+    ("mor", "set_cluster_by"): ({"files_carried": 4, "files_rewritten": 0}, 0),
+    ("mor", "update"): (
+        {"rows_updated": 29, "files_rewritten": 0, "files_added": 1},
+        4,
+    ),
+    ("mor", "zorder"): ({"files_removed": 4, "files_added": 8}, 5),
+}
+
+
+def _count_jobs(spark, fn):
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"commit-matrix-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _run_matrix_cell(spark, root, mode, op):
+    """(metrics, jobs, commit_text calls, versions committed, table)."""
+    from collections import Counter
+
+    from lhbench_spark.tables import TableFS
+
+    class RecordingFS(TableFS):
+        def __init__(self):
+            self.calls = Counter()
+
+        def commit_text(self, path, text):
+            self.calls["commit_text"] += 1
+            return super().commit_text(path, text)
+
+    fs = RecordingFS()
+
+    def create():
+        return ManagedTable.create(
+            spark, os.path.join(root, "t"), _mx_rows(spark, 0, 200, "base"),
+            cluster_by=("key",), num_files=4, table_mode=mode,
+            primary_keys=("key",), fs=fs,
+        )
+
+    setup, run = _MATRIX_OPS[op]
+    if run is None:
+        t, jobs = _count_jobs(spark, create)
+        return t.current.metrics, jobs, fs.calls["commit_text"], 1, t
+    t = create()
+    if setup is not None:
+        setup(spark, t, root)
+    before_commits, before_version = fs.calls["commit_text"], t.current.version
+    metrics, jobs = _count_jobs(spark, lambda: run(spark, t, root))
+    if op == "clone":
+        t = metrics
+        metrics, versions = t.current.metrics, 1
+    else:
+        versions = t.current.version - before_version
+    return metrics, jobs, fs.calls["commit_text"] - before_commits, versions, t
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+@pytest.mark.parametrize("op", sorted(_MATRIX_OPS))
+def test_commit_path_matrix(spark, tmp_path, mode, op):
+    metrics, jobs, commits, versions, t = _run_matrix_cell(
+        spark, str(tmp_path), mode, op
+    )
+    assert commits == versions >= 1
+    for e in t.current.files:
+        p = e.path if os.path.isabs(e.path) else os.path.join(t.root, e.path)
+        assert os.path.exists(p), p
+    want_metrics, want_jobs = _MATRIX_PINNED[(mode, op)]
+    assert metrics == want_metrics
+    assert jobs == want_jobs

@@ -3,11 +3,13 @@
 Usage: python tools/qtime.py q1 q2 ... [-n ITERS] [--sf DIR] [--explain OUT]
 
 For each query: builds the DataFrame via its registered spark_fn and
-times plan+execute+collect (the bench harness window) ITERS times,
-printing every sample and the upper median. ``--explain`` additionally
-writes the formatted physical plan to OUT/<name>.txt. The session mirrors
-bench.py (same get_spark, warmup read) so numbers are comparable to
-bench_report.json entries up to host noise.
+times it ITERS times through ``BenchmarkRunner.run_query`` (the bench
+harness window: plan + execute + collect, jobs counted in the query's
+own job group), printing every sample and the upper median.
+``--explain`` additionally writes the formatted physical plan to
+OUT/<name>.txt. The session mirrors bench.py (same get_spark, warmup
+read) so numbers are comparable to bench_report.json entries up to host
+noise.
 """
 
 from __future__ import annotations
@@ -15,7 +17,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -28,6 +29,7 @@ def main() -> int:
     ap.add_argument("--explain", default=None)
     args = ap.parse_args()
 
+    from lhbench_spark.harness.runner import BenchmarkRunner, upper_median
     from lhbench_spark.queries import all_queries
     from lhbench_spark.session import get_spark
 
@@ -35,30 +37,27 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("id % 97 AS k").groupBy("k").count().collect()
     qs = all_queries()
+    runner = BenchmarkRunner(spark)
     for name in args.names:
         qd = qs[name]
         samples = []
-        tracker = spark.sparkContext.statusTracker()
-        for i in range(args.n):
-            spark.catalog.clearCache()
-            group = f"qtime-{name}-{i}"
-            spark.sparkContext.setJobGroup(group, name)
-            t0 = time.monotonic()
-            df = qd.spark_fn(spark, args.sf)
-            rows = df.collect()
-            dt = time.monotonic() - t0
-            spark.sparkContext.setJobGroup("", "")
-            n_jobs = len(tracker.getJobIdsForGroup(group))
-            samples.append(dt)
+        for i in range(1, args.n + 1):
+            res = runner.run_query(name, lambda: qd.spark_fn(spark, args.sf), i)
+            if res.error_msg:
+                print(f"{name} iter{i}: ERROR {res.error_msg}", flush=True)
+                continue
+            samples.append(res.duration_ms / 1000.0)
             print(
-                f"{name} iter{i + 1}: {dt:.3f}s rows={len(rows)} jobs={n_jobs}",
+                f"{name} iter{i}: {samples[-1]:.3f}s rows={res.row_count} "
+                f"jobs={res.jobs}",
                 flush=True,
             )
-        s = sorted(samples)
-        print(
-            f"{name} upper-median: {s[len(s) // 2]:.3f}s min: {s[0]:.3f}s",
-            flush=True,
-        )
+        if samples:
+            print(
+                f"{name} upper-median: {upper_median(samples):.3f}s "
+                f"min: {min(samples):.3f}s",
+                flush=True,
+            )
         if args.explain:
             os.makedirs(args.explain, exist_ok=True)
             df = qd.spark_fn(spark, args.sf)
