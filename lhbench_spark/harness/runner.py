@@ -22,7 +22,7 @@ from __future__ import annotations
 import math
 import time
 import traceback
-from collections.abc import Callable, Mapping
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -88,7 +88,9 @@ def upper_median(values: list[float]) -> float:
 
 @dataclass
 class BenchmarkRunner:
-    """Run a named set of DataFrame-producing callables with timing.
+    """Time DataFrame-producing callables, one (query, iteration) per
+    :meth:`run_query` call; the caller (bench.py's suite loop, a
+    workload's steps) owns the loop.
 
     ``iterations`` defaults to 3 like the reference
     (TPCDSBenchmarkConf default, TPCDSBenchmark.scala:37)."""
@@ -115,9 +117,11 @@ class BenchmarkRunner:
         group = f"{name}-i{iteration}"
         # Measurement isolation: operators that persist intermediates
         # (dedup signature sets) must not carry cached state into the next
-        # query or iteration — every measurement is a clean cold run, and
-        # the session never accumulates leaked cache entries across a
-        # 60+-query suite.
+        # query or iteration, and the session never accumulates leaked
+        # cache entries across a 60+-query suite. clearCache() drops only
+        # persist()/cache() entries: localCheckpoint blocks (DISK_ONLY in
+        # the DML paths and charlm) stay until the ContextCleaner frees
+        # them once their DataFrames are garbage-collected.
         self.spark.catalog.clearCache()
         t0 = time.monotonic_ns()
         try:
@@ -167,21 +171,6 @@ class BenchmarkRunner:
             return len(tracker.getJobIdsForGroup(group))
         except Exception:  # noqa: BLE001 — diagnostics must not fail a query
             return None
-
-    def run_suite(
-        self,
-        queries: Mapping[str, Callable[[], DataFrame]],
-    ) -> dict[str, float]:
-        """Run every query ``iterations`` times; return {name: upper-median
-        seconds} for queries that never errored.
-
-        Iteration-major order like the reference (TPCDSBenchmark.scala:94-98:
-        for iteration, for each query sorted by name) so warm-cache effects
-        spread evenly across queries rather than clustering per query."""
-        for it in range(1, self.iterations + 1):
-            for name in sorted(queries):
-                self.run_query(name, queries[name], it)
-        return self.medians()
 
     def medians(self) -> dict[str, float]:
         """Upper-median seconds per fully-successful query.

@@ -508,7 +508,12 @@ def ivf_assign(
     is the same left-to-right IEEE fold ((0+d₀²)+d₁²)+… the zip_with/
     aggregate expression evaluated, numpy and the JVM both execute
     correctly-rounded binary64 ops, and ranking sorts by (distance,
-    cid) exactly like the struct array_sort."""
+    cid) exactly like the struct array_sort.
+
+    Input contract: every vector is non-null and has the centroids'
+    dim. A row outside it fails the task with a ValueError naming
+    ivf_assign, the row's id and the expected dim (where the HOF
+    reference would yield null distances)."""
     import numpy as np
     import pandas as pd
 
@@ -519,11 +524,28 @@ def ivf_assign(
 
     id_field = df.schema[id_out]
 
+    def bad_vector(pdf) -> ValueError:
+        # input contract: every vector non-null with the centroids' dim;
+        # only searched for once the batch failed to stack to (rows, dim)
+        for rid, vec in zip(pdf[id_out], pdf[vec_out]):
+            if vec is None or len(vec) != dim:
+                got = "null" if vec is None else f"of length {len(vec)}"
+                return ValueError(
+                    f"ivf_assign: {vec_out} for {id_out}={rid} is {got}; "
+                    f"expected dim {dim}"
+                )
+        return ValueError(f"ivf_assign: {vec_out} batch does not stack to dim {dim}")
+
     def assign(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            v = np.stack(pdf[vec_out].to_numpy()).astype(np.float64)
+            try:
+                v = np.stack(pdf[vec_out].to_numpy()).astype(np.float64)
+            except (TypeError, ValueError):
+                raise bad_vector(pdf) from None
+            if v.shape[1:] != (dim,):
+                raise bad_vector(pdf)
             acc = np.zeros((len(v), k), dtype=np.float64)
             # sequential over coordinates — matches the fold order of the
             # HOF aggregate bit for bit (vectorized across rows × cells,

@@ -18,18 +18,15 @@ from lhbench_spark.queries.registry import query
 from lhbench_spark.tables import ManagedTable
 from lhbench_spark.tpcds_data import compose_oracle
 from lhbench_spark.workloads import refresh_tpcds as rt
-from lhbench_spark.workloads.refresh import read_staging_csv, write_staging_csv
 
 
-def _staged_delta(spark, sf_dir, fact):
-    """Round-1 delta through the CSV round-trip (write pipe-delimited
-    headerless, read back with the explicit schema) — any staging
-    fidelity loss fails the oracle compare."""
-    work = tempfile.mkdtemp(prefix="lhbench_mrv_")
-    write_staging_csv(rt.stage_delta(spark, sf_dir, fact, 1), f"{work}/d")
-    return read_staging_csv(
-        spark, f"{work}/d", rt.staging_schema(spark, sf_dir, fact)
-    )
+def _round_one(spark, sf_dir, chain):
+    """Chain ``chain``'s round-1 staging files CSV round-tripped (written
+    pipe-delimited headerless, read back with the schema written) and
+    folded through its refresh view — any staging fidelity loss fails
+    the oracle compare."""
+    work = tempfile.mkdtemp(prefix="lhbench_chain_")
+    return rt.chain_view(spark, sf_dir, chain, rt.stage_chain(spark, sf_dir, chain, 1, work))
 
 
 _SSV_ORACLE = compose_oracle("""
@@ -68,15 +65,7 @@ def tpcds_refresh_ssv_view(spark, sf_dir):
     aggregated by year × store-state × category. NULL fact FKs surface
     as the UNKNOWN/0 buckets, checking outer-join semantics through the
     staging round-trip."""
-    d = _staged_delta(spark, sf_dir, "store_sales")
-    rv = rt.ssv_view(
-        d,
-        rt._dim(spark, sf_dir, "date_dim"),
-        rt._dim(spark, sf_dir, "store"),
-        rt._dim(spark, sf_dir, "item"),
-        rt._dim(spark, sf_dir, "customer"),
-        rt._dim(spark, sf_dir, "customer_address"),
-    )
+    rv = _round_one(spark, sf_dir, "store_sales")
     return rv.groupBy("sale_year", "store_state", "category").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.sum("quantity").cast("bigint").alias("qty_sum"),
@@ -118,14 +107,7 @@ def tpcds_refresh_wsv_view(spark, sf_dir):
     """web_sales refresh view (the wsv shape): delta → date_dim → item →
     bill customer → current address, aggregated by year × category ×
     customer state."""
-    d = _staged_delta(spark, sf_dir, "web_sales")
-    rv = rt.wsv_view(
-        d,
-        rt._dim(spark, sf_dir, "date_dim"),
-        rt._dim(spark, sf_dir, "item"),
-        rt._dim(spark, sf_dir, "customer"),
-        rt._dim(spark, sf_dir, "customer_address"),
-    )
+    rv = _round_one(spark, sf_dir, "web_sales")
     return rv.groupBy("sale_year", "category", "cust_state").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.sum("quantity").cast("bigint").alias("qty_sum"),
@@ -168,14 +150,7 @@ def tpcds_refresh_csv_view(spark, sf_dir):
     """catalog_sales refresh view (the crv/csv shape): delta → date_dim
     → item → bill demographics → promotion (the round re-points every
     delta row at promo 1, so promo_email reflects promotion #1)."""
-    d = _staged_delta(spark, sf_dir, "catalog_sales")
-    rv = rt.csv_view(
-        d,
-        rt._dim(spark, sf_dir, "date_dim"),
-        rt._dim(spark, sf_dir, "item"),
-        rt._dim(spark, sf_dir, "customer_demographics"),
-        rt._dim(spark, sf_dir, "promotion"),
-    )
+    rv = _round_one(spark, sf_dir, "catalog_sales")
     return rv.groupBy("sale_year", "category", "education", "promo_email").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.sum("quantity").cast("bigint").alias("qty_sum"),
@@ -221,14 +196,7 @@ def tpcds_refresh_srv_view(spark, sf_dir):
     store → item → reason, aggregated by year × store-state × category ×
     return reason — the returns-family representative of the seven-fact
     refresh breadth."""
-    d = _staged_delta(spark, sf_dir, "store_returns")
-    rv = rt.srv_view(
-        d,
-        rt._dim(spark, sf_dir, "date_dim"),
-        rt._dim(spark, sf_dir, "store"),
-        rt._dim(spark, sf_dir, "item"),
-        rt._dim(spark, sf_dir, "reason"),
-    )
+    rv = _round_one(spark, sf_dir, "store_returns")
     return rv.groupBy("sale_year", "store_state", "category", "reason").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.sum("quantity").cast("bigint").alias("qty_sum"),
@@ -268,13 +236,7 @@ def tpcds_refresh_iv_view(spark, sf_dir):
     warehouse, aggregated by year × category × warehouse state. The
     only fact with a 3-column natural key ((date, item, warehouse) —
     the surrogate fold covers it) and a non-money measure."""
-    d = _staged_delta(spark, sf_dir, "inventory")
-    rv = rt.iv_view(
-        d,
-        rt._dim(spark, sf_dir, "date_dim"),
-        rt._dim(spark, sf_dir, "item"),
-        rt._dim(spark, sf_dir, "warehouse"),
-    )
+    rv = _round_one(spark, sf_dir, "inventory")
     return rv.groupBy("inv_year", "category", "wh_state").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.sum("qoh").cast("bigint").alias("qoh_sum"),
@@ -310,13 +272,10 @@ def tpcds_refresh_merged_state(spark, sf_dir):
     value-checked end-to-end (every delta key exists in the base, so the
     upsert reduces to slice replacement)."""
     base = rt.fact_with_key(spark, sf_dir, "store_sales")
-    root = tempfile.mkdtemp(prefix="lhbench_mstate_") + "/ss"
-    t = ManagedTable.create(spark, root, base, cluster_by=("ss_key",), num_files=8)
-    delta = _staged_delta(spark, sf_dir, "store_sales")
-    keyed = delta.select(rt._key_col("store_sales"), *delta.columns).select(
-        *t.read().columns
-    )
-    t.merge(keyed, on=["ss_key"], validate_unique=False)
+    work = tempfile.mkdtemp(prefix="lhbench_mstate_")
+    t = ManagedTable.create(spark, f"{work}/ss", base, cluster_by=("ss_key",), num_files=8)
+    staged = rt.stage_chain(spark, sf_dir, "store_sales", 1, f"{work}/stage")
+    rt.merge_staged(spark, t, "store_sales", staged)
     return (
         t.read()
         .withColumn("refreshed", (F.col("ss_ticket_number") % 7) == 1)
@@ -431,24 +390,7 @@ def tpcds_refresh_csv_dense(spark, sf_dir):
     dimension (TPCDSRefreshSchema.scala:737-788). The aggregate sums
     each RESOLVED key column, so a single mis-resolved id anywhere in
     the chain fails the value compare."""
-    work = tempfile.mkdtemp(prefix="lhbench_csvdense_")
-    hdr0, lin0 = rt.stage_catalog_pair(spark, sf_dir, 1)
-    write_staging_csv(hdr0, f"{work}/hdr")
-    write_staging_csv(lin0, f"{work}/lin")
-    hdr = read_staging_csv(spark, f"{work}/hdr", rt.catalog_order_schema())
-    lin = read_staging_csv(spark, f"{work}/lin", rt.catalog_lineitem_schema())
-    rv = rt.csv_dense_view(
-        hdr, lin,
-        rt._dim(spark, sf_dir, "date_dim"),
-        rt._dim(spark, sf_dir, "time_dim"),
-        rt._dim(spark, sf_dir, "customer"),
-        rt._dim(spark, sf_dir, "call_center"),
-        rt._dim(spark, sf_dir, "ship_mode"),
-        rt._dim(spark, sf_dir, "catalog_page"),
-        rt._dim(spark, sf_dir, "warehouse"),
-        rt._dim(spark, sf_dir, "item"),
-        rt._dim(spark, sf_dir, "promotion"),
-    )
+    rv = _round_one(spark, sf_dir, "csv_dense")
     return rv.groupBy(
         F.coalesce("sold_year", F.lit(0)).alias("sold_year"),
         F.coalesce("call_center_name", F.lit("UNKNOWN")).alias("call_center_name"),
@@ -570,24 +512,7 @@ def tpcds_refresh_wsv_dense(spark, sf_dir):
     (TPCDSRefreshSchema.scala:657-700). The aggregate sums each
     RESOLVED key column, so a single mis-resolved id anywhere in the
     chain fails the value compare."""
-    work = tempfile.mkdtemp(prefix="lhbench_wsvdense_")
-    hdr0, lin0 = rt.stage_web_pair(spark, sf_dir, 1)
-    write_staging_csv(hdr0, f"{work}/hdr")
-    write_staging_csv(lin0, f"{work}/lin")
-    hdr = read_staging_csv(spark, f"{work}/hdr", rt.web_order_schema())
-    lin = read_staging_csv(spark, f"{work}/lin", rt.web_lineitem_schema())
-    rv = rt.wsv_dense_view(
-        hdr, lin,
-        rt._dim(spark, sf_dir, "date_dim"),
-        rt._dim(spark, sf_dir, "time_dim"),
-        rt._dim(spark, sf_dir, "customer"),
-        rt._dim(spark, sf_dir, "web_site"),
-        rt._dim(spark, sf_dir, "ship_mode"),
-        rt._dim(spark, sf_dir, "web_page"),
-        rt._dim(spark, sf_dir, "warehouse"),
-        rt._dim(spark, sf_dir, "item"),
-        rt._dim(spark, sf_dir, "promotion"),
-    )
+    rv = _round_one(spark, sf_dir, "wsv_dense")
     return rv.groupBy(
         F.coalesce("sold_year", F.lit(0)).alias("sold_year"),
         F.coalesce("web_site_name", F.lit("UNKNOWN")).alias("web_site_name"),
@@ -684,21 +609,7 @@ def tpcds_refresh_ssv_dense(spark, sf_dir):
     item and promotion (TPCDSRefreshSchema.scala:579-613). The
     aggregate sums each RESOLVED key column, so a single mis-resolved
     id anywhere in the chain fails the value compare."""
-    work = tempfile.mkdtemp(prefix="lhbench_ssvdense_")
-    hdr0, lin0 = rt.stage_store_pair(spark, sf_dir, 1)
-    write_staging_csv(hdr0, f"{work}/hdr")
-    write_staging_csv(lin0, f"{work}/lin")
-    hdr = read_staging_csv(spark, f"{work}/hdr", rt.purchase_order_schema())
-    lin = read_staging_csv(spark, f"{work}/lin", rt.purchase_lineitem_schema())
-    rv = rt.ssv_dense_view(
-        hdr, lin,
-        rt._dim(spark, sf_dir, "date_dim"),
-        rt._dim(spark, sf_dir, "time_dim"),
-        rt._dim(spark, sf_dir, "customer"),
-        rt._dim(spark, sf_dir, "store"),
-        rt._dim(spark, sf_dir, "item"),
-        rt._dim(spark, sf_dir, "promotion"),
-    )
+    rv = _round_one(spark, sf_dir, "ssv_dense")
     return rv.groupBy(
         F.coalesce("sold_year", F.lit(0)).alias("sold_year"),
         F.coalesce("store_name", F.lit("UNKNOWN")).alias("store_name"),
@@ -796,19 +707,7 @@ def tpcds_refresh_srv_dense(spark, sf_dir):
     time, item, customer, store and reason. The aggregate sums each
     RESOLVED key column, so a single mis-resolved id or a broken time
     decode anywhere in the chain fails the value compare."""
-    work = tempfile.mkdtemp(prefix="lhbench_srvdense_")
-    flat0 = rt.stage_returns_flat(spark, sf_dir, 1)
-    write_staging_csv(flat0, f"{work}/flat")
-    flat = read_staging_csv(spark, f"{work}/flat", rt.returns_flat_schema())
-    rv = rt.srv_dense_view(
-        flat,
-        rt._dim(spark, sf_dir, "date_dim"),
-        rt._dim(spark, sf_dir, "time_dim"),
-        rt._dim(spark, sf_dir, "customer"),
-        rt._dim(spark, sf_dir, "store"),
-        rt._dim(spark, sf_dir, "item"),
-        rt._dim(spark, sf_dir, "reason"),
-    )
+    rv = _round_one(spark, sf_dir, "srv_dense")
     return rv.groupBy(
         F.coalesce("return_year", F.lit(0)).alias("return_year"),
         F.coalesce("store_state", F.lit("UNKNOWN")).alias("store_state"),
@@ -910,19 +809,7 @@ def tpcds_refresh_wrv_dense(spark, sf_dir):
     7-relation wrv_view shape resolving date, time, item, returning
     customer, reason and web page
     (TPCDSRefreshSchema.scala:702-735)."""
-    work = tempfile.mkdtemp(prefix="lhbench_wrvdense_")
-    flat0 = rt.stage_web_returns_flat(spark, sf_dir, 1)
-    write_staging_csv(flat0, f"{work}/flat")
-    flat = read_staging_csv(spark, f"{work}/flat", rt.web_returns_flat_schema())
-    rv = rt.wrv_dense_view(
-        flat,
-        rt._dim(spark, sf_dir, "date_dim"),
-        rt._dim(spark, sf_dir, "time_dim"),
-        rt._dim(spark, sf_dir, "customer"),
-        rt._dim(spark, sf_dir, "item"),
-        rt._dim(spark, sf_dir, "reason"),
-        rt._dim(spark, sf_dir, "web_page"),
-    )
+    rv = _round_one(spark, sf_dir, "wrv_dense")
     return rv.groupBy(
         F.coalesce("return_year", F.lit(0)).alias("return_year"),
         F.coalesce("item_category", F.lit("UNKNOWN")).alias("item_category"),
@@ -1025,21 +912,7 @@ def tpcds_refresh_crv_dense(spark, sf_dir):
     7-relation crv_view shape resolving date, time, item, returning
     customer, call center and catalog page
     (TPCDSRefreshSchema.scala:790-834)."""
-    work = tempfile.mkdtemp(prefix="lhbench_crvdense_")
-    flat0 = rt.stage_catalog_returns_flat(spark, sf_dir, 1)
-    write_staging_csv(flat0, f"{work}/flat")
-    flat = read_staging_csv(
-        spark, f"{work}/flat", rt.catalog_returns_flat_schema()
-    )
-    rv = rt.crv_dense_view(
-        flat,
-        rt._dim(spark, sf_dir, "date_dim"),
-        rt._dim(spark, sf_dir, "time_dim"),
-        rt._dim(spark, sf_dir, "customer"),
-        rt._dim(spark, sf_dir, "item"),
-        rt._dim(spark, sf_dir, "call_center"),
-        rt._dim(spark, sf_dir, "catalog_page"),
-    )
+    rv = _round_one(spark, sf_dir, "crv_dense")
     return rv.groupBy(
         F.coalesce("return_year", F.lit(0)).alias("return_year"),
         F.coalesce("call_center_name", F.lit("UNKNOWN")).alias(
@@ -1107,16 +980,7 @@ def tpcds_refresh_iv_dense(spark, sf_dir):
     warehouse business string), CSV round-tripped, then the 4-relation
     iv_view shape (TPCDSRefreshSchema.scala:836-844) — completing the
     reference-density analog for all seven refresh views."""
-    work = tempfile.mkdtemp(prefix="lhbench_ivdense_")
-    flat0 = rt.stage_inventory_flat(spark, sf_dir, 1)
-    write_staging_csv(flat0, f"{work}/flat")
-    flat = read_staging_csv(spark, f"{work}/flat", rt.inventory_flat_schema())
-    rv = rt.iv_dense_view(
-        flat,
-        rt._dim(spark, sf_dir, "date_dim"),
-        rt._dim(spark, sf_dir, "item"),
-        rt._dim(spark, sf_dir, "warehouse"),
-    )
+    rv = _round_one(spark, sf_dir, "iv_dense")
     return rv.groupBy(
         F.coalesce("snapshot_year", F.lit(0)).alias("snapshot_year"),
         F.coalesce("item_category", F.lit("UNKNOWN")).alias("item_category"),

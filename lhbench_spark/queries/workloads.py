@@ -212,13 +212,9 @@ def csv_refresh_view(spark, sf_dir):
     from lhbench_spark.workloads import refresh as rw
 
     work = _tf.mkdtemp(prefix="lhbench_csvrv_")
-    rw.write_staging_csv(rw.stage_lineitem_delta(spark, sf_dir, 1), f"{work}/li")
-    rw.write_staging_csv(rw.stage_orders_delta(spark, sf_dir, 1), f"{work}/o")
-    li_delta = rw.read_staging_csv(spark, f"{work}/li", rw.LINEITEM_STAGING_SCHEMA)
-    o_delta = rw.read_staging_csv(spark, f"{work}/o", rw.ORDERS_STAGING_SCHEMA)
     rv = rw.refresh_view(
-        li_delta,
-        o_delta,
+        rw.csv_round_trip(spark, rw.stage_lineitem_delta(spark, sf_dir, 1), f"{work}/li"),
+        rw.csv_round_trip(spark, rw.stage_orders_delta(spark, sf_dir, 1), f"{work}/o"),
         table(spark, sf_dir, "customer"),
         table(spark, sf_dir, "nation"),
         table(spark, sf_dir, "supplier"),
@@ -369,8 +365,9 @@ def csv_refresh_parts_view(spark, sf_dir):
     from lhbench_spark.workloads import refresh as rw
 
     work = _tf.mkdtemp(prefix="lhbench_csvrv2_")
-    rw.write_staging_csv(rw.stage_lineitem_delta(spark, sf_dir, 1), f"{work}/li")
-    li_delta = rw.read_staging_csv(spark, f"{work}/li", rw.LINEITEM_STAGING_SCHEMA)
+    li_delta = rw.csv_round_trip(
+        spark, rw.stage_lineitem_delta(spark, sf_dir, 1), f"{work}/li"
+    )
     rv = rw.refresh_view_parts(
         li_delta, table(spark, sf_dir, "part"), table(spark, sf_dir, "supplier")
     )

@@ -18,13 +18,12 @@ to expose (Delta was 7-20× faster at 200k files, README.md:43-46).
 from __future__ import annotations
 
 import tempfile
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lhbench_spark.harness import BenchmarkReport
+from lhbench_spark.harness import BenchmarkReport, BenchmarkRunner
 from lhbench_spark.tables import ManagedTable
 from lhbench_spark.workloads.merge_micro import gen_table
 
@@ -44,21 +43,6 @@ class FileCountConfig:
 # under test is file COUNT (manifest size + file-index construction),
 # not bytes scanned.
 DEEP_GRID = (16, 64, 256, 1024, 4096, 16384)
-
-
-def _planning_ms(df: DataFrame) -> float:
-    """Force analysis → optimization → physical planning without
-    executing a job (the :305-336 listener's query-start→first-job-start
-    window, measured directly)."""
-    t0 = time.monotonic_ns()
-    df._jdf.queryExecution().executedPlan()
-    return (time.monotonic_ns() - t0) / 1e6
-
-
-def _exec_ms(df: DataFrame) -> float:
-    t0 = time.monotonic_ns()
-    df.collect()
-    return (time.monotonic_ns() - t0) / 1e6
 
 
 def four_queries(t: ManagedTable) -> dict[str, "Callable[[], DataFrame]"]:
@@ -82,10 +66,16 @@ def four_queries(t: ManagedTable) -> dict[str, "Callable[[], DataFrame]"]:
 
 
 def run(spark: SparkSession, cfg: FileCountConfig | None = None) -> BenchmarkReport:
+    """Per file count: write the table, then time each of the four reads
+    ``cfg.iterations`` times through ``BenchmarkRunner.run_query``. Plan
+    is its ``planning_ms`` (frame construction, manifest walk and pruning,
+    Catalyst, before any job); exec is the rest of the window. Each
+    metric keeps the minimum over iterations."""
     cfg = cfg or FileCountConfig()
     report = BenchmarkReport(
         benchmark_id="file-count", specs={"rows": str(cfg.rows)}
     )
+    runner = BenchmarkRunner(spark)
     base = gen_table(spark, cfg.rows, 32)
     if cfg.randomize:
         base = (
@@ -94,27 +84,31 @@ def run(spark: SparkSession, cfg: FileCountConfig | None = None) -> BenchmarkRep
         )
     for n_files in cfg.file_counts:
         root = tempfile.mkdtemp(prefix=f"lhbench_fc_{n_files}_") + "/t"
-        t0 = time.monotonic_ns()
-        t = ManagedTable.create(
-            spark, root, base, cluster_by=("key",), num_files=n_files
+        res = runner.run_query(
+            f"write-{n_files}",
+            lambda: ManagedTable.create(
+                spark, root, base, cluster_by=("key",), num_files=n_files
+            ).detail(),
         )
-        report.report_extra_metric(
-            f"write-{n_files}-seconds", (time.monotonic_ns() - t0) / 1e9
-        )
-        for qname, mk in four_queries(t).items():
-            plans, execs = [], []
-            for _ in range(cfg.iterations):
-                t0 = time.monotonic_ns()
-                df = mk()
-                construct_ms = (time.monotonic_ns() - t0) / 1e6
-                plans.append(construct_ms + _planning_ms(df))
-                execs.append(_exec_ms(df))
+        if res.error_msg:
+            raise RuntimeError(f"file_count: write {n_files} failed: {res.error_msg}")
+        report.report_extra_metric(f"write-{n_files}-seconds", res.duration_ms / 1e3)
+        for qname, mk in four_queries(ManagedTable(spark, root)).items():
+            runs = [
+                runner.run_query(f"{qname}-{n_files}", mk, it)
+                for it in range(1, cfg.iterations + 1)
+            ]
+            errs = [r.error_msg for r in runs if r.error_msg]
+            if errs:
+                raise RuntimeError(f"file_count: {qname}-{n_files} failed: {errs[0]}")
             report.report_extra_metric(
-                f"{qname}-{n_files}-plan-ms", min(plans)
+                f"{qname}-{n_files}-plan-ms", min(r.planning_ms for r in runs)
             )
             report.report_extra_metric(
-                f"{qname}-{n_files}-exec-ms", min(execs)
+                f"{qname}-{n_files}-exec-ms",
+                min(r.duration_ms - r.planning_ms for r in runs),
             )
+    report.query_results = runner.results
     return report
 
 

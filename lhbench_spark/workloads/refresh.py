@@ -4,7 +4,11 @@ view → MERGE rounds → before/after queries → compaction.
 Analog of the reference's incremental TPC-DS benchmark
 (reference: IncrementalTPCDSBenchmark.scala:97-351): staging flat files
 are pipe-delimited, headerless CSV read with an EXPLICIT StructType
-(:422-443 — no inference, char(N) normalized to string), the refresh
+(:422-443 — no inference). The reference states its schemas by hand
+because dsdgen, outside Spark, writes its files; here the same process
+writes every staging file, so ``write_staging_csv`` returns the staged
+frame's own schema and every read passes it back (timestamps travel as
+formatted strings, char(N) is plain string). The refresh
 content is produced by a join-dense view over the staged deltas
 (TPCDSRefreshSchema.scala:566-845 — the 7 crv/csv/…/wsv views), each
 round MERGEs the delta into the base table on its key (:259-283), and
@@ -23,56 +27,20 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StructType
 
 from lhbench_spark.catalog import table
 from lhbench_spark.functions.numeric import dsum
 from lhbench_spark.harness import BenchmarkReport, BenchmarkRunner
 from lhbench_spark.tables import ManagedTable
 
-# Explicit staging schemas (IncrementalTPCDSBenchmark.scala:430-440 read
-# path; TPCDSRefreshSchema.scala StructType style). Timestamps travel as
-# formatted strings — the reference's dsdgen files are all text, and
-# char(N)→string normalization applies (:436-437).
-LINEITEM_STAGING_SCHEMA = StructType(
-    [
-        StructField("l_orderkey", LongType()),
-        StructField("l_partkey", LongType()),
-        StructField("l_suppkey", LongType()),
-        StructField("l_linenumber", IntegerType()),
-        StructField("l_quantity", DoubleType()),
-        StructField("l_extendedprice", DoubleType()),
-        StructField("l_discount", DoubleType()),
-        StructField("l_tax", DoubleType()),
-        StructField("l_returnflag", StringType()),
-        StructField("l_linestatus", StringType()),
-        StructField("l_shipdate_s", StringType()),
-    ]
-)
 
-ORDERS_STAGING_SCHEMA = StructType(
-    [
-        StructField("o_orderkey", LongType()),
-        StructField("o_custkey", LongType()),
-        StructField("o_orderstatus", StringType()),
-        StructField("o_totalprice", DoubleType()),
-        StructField("o_orderdate_s", StringType()),
-        StructField("o_orderpriority", StringType()),
-    ]
-)
-
-
-def write_staging_csv(df: DataFrame, path: str) -> None:
+def write_staging_csv(df: DataFrame, path: str) -> StructType:
     """Pipe-delimited, headerless flat files — the dsdgen format
-    (IncrementalTPCDSBenchmark.scala:430-432)."""
+    (IncrementalTPCDSBenchmark.scala:430-432). Returns the schema it
+    wrote, the explicit schema to read the files back with."""
     df.write.option("delimiter", "|").option("header", "false").csv(path)
+    return df.schema
 
 
 def read_staging_csv(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
@@ -84,6 +52,11 @@ def read_staging_csv(spark: SparkSession, path: str, schema: StructType) -> Data
         .schema(schema)
         .load(path)
     )
+
+
+def csv_round_trip(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
+    """Stage ``df`` at ``path`` and scan it back with the schema written."""
+    return read_staging_csv(spark, path, write_staging_csv(df, path))
 
 
 def stage_lineitem_delta(spark: SparkSession, sf_dir: str, round_no: int) -> DataFrame:
@@ -219,16 +192,16 @@ def run(spark: SparkSession, sf_dir: str, cfg: RefreshConfig | None = None) -> B
     part = table(spark, sf_dir, "part")
     for i in range(1, cfg.rounds + 1):
         li_dir, o_dir = f"{work}/stage/li_{i}", f"{work}/stage/o_{i}"
-        write_staging_csv(stage_lineitem_delta(spark, sf_dir, i), li_dir)
-        write_staging_csv(stage_orders_delta(spark, sf_dir, i), o_dir)
+        li = (li_dir, write_staging_csv(stage_lineitem_delta(spark, sf_dir, i), li_dir))
+        o = (o_dir, write_staging_csv(stage_orders_delta(spark, sf_dir, i), o_dir))
 
         # refresh-view pass per round: the reference computes the staged
         # refresh content through the join-dense views before merging
         # (TPCDSRefreshSchema.scala:566-845); time the 7-join chain here.
-        def view_round(li_dir=li_dir, o_dir=o_dir) -> DataFrame:
+        def view_round(li=li, o=o) -> DataFrame:
             rv = refresh_view(
-                read_staging_csv(spark, li_dir, LINEITEM_STAGING_SCHEMA),
-                read_staging_csv(spark, o_dir, ORDERS_STAGING_SCHEMA),
+                read_staging_csv(spark, *li),
+                read_staging_csv(spark, *o),
                 customer, nation, supplier, region, part,
             )
             return rv.agg(
@@ -237,8 +210,8 @@ def run(spark: SparkSession, sf_dir: str, cfg: RefreshConfig | None = None) -> B
 
         runner.run_query(f"view-{i}", view_round)
 
-        def merge_round(li_dir=li_dir, o_dir=o_dir) -> DataFrame:
-            li_delta = read_staging_csv(spark, li_dir, LINEITEM_STAGING_SCHEMA)
+        def merge_round(li=li) -> DataFrame:
+            li_delta = read_staging_csv(spark, *li)
             delta = li_delta.select(
                 (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("l_linekey"),
                 "l_orderkey",

@@ -11,10 +11,16 @@ tables (store_sales / web_sales / catalog_sales / store_returns /
 web_returns / catalog_returns / inventory, matching the ssv / wsv / csv
 / srv / wrv / crv / iv view roster of TPCDSRefreshSchema.scala:566-845),
 each with its own staged CSV delta, its own join-dense refresh view
-through its own dimension chain, and its own MERGE per round.
+through its own dimension chain, and its own MERGE per round. One table,
+``CHAINS``, wires those seven views and the seven reference-density
+chains (staging producer, view, dims); ``stage_chain`` and
+``chain_view`` drive both the runner below and the gate queries.
 
 Scale notes (same discipline as refresh.py): staging scans are
-explicit-schema CSV (no inference job); each view is left-outer joins
+explicit-schema CSV (no inference job). The reference states its
+staging schemas by hand (TPCDSRefreshSchema.scala:24-561) because
+dsdgen writes its files; here every read passes the schema the staging
+frame was written with. Each view is left-outer joins
 where only AQE decides dimension strategy (deltas are the small side
 after a round — forced dim broadcasts would OOM at 100×); merges are
 file-level CoW on key-clustered tables, cost O(touched files + delta).
@@ -23,73 +29,49 @@ file-level CoW on key-clustered tables, cost O(touched files + delta).
 from __future__ import annotations
 
 import tempfile
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from lhbench_spark.functions.numeric import dsum
 from lhbench_spark.harness import BenchmarkReport, BenchmarkRunner
 from lhbench_spark.tables import ManagedTable
-from lhbench_spark.tpcds_data import generate_frame, materialize
+from lhbench_spark.tpcds_data import materialize
 from lhbench_spark.workloads.refresh import read_staging_csv, write_staging_csv
 
 # Surrogate upsert key per fact: the natural key's columns folded
 # base-10000 (items within one ticket/order are distinct by
 # construction; warehouse count << 10000) — the single-column merge key
-# the manifest table clusters on, like refresh.py's l_linekey. `bump`
+# the manifest table clusters on, like refresh.py's l_linekey. A round's
+# delta is the slice of the key's first column ≡ round (mod 7); `bump`
 # is the integer measure each refresh round increments by 100 (the
-# dsdgen refresh-file analog, CSV-exact, decimal-rule-free); `measure`
-# is the view column the per-round view query aggregates.
+# dsdgen refresh-file analog, CSV-exact, decimal-rule-free).
 FACTS: dict[str, dict] = {
     "store_sales": {
-        "prefix": "ss",
-        "key": ("ss_ticket_number", "ss_item_sk"),
-        "slice_col": "ss_ticket_number",
-        "bump": "ss_quantity",
-        "measure": "ext_sales",
+        "prefix": "ss", "key": ("ss_ticket_number", "ss_item_sk"), "bump": "ss_quantity",
     },
     "web_sales": {
-        "prefix": "ws",
-        "key": ("ws_order_number", "ws_item_sk"),
-        "slice_col": "ws_order_number",
-        "bump": "ws_quantity",
-        "measure": "ext_sales",
+        "prefix": "ws", "key": ("ws_order_number", "ws_item_sk"), "bump": "ws_quantity",
     },
     "catalog_sales": {
-        "prefix": "cs",
-        "key": ("cs_order_number", "cs_item_sk"),
-        "slice_col": "cs_order_number",
-        "bump": "cs_quantity",
-        "measure": "ext_sales",
+        "prefix": "cs", "key": ("cs_order_number", "cs_item_sk"), "bump": "cs_quantity",
     },
     "store_returns": {
-        "prefix": "sr",
-        "key": ("sr_ticket_number", "sr_item_sk"),
-        "slice_col": "sr_ticket_number",
-        "bump": "sr_return_quantity",
-        "measure": "ret_amt",
+        "prefix": "sr", "key": ("sr_ticket_number", "sr_item_sk"), "bump": "sr_return_quantity",
     },
     "web_returns": {
-        "prefix": "wr",
-        "key": ("wr_order_number", "wr_item_sk"),
-        "slice_col": "wr_order_number",
-        "bump": "wr_return_quantity",
-        "measure": "ret_amt",
+        "prefix": "wr", "key": ("wr_order_number", "wr_item_sk"), "bump": "wr_return_quantity",
     },
     "catalog_returns": {
-        "prefix": "cr",
-        "key": ("cr_order_number", "cr_item_sk"),
-        "slice_col": "cr_order_number",
-        "bump": "cr_return_quantity",
-        "measure": "ret_amt",
+        "prefix": "cr", "key": ("cr_order_number", "cr_item_sk"), "bump": "cr_return_quantity",
     },
     "inventory": {
         "prefix": "inv",
         "key": ("inv_date_sk", "inv_item_sk", "inv_warehouse_sk"),
-        "slice_col": "inv_date_sk",
         "bump": "inv_quantity_on_hand",
-        "measure": "qoh",
     },
 }
 
@@ -126,19 +108,13 @@ def stage_delta(
     the key is derived after the staged read, like dsdgen's)."""
     meta = FACTS[fact]
     df = fact_frame(spark, sf_dir, fact)
-    out = df.filter((F.col(meta["slice_col"]) % 7) == (round_no % 7)).withColumn(
+    out = df.filter((F.col(meta["key"][0]) % 7) == (round_no % 7)).withColumn(
         meta["bump"], F.col(meta["bump"]) + 100
     )
     promo = f"{meta['prefix']}_promo_sk"
     if promo in df.columns:
         out = out.withColumn(promo, F.lit(1))
     return out
-
-
-def staging_schema(spark: SparkSession, sf_dir: str, fact: str):
-    """Explicit staging StructType = the fact's own schema (all columns
-    CSV-safe: int/bigint/decimal; no inference pass at read)."""
-    return fact_frame(spark, sf_dir, fact).schema
 
 
 def _dim(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -352,7 +328,7 @@ def stage_catalog_pair(
         cp, delta.cs_catalog_page_sk == cp.cp_catalog_page_sk, "left"
     ).select(
         F.col("cs_order_number").alias("clin_order_id"),
-        F.col("cs_item_sk").alias("clin_item_sk"),
+        F.col("cs_item_sk").cast("int").alias("clin_item_sk"),
         F.col("cs_quantity").alias("clin_quantity"),
         F.col("cs_sales_price").alias("clin_sales_price"),
         F.col("cs_coupon_amt").alias("clin_coupon_amt"),
@@ -364,41 +340,6 @@ def stage_catalog_pair(
         F.col("cs_warehouse_sk").alias("clin_warehouse_sk"),
     )
     return hdr, lin
-
-
-def catalog_order_schema() -> "StructType":
-    from pyspark.sql.types import (
-        DateType, IntegerType, LongType, StringType, StructField, StructType,
-    )
-    return StructType([
-        StructField("cord_order_id", LongType()),
-        StructField("cord_order_date", DateType()),
-        StructField("cord_order_time", IntegerType()),
-        StructField("cord_bill_customer_id", StringType()),
-        StructField("cord_ship_customer_id", StringType()),
-        StructField("cord_call_center_id", StringType()),
-        StructField("cord_ship_mode_id", StringType()),
-    ])
-
-
-def catalog_lineitem_schema() -> "StructType":
-    from pyspark.sql.types import (
-        DateType, DecimalType, IntegerType, LongType, StringType,
-        StructField, StructType,
-    )
-    return StructType([
-        StructField("clin_order_id", LongType()),
-        StructField("clin_item_sk", IntegerType()),
-        StructField("clin_quantity", IntegerType()),
-        StructField("clin_sales_price", DecimalType(12, 2)),
-        StructField("clin_coupon_amt", DecimalType(12, 2)),
-        StructField("clin_ship_cost", DecimalType(12, 2)),
-        StructField("clin_ship_date", DateType()),
-        StructField("clin_catalog_number", IntegerType()),
-        StructField("clin_catalog_page_number", IntegerType()),
-        StructField("clin_promotion_id", StringType()),
-        StructField("clin_warehouse_sk", IntegerType()),
-    ])
 
 
 def csv_dense_view(
@@ -509,7 +450,7 @@ def stage_web_pair(
     )
     lin = delta.select(
         F.col("ws_order_number").alias("wlin_order_id"),
-        F.col("ws_item_sk").alias("wlin_item_sk"),
+        F.col("ws_item_sk").cast("int").alias("wlin_item_sk"),
         F.col("ws_quantity").alias("wlin_quantity"),
         F.col("ws_sales_price").alias("wlin_sales_price"),
         F.col("ws_coupon_amt").alias("wlin_coupon_amt"),
@@ -520,40 +461,6 @@ def stage_web_pair(
         _sk_to_id("ws_promo_sk", "PROMO", 6).alias("wlin_promotion_id"),
     )
     return hdr, lin
-
-
-def web_order_schema() -> "StructType":
-    from pyspark.sql.types import (
-        DateType, IntegerType, LongType, StringType, StructField, StructType,
-    )
-    return StructType([
-        StructField("word_order_id", LongType()),
-        StructField("word_order_date", DateType()),
-        StructField("word_order_time", IntegerType()),
-        StructField("word_bill_customer_id", StringType()),
-        StructField("word_ship_customer_id", StringType()),
-        StructField("word_web_site_id", StringType()),
-        StructField("word_ship_mode_id", StringType()),
-    ])
-
-
-def web_lineitem_schema() -> "StructType":
-    from pyspark.sql.types import (
-        DateType, DecimalType, IntegerType, LongType, StringType,
-        StructField, StructType,
-    )
-    return StructType([
-        StructField("wlin_order_id", LongType()),
-        StructField("wlin_item_sk", IntegerType()),
-        StructField("wlin_quantity", IntegerType()),
-        StructField("wlin_sales_price", DecimalType(12, 2)),
-        StructField("wlin_coupon_amt", DecimalType(12, 2)),
-        StructField("wlin_ship_cost", DecimalType(12, 2)),
-        StructField("wlin_ship_date", DateType()),
-        StructField("wlin_web_page_id", StringType()),
-        StructField("wlin_warehouse_sk", IntegerType()),
-        StructField("wlin_promotion_id", StringType()),
-    ])
 
 
 def wsv_dense_view(
@@ -652,41 +559,13 @@ def stage_store_pair(
     )
     lin = delta.select(
         F.col("ss_ticket_number").alias("plin_purchase_id"),
-        F.col("ss_item_sk").alias("plin_item_sk"),
+        F.col("ss_item_sk").cast("int").alias("plin_item_sk"),
         F.col("ss_quantity").alias("plin_quantity"),
         F.col("ss_sales_price").alias("plin_sale_price"),
         F.col("ss_coupon_amt").alias("plin_coupon_amt"),
         _sk_to_id("ss_promo_sk", "PROMO", 6).alias("plin_promotion_id"),
     )
     return hdr, lin
-
-
-def purchase_order_schema() -> "StructType":
-    from pyspark.sql.types import (
-        DateType, IntegerType, LongType, StringType, StructField, StructType,
-    )
-    return StructType([
-        StructField("purc_purchase_id", LongType()),
-        StructField("purc_purchase_date", DateType()),
-        StructField("purc_purchase_time", IntegerType()),
-        StructField("purc_customer_id", StringType()),
-        StructField("purc_store_id", StringType()),
-    ])
-
-
-def purchase_lineitem_schema() -> "StructType":
-    from pyspark.sql.types import (
-        DecimalType, IntegerType, LongType, StringType, StructField,
-        StructType,
-    )
-    return StructType([
-        StructField("plin_purchase_id", LongType()),
-        StructField("plin_item_sk", IntegerType()),
-        StructField("plin_quantity", IntegerType()),
-        StructField("plin_sale_price", DecimalType(12, 2)),
-        StructField("plin_coupon_amt", DecimalType(12, 2)),
-        StructField("plin_promotion_id", StringType()),
-    ])
 
 
 def ssv_dense_view(
@@ -761,7 +640,7 @@ def stage_returns_flat(
         F.col("sr_ticket_number").alias("sret_ticket_number"),
         _sk_to_date("sr_returned_date_sk").alias("sret_return_date"),
         hhmmss.alias("sret_return_time"),
-        F.col("sr_item_sk").alias("sret_item_sk"),
+        F.col("sr_item_sk").cast("int").alias("sret_item_sk"),
         _sk_to_id("sr_customer_sk", "CUST", 10).alias("sret_customer_id"),
         _sk_to_id("sr_store_sk", "STORE", 4).alias("sret_store_id"),
         _sk_to_id("sr_reason_sk", "REASON", 4).alias("sret_reason_id"),
@@ -769,25 +648,6 @@ def stage_returns_flat(
         F.col("sr_return_amt").alias("sret_return_amt"),
         F.col("sr_net_loss").alias("sret_net_loss"),
     )
-
-
-def returns_flat_schema() -> "StructType":
-    from pyspark.sql.types import (
-        DateType, DecimalType, IntegerType, LongType, StringType,
-        StructField, StructType,
-    )
-    return StructType([
-        StructField("sret_ticket_number", LongType()),
-        StructField("sret_return_date", DateType()),
-        StructField("sret_return_time", StringType()),
-        StructField("sret_item_sk", IntegerType()),
-        StructField("sret_customer_id", StringType()),
-        StructField("sret_store_id", StringType()),
-        StructField("sret_reason_id", StringType()),
-        StructField("sret_return_qty", IntegerType()),
-        StructField("sret_return_amt", DecimalType(12, 2)),
-        StructField("sret_net_loss", DecimalType(12, 2)),
-    ])
 
 
 def srv_dense_view(
@@ -869,7 +729,7 @@ def stage_web_returns_flat(
         F.col("wr_order_number").alias("wret_order_id"),
         _sk_to_date("wr_returned_date_sk").alias("wret_return_date"),
         _hhmmss(sec).alias("wret_return_time"),
-        F.col("wr_item_sk").alias("wret_item_sk"),
+        F.col("wr_item_sk").cast("int").alias("wret_item_sk"),
         _sk_to_id("wr_returning_customer_sk", "CUST", 10).alias(
             "wret_return_customer_id"
         ),
@@ -881,27 +741,6 @@ def stage_web_returns_flat(
         F.col("wr_refunded_cash").alias("wret_refunded_cash"),
         F.col("wr_net_loss").alias("wret_net_loss"),
     )
-
-
-def web_returns_flat_schema() -> "StructType":
-    from pyspark.sql.types import (
-        DateType, DecimalType, IntegerType, LongType, StringType,
-        StructField, StructType,
-    )
-    return StructType([
-        StructField("wret_order_id", LongType()),
-        StructField("wret_return_date", DateType()),
-        StructField("wret_return_time", StringType()),
-        StructField("wret_item_sk", IntegerType()),
-        StructField("wret_return_customer_id", StringType()),
-        StructField("wret_reason_id", StringType()),
-        StructField("wret_web_page_id", StringType()),
-        StructField("wret_return_qty", IntegerType()),
-        StructField("wret_return_amt", DecimalType(12, 2)),
-        StructField("wret_return_fee", DecimalType(12, 2)),
-        StructField("wret_refunded_cash", DecimalType(12, 2)),
-        StructField("wret_net_loss", DecimalType(12, 2)),
-    ])
 
 
 def wrv_dense_view(
@@ -964,7 +803,7 @@ def stage_catalog_returns_flat(
         F.col("cr_order_number").alias("cret_order_id"),
         _sk_to_date("cr_returned_date_sk").alias("cret_return_date"),
         _hhmmss(sec).alias("cret_return_time"),
-        F.col("cr_item_sk").alias("cret_item_sk"),
+        F.col("cr_item_sk").cast("int").alias("cret_item_sk"),
         _sk_to_id("cr_returning_customer_sk", "CUST", 10).alias(
             "cret_return_customer_id"
         ),
@@ -979,28 +818,6 @@ def stage_catalog_returns_flat(
         F.col("cr_store_credit").alias("cret_merchant_credit"),
         F.col("cr_net_loss").alias("cret_net_loss"),
     )
-
-
-def catalog_returns_flat_schema() -> "StructType":
-    from pyspark.sql.types import (
-        DateType, DecimalType, IntegerType, LongType, StringType,
-        StructField, StructType,
-    )
-    return StructType([
-        StructField("cret_order_id", LongType()),
-        StructField("cret_return_date", DateType()),
-        StructField("cret_return_time", StringType()),
-        StructField("cret_item_sk", IntegerType()),
-        StructField("cret_return_customer_id", StringType()),
-        StructField("cret_call_center_id", StringType()),
-        StructField("cret_catalog_page_id", StringType()),
-        StructField("cret_return_qty", IntegerType()),
-        StructField("cret_return_amt", DecimalType(12, 2)),
-        StructField("cret_refunded_cash", DecimalType(12, 2)),
-        StructField("cret_reversed_charge", DecimalType(12, 2)),
-        StructField("cret_merchant_credit", DecimalType(12, 2)),
-        StructField("cret_net_loss", DecimalType(12, 2)),
-    ])
 
 
 def crv_dense_view(
@@ -1068,18 +885,6 @@ def stage_inventory_flat(
     )
 
 
-def inventory_flat_schema() -> "StructType":
-    from pyspark.sql.types import (
-        DateType, IntegerType, StringType, StructField, StructType,
-    )
-    return StructType([
-        StructField("invn_date", DateType()),
-        StructField("invn_item_sk", IntegerType()),
-        StructField("invn_warehouse_name", StringType()),
-        StructField("invn_qty_on_hand", IntegerType()),
-    ])
-
-
 def iv_dense_view(
     flat: DataFrame,
     date_dim: DataFrame,
@@ -1109,6 +914,154 @@ def iv_dense_view(
     )
 
 
+# A chain's staged files for one round: (path, schema written) per file.
+Staged = list[tuple[str, StructType]]
+
+
+def _fact_delta(fact: str) -> Callable[[SparkSession, str, int], DataFrame]:
+    return lambda spark, sf_dir, round_no: stage_delta(spark, sf_dir, fact, round_no)
+
+
+@dataclass(frozen=True)
+class Chain:
+    """One refresh chain: ``stage(spark, sf_dir, round)`` builds its
+    staging frame(s), ``view(*staged, *dims)`` folds them through the
+    named dims (in argument order), ``totals`` names what the runner's
+    step sums — a decimal measure and its alias, then optionally a key
+    column summed as bigint and its alias — and ``every_round`` says the
+    runner refreshes the chain every round, not only in round 1."""
+
+    stage: Callable[..., DataFrame | tuple[DataFrame, ...]]
+    view: Callable[..., DataFrame]
+    dims: tuple[str, ...]
+    totals: tuple[str, ...]
+    every_round: bool = False
+
+
+# The seven reference-density chains, then the seven fact views, keyed by
+# fact because their staged delta also feeds the fact's MERGE. Runner order.
+CHAINS: dict[str, Chain] = {
+    "csv_dense": Chain(
+        stage_catalog_pair, csv_dense_view,
+        ("date_dim", "time_dim", "customer", "call_center", "ship_mode", "catalog_page",
+         "warehouse", "item", "promotion"),
+        ("cs_ext_sales_price", "sales_sum", "cs_bill_customer_sk", "bill_sk_sum"),
+        every_round=True,
+    ),
+    "wsv_dense": Chain(
+        stage_web_pair, wsv_dense_view,
+        ("date_dim", "time_dim", "customer", "web_site", "ship_mode", "web_page",
+         "warehouse", "item", "promotion"),
+        ("ws_ext_sales_price", "sales_sum", "ws_bill_customer_sk", "bill_sk_sum"),
+    ),
+    "ssv_dense": Chain(
+        stage_store_pair, ssv_dense_view,
+        ("date_dim", "time_dim", "customer", "store", "item", "promotion"),
+        ("ss_ext_sales_price", "sales_sum", "ss_customer_sk", "cust_sk_sum"),
+    ),
+    "srv_dense": Chain(
+        stage_returns_flat, srv_dense_view,
+        ("date_dim", "time_dim", "customer", "store", "item", "reason"),
+        ("sr_return_amt", "amt_sum", "sr_customer_sk", "cust_sk_sum"),
+    ),
+    "wrv_dense": Chain(
+        stage_web_returns_flat, wrv_dense_view,
+        ("date_dim", "time_dim", "customer", "item", "reason", "web_page"),
+        ("wr_return_amt", "amt_sum", "wr_returning_customer_sk", "cust_sk_sum"),
+    ),
+    "crv_dense": Chain(
+        stage_catalog_returns_flat, crv_dense_view,
+        ("date_dim", "time_dim", "customer", "item", "call_center", "catalog_page"),
+        ("cr_return_amount", "amt_sum", "cr_returning_customer_sk", "cust_sk_sum"),
+    ),
+    "iv_dense": Chain(
+        stage_inventory_flat, iv_dense_view,
+        ("date_dim", "item", "warehouse"),
+        ("inv_quantity_on_hand", "qoh_sum", "inv_item_sk", "item_sk_sum"),
+    ),
+    "store_sales": Chain(
+        _fact_delta("store_sales"), ssv_view,
+        ("date_dim", "store", "item", "customer", "customer_address"),
+        ("ext_sales", "measure_sum"), every_round=True,
+    ),
+    "web_sales": Chain(
+        _fact_delta("web_sales"), wsv_view,
+        ("date_dim", "item", "customer", "customer_address"),
+        ("ext_sales", "measure_sum"), every_round=True,
+    ),
+    "catalog_sales": Chain(
+        _fact_delta("catalog_sales"), csv_view,
+        ("date_dim", "item", "customer_demographics", "promotion"),
+        ("ext_sales", "measure_sum"), every_round=True,
+    ),
+    "store_returns": Chain(
+        _fact_delta("store_returns"), srv_view,
+        ("date_dim", "store", "item", "reason"),
+        ("ret_amt", "measure_sum"), every_round=True,
+    ),
+    "web_returns": Chain(
+        _fact_delta("web_returns"), wrv_view,
+        ("date_dim", "item", "customer", "customer_address"),
+        ("ret_amt", "measure_sum"), every_round=True,
+    ),
+    "catalog_returns": Chain(
+        _fact_delta("catalog_returns"), crv_view,
+        ("date_dim", "item", "customer"),
+        ("ret_amt", "measure_sum"), every_round=True,
+    ),
+    "inventory": Chain(
+        _fact_delta("inventory"), iv_view,
+        ("date_dim", "item", "warehouse"),
+        ("qoh", "measure_sum"), every_round=True,
+    ),
+}
+
+
+def stage_chain(
+    spark: SparkSession, sf_dir: str, name: str, round_no: int, work: str
+) -> Staged:
+    """Write one round of chain ``name``'s staging files under ``work``
+    (outside any timed window in the runner)."""
+    frames = CHAINS[name].stage(spark, sf_dir, round_no)
+    if isinstance(frames, DataFrame):
+        frames = (frames,)
+    paths = [f"{work}/{name}_{round_no}_{j}" for j in range(len(frames))]
+    return [(p, write_staging_csv(df, p)) for p, df in zip(paths, frames)]
+
+
+def chain_view(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    staged: Staged,
+    dims: dict[str, DataFrame] | None = None,
+) -> DataFrame:
+    """Chain ``name``'s refresh view over its staged files; each dim comes
+    from ``dims`` when given there, else is read here."""
+    dims = dims or {}
+    chain = CHAINS[name]
+    return chain.view(
+        *(read_staging_csv(spark, path, schema) for path, schema in staged),
+        *(dims[d] if d in dims else _dim(spark, sf_dir, d) for d in chain.dims),
+    )
+
+
+def merge_staged(spark: SparkSession, t: ManagedTable, fact: str, staged: Staged) -> dict:
+    """MERGE a fact's staged delta into its managed table on the
+    surrogate key (derived after the staged read, like dsdgen's)."""
+    delta = read_staging_csv(spark, *staged[0])
+    keyed = delta.select(_key_col(fact), *delta.columns).select(*t.read().columns)
+    return t.merge(keyed, on=[f"{FACTS[fact]['prefix']}_key"], validate_unique=False)
+
+
+def _totals(chain: Chain) -> list[F.Column]:
+    measure, alias, *key = chain.totals
+    cols = [F.count(F.lit(1)).alias("cnt"), dsum(measure).alias(alias)]
+    if key:
+        cols.append(F.sum(key[0]).cast("bigint").alias(key[1]))
+    return cols
+
+
 @dataclass
 class MultiRefreshConfig:
     rounds: int = 10
@@ -1118,9 +1071,10 @@ def run(
     spark: SparkSession, sf_dir: str, cfg: MultiRefreshConfig | None = None
 ) -> BenchmarkReport:
     """Base-load the seven managed fact tables, then per round: stage
-    the seven CSV deltas, time each fact's refresh view, MERGE each
+    each chain's CSV files, time its refresh view and MERGE each fact
     delta — the reference's refresh loop at full seven-fact breadth
-    (IncrementalTPCDSBenchmark.scala:259-283)."""
+    (IncrementalTPCDSBenchmark.scala:259-283). csv_dense and the seven
+    fact views refresh every round, the other dense chains in round 1."""
     cfg = cfg or MultiRefreshConfig()
     runner = BenchmarkRunner(spark, iterations=1)
     report = BenchmarkReport(
@@ -1143,172 +1097,30 @@ def run(
             raise RuntimeError(f"refresh_tpcds: load {fact} failed: {res.error_msg}")
         tables[fact] = ManagedTable(spark, f"{work}/{fact}")
 
-    dd = _dim(spark, sf_dir, "date_dim")
-    store = _dim(spark, sf_dir, "store")
-    item = _dim(spark, sf_dir, "item")
-    cust = _dim(spark, sf_dir, "customer")
-    addr = _dim(spark, sf_dir, "customer_address")
-    cdemo = _dim(spark, sf_dir, "customer_demographics")
-    promo = _dim(spark, sf_dir, "promotion")
-    reason = _dim(spark, sf_dir, "reason")
-    wh = _dim(spark, sf_dir, "warehouse")
+    # Dims the every-round chains join are read once, outside the timed
+    # windows; a dim only a round-1 chain joins is read in that step.
+    shared = {d for c in CHAINS.values() if c.every_round for d in c.dims}
+    dims = {d: _dim(spark, sf_dir, d) for d in shared}
 
-    views = {
-        "store_sales": lambda d: ssv_view(d, dd, store, item, cust, addr),
-        "web_sales": lambda d: wsv_view(d, dd, item, cust, addr),
-        "catalog_sales": lambda d: csv_view(d, dd, item, cdemo, promo),
-        "store_returns": lambda d: srv_view(d, dd, store, item, reason),
-        "web_returns": lambda d: wrv_view(d, dd, item, cust, addr),
-        "catalog_returns": lambda d: crv_view(d, dd, item, cust),
-        "inventory": lambda d: iv_view(d, dd, item, wh),
-    }
-
-    time_dim = _dim(spark, sf_dir, "time_dim")
-    cc = _dim(spark, sf_dir, "call_center")
-    sm = _dim(spark, sf_dir, "ship_mode")
-    cp = _dim(spark, sf_dir, "catalog_page")
+    def merge_step(fact: str, staged: Staged) -> DataFrame:
+        m = merge_staged(spark, tables[fact], fact, staged)
+        return spark.createDataFrame([tuple(m.values())], list(m.keys()))
 
     for i in range(1, cfg.rounds + 1):
-        # Reference-density catalog chain once per round: stage the
-        # order-header/lineitem pair, fold it through the 12-join
-        # csv_view shape (see csv_dense_view).
-        hdr0, lin0 = stage_catalog_pair(spark, sf_dir, i)
-        hd, ld = f"{work}/stage/cord_{i}", f"{work}/stage/clin_{i}"
-        write_staging_csv(hdr0, hd)
-        write_staging_csv(lin0, ld)
-
-        def dense_round(hd=hd, ld=ld):
-            hdr = read_staging_csv(spark, hd, catalog_order_schema())
-            lin = read_staging_csv(spark, ld, catalog_lineitem_schema())
-            rv = csv_dense_view(
-                hdr, lin, dd, time_dim, cust, cc, sm, cp, wh, item, promo
-            )
-            return rv.agg(
-                F.count(F.lit(1)).alias("cnt"),
-                dsum("cs_ext_sales_price").alias("sales_sum"),
-                F.sum("cs_bill_customer_sk").cast("bigint").alias("bill_sk_sum"),
-            )
-
-        runner.run_query(f"view-csv_dense-{i}", dense_round)
-
-        if i == 1:
-            # The other three reference-density chains once per run
-            # (first round): web/store header-lineitem pairs and the
-            # returns flat file with its HH:MM:SS time decode.
-            whd, wld = f"{work}/stage/word_{i}", f"{work}/stage/wlin_{i}"
-            wh0, wl0 = stage_web_pair(spark, sf_dir, i)
-            write_staging_csv(wh0, whd)
-            write_staging_csv(wl0, wld)
+        for name, chain in CHAINS.items():
+            if i > 1 and not chain.every_round:
+                continue
+            staged = stage_chain(spark, sf_dir, name, i, f"{work}/stage")
             runner.run_query(
-                "view-wsv_dense-1",
-                lambda: wsv_dense_view(
-                    read_staging_csv(spark, whd, web_order_schema()),
-                    read_staging_csv(spark, wld, web_lineitem_schema()),
-                    dd, time_dim, cust,
-                    _dim(spark, sf_dir, "web_site"), sm,
-                    _dim(spark, sf_dir, "web_page"), wh, item, promo,
-                ).agg(
-                    F.count(F.lit(1)).alias("cnt"),
-                    dsum("ws_ext_sales_price").alias("sales_sum"),
-                    F.sum("ws_bill_customer_sk").cast("bigint").alias("bill_sk_sum"),
+                f"view-{name}-{i}",
+                lambda n=name, s=staged: chain_view(spark, sf_dir, n, s, dims).agg(
+                    *_totals(CHAINS[n])
                 ),
             )
-            phd, pld = f"{work}/stage/purc_{i}", f"{work}/stage/plin_{i}"
-            ph0, pl0 = stage_store_pair(spark, sf_dir, i)
-            write_staging_csv(ph0, phd)
-            write_staging_csv(pl0, pld)
-            runner.run_query(
-                "view-ssv_dense-1",
-                lambda: ssv_dense_view(
-                    read_staging_csv(spark, phd, purchase_order_schema()),
-                    read_staging_csv(spark, pld, purchase_lineitem_schema()),
-                    dd, time_dim, cust, store, item, promo,
-                ).agg(
-                    F.count(F.lit(1)).alias("cnt"),
-                    dsum("ss_ext_sales_price").alias("sales_sum"),
-                    F.sum("ss_customer_sk").cast("bigint").alias("cust_sk_sum"),
-                ),
-            )
-            rfd = f"{work}/stage/sret_{i}"
-            write_staging_csv(stage_returns_flat(spark, sf_dir, i), rfd)
-            runner.run_query(
-                "view-srv_dense-1",
-                lambda: srv_dense_view(
-                    read_staging_csv(spark, rfd, returns_flat_schema()),
-                    dd, time_dim, cust, store, item, reason,
-                ).agg(
-                    F.count(F.lit(1)).alias("cnt"),
-                    dsum("sr_return_amt").alias("amt_sum"),
-                    F.sum("sr_customer_sk").cast("bigint").alias("cust_sk_sum"),
-                ),
-            )
-            wrfd = f"{work}/stage/wret_{i}"
-            write_staging_csv(stage_web_returns_flat(spark, sf_dir, i), wrfd)
-            runner.run_query(
-                "view-wrv_dense-1",
-                lambda: wrv_dense_view(
-                    read_staging_csv(spark, wrfd, web_returns_flat_schema()),
-                    dd, time_dim, cust, item, reason,
-                    _dim(spark, sf_dir, "web_page"),
-                ).agg(
-                    F.count(F.lit(1)).alias("cnt"),
-                    dsum("wr_return_amt").alias("amt_sum"),
-                    F.sum("wr_returning_customer_sk").cast("bigint").alias("cust_sk_sum"),
-                ),
-            )
-            crfd = f"{work}/stage/cret_{i}"
-            write_staging_csv(stage_catalog_returns_flat(spark, sf_dir, i), crfd)
-            runner.run_query(
-                "view-crv_dense-1",
-                lambda: crv_dense_view(
-                    read_staging_csv(spark, crfd, catalog_returns_flat_schema()),
-                    dd, time_dim, cust, item, cc, cp,
-                ).agg(
-                    F.count(F.lit(1)).alias("cnt"),
-                    dsum("cr_return_amount").alias("amt_sum"),
-                    F.sum("cr_returning_customer_sk").cast("bigint").alias("cust_sk_sum"),
-                ),
-            )
-            ifd = f"{work}/stage/invn_{i}"
-            write_staging_csv(stage_inventory_flat(spark, sf_dir, i), ifd)
-            runner.run_query(
-                "view-iv_dense-1",
-                lambda: iv_dense_view(
-                    read_staging_csv(spark, ifd, inventory_flat_schema()),
-                    dd, item, wh,
-                ).agg(
-                    F.count(F.lit(1)).alias("cnt"),
-                    dsum("inv_quantity_on_hand").alias("qoh_sum"),
-                    F.sum("inv_item_sk").cast("bigint").alias("item_sk_sum"),
-                ),
-            )
-
-        for fact, meta in FACTS.items():
-            sdir = f"{work}/stage/{fact}_{i}"
-            write_staging_csv(stage_delta(spark, sf_dir, fact, i), sdir)
-            schema = staging_schema(spark, sf_dir, fact)
-
-            def view_round(sdir=sdir, schema=schema, fact=fact, meta=meta):
-                delta = read_staging_csv(spark, sdir, schema)
-                return views[fact](delta).agg(
-                    F.count(F.lit(1)).alias("cnt"),
-                    dsum(meta["measure"]).alias("measure_sum"),
+            if name in tables:
+                runner.run_query(
+                    f"merge-{name}-{i}", lambda n=name, s=staged: merge_step(n, s)
                 )
-
-            runner.run_query(f"view-{fact}-{i}", view_round)
-
-            def merge_round(sdir=sdir, schema=schema, fact=fact, meta=meta):
-                t = tables[fact]
-                delta = read_staging_csv(spark, sdir, schema)
-                keyed = delta.select(_key_col(fact), *delta.columns).select(
-                    *t.read().columns
-                )
-                m = t.merge(
-                    keyed, on=[f"{meta['prefix']}_key"], validate_unique=False
-                )
-                return spark.createDataFrame([tuple(m.values())], list(m.keys()))
-
-            runner.run_query(f"merge-{fact}-{i}", merge_round)
 
     for fact in FACTS:
         runner.run_query(

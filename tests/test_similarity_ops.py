@@ -6,6 +6,7 @@ check lives here)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from lhbench_spark.catalog import table
@@ -191,3 +192,24 @@ def test_ivf_assign_arrow_matches_hof_reference(spark):
     # vec 100 is exactly equidistant from cid 7 and cid 5 (same centroid)
     # and from cid 3 — the 2-probe set must be the two lowest cids {3, 5}
     assert [c for v, c in got if v == 100] == [3, 5]
+
+
+@pytest.mark.parametrize(
+    "bad, got",
+    [(None, "is null"), ([1.0, 2.0, 3.0], "is of length 3")],
+    ids=["null_vector", "wrong_dim_vector"],
+)
+def test_ivf_assign_rejects_vector_outside_contract(spark, bad, got):
+    """A null vector, or one whose length differs from the centroids'
+    dim, fails ivf_assign with a ValueError that names the operator, the
+    offending row's id and the expected dim — not a bare np.stack crash
+    (and never a silent assignment over the wrong number of coords)."""
+    dim = 4
+    rows = [(1, [0.0] * dim), (42, bad), (3, [1.0] * dim)]
+    df = spark.createDataFrame(rows, "vec_id long, _ev array<double>")
+    cents = [(0, [0.0] * dim), (1, [1.0] * dim)]
+    with pytest.raises(Exception) as err:
+        sim.ivf_assign(df.coalesce(1), cents, 1, "vec_id", "_ev").collect()
+    msg = str(err.value)
+    assert "ValueError: ivf_assign: _ev for vec_id=42 " + got in msg
+    assert f"expected dim {dim}" in msg

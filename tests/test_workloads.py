@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 
 from lhbench_spark.workloads import file_count, merge_micro, refresh
+from lhbench_spark.workloads import refresh_tpcds as rt
 from tests.conftest import SMOKE_SF
 
 
@@ -107,6 +108,12 @@ def test_file_count_runner(spark):
     assert len(rep.extra_metrics) == 2 * (1 + 4 * 2)
     for k, v in rep.extra_metrics.items():
         assert v >= 0, k
+    # every step is timed through BenchmarkRunner.run_query: one write and
+    # four reads per grid point, each with its jobs and its planning split
+    assert len(rep.query_results) == 2 * (1 + 4)
+    for r in rep.query_results:
+        assert r.error_msg is None and r.jobs is not None, r.name
+        assert 0 <= r.planning_ms <= r.duration_ms, r.name
 
 
 def test_refresh_runner(spark):
@@ -118,13 +125,10 @@ def test_refresh_runner(spark):
     }
 
 
-@pytest.mark.slow
 def test_refresh_tpcds_multifact_runner(spark):
     """Multi-fact refresh breadth (refresh_tpcds.py): 2 rounds across
     the reference's full seven generated TPC-DS facts (sales + returns
     + inventory) — every load/view/merge/compact step error-free."""
-    from lhbench_spark.workloads import refresh_tpcds as rt
-
     rep = rt.run(spark, SMOKE_SF, rt.MultiRefreshConfig(rounds=2))
     errs = [(r.name, r.error_msg) for r in rep.query_results if r.error_msg]
     assert not errs
@@ -133,6 +137,32 @@ def test_refresh_tpcds_multifact_runner(spark):
     for fact in rt.FACTS:
         assert {f"load-{fact}", f"view-{fact}-1", f"merge-{fact}-2",
                 f"compact-{fact}"} <= names
+
+
+_TPCH_STAGING = {
+    "tpch_lineitem": refresh.stage_lineitem_delta,
+    "tpch_orders": refresh.stage_orders_delta,
+}
+
+
+@pytest.mark.parametrize("producer", [*rt.CHAINS, *_TPCH_STAGING])
+def test_staging_csv_round_trip_is_exact(spark, tmp_path, producer):
+    """Every staging producer — the 7 fact deltas, the 3 header/lineitem
+    pairs and the 4 flat files of refresh_tpcds.CHAINS, and refresh.py's
+    TPC-H lineitem/orders — reads back exactly through the schema
+    write_staging_csv returns (csv_round_trip): the same rows (exceptAll
+    empty both ways, duplicates counted) and the same field types as the
+    staged frame."""
+    stage = rt.CHAINS[producer].stage if producer in rt.CHAINS else _TPCH_STAGING[producer]
+    frames = stage(spark, SMOKE_SF, 1)
+    for j, df in enumerate(frames if isinstance(frames, tuple) else (frames,)):
+        back = refresh.csv_round_trip(spark, df, str(tmp_path / f"staged_{j}"))
+        assert [(f.name, f.dataType) for f in back.schema.fields] == [
+            (f.name, f.dataType) for f in df.schema.fields
+        ]
+        assert df.count() > 0
+        assert back.exceptAll(df).count() == 0
+        assert df.exceptAll(back).count() == 0
 
 
 def test_rand_sample_fraction_sane(spark):
