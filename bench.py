@@ -56,7 +56,7 @@ def main() -> int:
 
     t_start = time.monotonic()
     spark = get_spark("lhbench_spark_bench", cpus=cpus)
-    runner = BenchmarkRunner(spark, iterations=iterations)
+    runner = BenchmarkRunner(spark)
 
     # Untimed warmup: JVM class-loading, whole-stage-codegen compiler, and
     # parquet-source initialization happen once here instead of inside the

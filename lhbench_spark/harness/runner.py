@@ -90,13 +90,9 @@ def upper_median(values: list[float]) -> float:
 class BenchmarkRunner:
     """Time DataFrame-producing callables, one (query, iteration) per
     :meth:`run_query` call; the caller (bench.py's suite loop, a
-    workload's steps) owns the loop.
-
-    ``iterations`` defaults to 3 like the reference
-    (TPCDSBenchmarkConf default, TPCDSBenchmark.scala:37)."""
+    workload's steps) owns the loop."""
 
     spark: SparkSession
-    iterations: int = 3
     ignore_errors: bool = True
     results: list[QueryResult] = field(default_factory=list)
 

@@ -1082,6 +1082,125 @@ class ManagedTable:
             picked = picked.filter(F.col("_ts") == 0).drop("_ts")
         return picked.drop("_rn", "_cv")
 
+    # ---------- DML appliers: every MERGE / DELETE / UPDATE / APPLY CHANGES ----------
+    #
+    # Each DML verb validates its input and matches its rows in its own
+    # terms (keys, predicate, scope, assignments, last action per key),
+    # then describes the change twice: as a rewrite of the files it
+    # touches (copy-on-write) and as a tombstone plus a delta
+    # (merge-on-read). ``_apply`` runs the one description the table's
+    # mode needs and hands it to that mode's applier, which stages,
+    # commits and derives the verb's metrics from the staged footers.
+
+    def _apply(
+        self, operation: str, cow: Callable[[], dict], mor: Callable[[], dict]
+    ) -> dict[str, int] | None:
+        """The one table-mode dispatch of the DML verbs: ``cow()`` returns
+        the keyword arguments of :meth:`_apply_cow`, ``mor()`` those of
+        :meth:`_apply_mor`; only the thunk of this table's mode runs.
+        Returns the committed metrics, or None when the change committed
+        nothing."""
+        m = self.current
+        if self.table_mode == "mor":
+            return self._apply_mor(m, operation, **mor())
+        return self._apply_cow(m, operation, **cow())
+
+    def _apply_cow(
+        self,
+        m: Manifest,
+        operation: str,
+        hits: DataFrame,
+        rebuild: Callable[[DataFrame, int], DataFrame],
+        metrics: Callable[[int, int], dict[str, int]],
+        incoming: tuple[DataFrame, int] | None = None,
+        materialized: bool = False,
+    ) -> dict[str, int] | None:
+        """Copy-on-write applier: rewrite only the files the change touches.
+
+        ``hits`` is the touch probe: the matched rows of the candidate
+        files (already pruned by manifest stats), tagged with ``_file``.
+        ``rebuild(touched, rows)`` maps the touched files' rows, conformed
+        to the table schema, and their row count to the rows that replace
+        them; ``incoming`` adds new rows with their count. Untouched files
+        carry over by reference. The replacement is staged as data files
+        sized by the row bound (touched + incoming rows). On a clustered
+        table the range write would evaluate its lineage twice (sampling
+        + shuffle), so it is materialized once first, at the storage level
+        of that bound (``_ckpt_level``: a 100 TB rewrite set must not pin
+        executor storage memory, r10 VERDICT #5), unless ``rebuild``
+        returns rows it has ``materialized`` itself.
+        ``metrics(touched rows, staged rows)`` gives the verb's
+        footer-derived metrics. A change that touches no file and brings
+        no incoming rows commits nothing (returns None)."""
+        carried, rewritten = self._split_touched(m.files, hits)
+        if not rewritten and incoming is None:
+            return None
+        touched_rows = sum(e.rows for e in rewritten)
+        bound = touched_rows + (incoming[1] if incoming else 0)
+        new_data = incoming[0] if incoming else None
+        if rewritten:
+            kept = rebuild(self._read_conformed(rewritten), touched_rows)
+            new_data = kept if new_data is None else kept.unionByName(new_data)
+        if m.cluster_by and not materialized:
+            new_data = new_data.localCheckpoint(storageLevel=_ckpt_level(bound))
+        added = self._stage(m, new_data, rows=bound)
+        return self._commit(m, operation, carried, added, {
+            **metrics(touched_rows, sum(e.rows for e in added)),
+            "files_rewritten": len(rewritten),
+            "files_added": len(added),
+        })
+
+    def _apply_mor(
+        self,
+        m: Manifest,
+        operation: str,
+        metrics: Callable[[list[FileEntry], list[FileEntry]], dict[str, int]],
+        tombstone: tuple[DataFrame, int] | None = None,
+        delta: tuple[DataFrame, int] | None = None,
+    ) -> dict[str, int] | None:
+        """Merge-on-read applier: rewrite nothing. ``tombstone`` (pk-only
+        key rows) is staged as deletion-vector files and ``delta`` (whole
+        rows) as delta files, each sized by its row bound; every existing
+        file carries over by reference, so write cost is O(change) and
+        reads resolve latest-per-key until OPTIMIZE folds the change in.
+        A side whose staged files hold no row is dropped from the commit
+        (the staged file is orphan garbage, the same class as a losing
+        racer's). ``metrics(tombstone entries, delta entries)`` gives the
+        verb's footer-derived metrics. A change without a delta side that
+        deleted nothing commits nothing (returns None)."""
+
+        def staged(side: tuple[DataFrame, int] | None, kind: str) -> list[FileEntry]:
+            if side is None:
+                return []
+            entries = self._stage(m, side[0], kind, rows=side[1])
+            return entries if any(e.rows for e in entries) else []
+
+        ts, dl = staged(tombstone, "tombstone"), staged(delta, "delta")
+        if not ts and not dl and delta is None:
+            return None
+        return self._commit(m, operation, m.files, ts + dl, {
+            **metrics(ts, dl),
+            "files_rewritten": 0,
+            "files_added": len(ts) + len(dl),
+        })
+
+    def _key_probe(
+        self, target: DataFrame, keys: list[str], skeys: DataFrame
+    ) -> tuple[DataFrame, DataFrame]:
+        """(probe, hits) of a key-matched CoW change (merge, apply_changes).
+        ``probe`` reads the files that may hold a key of ``skeys``
+        (``_maybe_prune_candidates``), conformed to the full table schema;
+        ``hits`` are its rows whose key is in ``skeys``, tagged with
+        ``_file``. No forced broadcast on the key set: the reference's
+        refresh merges touch ~3% of the base table per round
+        (experiment-instructions.md:277-296) — billions of keys at 100 TB,
+        far beyond broadcast; AQE broadcasts a small key set by itself."""
+        candidates = self._maybe_prune_candidates(self.current.files, skeys, keys[0])
+        probe = self._read_conformed(candidates) if candidates else target.limit(0)
+        return probe, probe.withColumn("_file", F.input_file_name()).join(
+            skeys, keys, "left_semi"
+        )
+
     # ---------- MERGE INTO (IncrementalTPCDSBenchmark.scala:276-281) ----------
 
     def merge(
@@ -1096,39 +1215,45 @@ class ManagedTable:
     ) -> dict[str, int]:
         """Upsert: WHEN MATCHED UPDATE SET * / WHEN NOT MATCHED INSERT *.
 
-        ``when_not_matched_by_source="delete"`` adds Delta's third merge
-        clause (WHEN NOT MATCHED BY SOURCE DELETE — the full-sync /
-        snapshot-apply shape): target rows the source does NOT name are
-        deleted. ``source_scope`` is the bounding predicate real
-        pipelines put on that clause — only target rows matching it are
-        delete-eligible (without one, the clause must inspect EVERY
-        target row, a full-table rewrite on CoW; with one, the rewrite
-        set is matched-files ∪ in-scope-files, and at 100 TB the scope —
-        "this partition", "this day" — is what keeps the op bounded).
-        On MoR the same clause commits a deletion-vector tombstone for
-        the dead keys plus the source as a delta — zero rewrites.
-
         ``when_matched="delete"`` switches the matched clause to Delta's
         WHEN MATCHED DELETE: rows the source names are removed, source
         rows naming nothing are still inserted (the tombstone-merge shape
-        CDC appliers use). On a MoR table this commits a deletion-vector
-        TOMBSTONE file for the matched keys plus a delta file for the
-        inserts — zero rewrites (``_merge_mor_delete``).
+        CDC appliers use). ``when_not_matched_by_source="delete"`` adds
+        Delta's third clause (WHEN NOT MATCHED BY SOURCE DELETE — the
+        full-sync / snapshot-apply shape): target rows the source does NOT
+        name are deleted. ``source_scope`` is the bounding predicate real
+        pipelines put on that clause — only target rows matching it are
+        delete-eligible; without one the clause inspects every target row
+        (a full-table rewrite on CoW), with one ("this partition", "this
+        day") the op stays bounded at 100 TB.
 
-        File-level copy-on-write: only files containing a matched key are
-        rewritten; the rest carry over by reference. Like Delta, a source
-        with duplicate merge keys is an error (it would write duplicate
-        rows); ``validate_unique=False`` skips the check when the caller
-        already guarantees uniqueness (one small extra job). The
-        matched/inserted metrics are derived from parquet footer counts
-        (no extra counting jobs) and are exact when keys are unique on
-        both sides — the same precondition Delta's UPDATE SET * carries.
+        The verb validates the source and matches it, then hands the
+        change to the table mode's applier (``_apply``):
 
-        On a ``mor`` table the merge instead APPENDS the source as delta
-        files — no data file is rewritten (files_rewritten=0 in history);
-        reads resolve latest-per-key until OPTIMIZE compacts. ``on`` must
-        equal the declared primary key (Hudi semantics: the record key IS
-        the upsert key)."""
+        - copy-on-write (``_apply_cow``): the touch probe reads only the
+          files whose manifest key range may hold a source key (the range
+          stage of Hudi's bloom index; full sync reads every file, since
+          an in-scope row anywhere is touched). Touched files are
+          rewritten without their matched (and, for full sync, dead)
+          rows, the incoming rows — the whole source, or for a matched
+          delete its unmatched rows — land beside them, and every other
+          file carries over by reference;
+        - merge-on-read (``_apply_mor``): the source (upsert) or its
+          unmatched rows (matched delete) become a delta, and matched
+          keys (matched delete) or in-scope keys the source does not name
+          (full sync) become a tombstone — zero data files rewritten;
+          reads resolve latest-per-key until OPTIMIZE compacts. ``on``
+          must equal the declared primary key (Hudi semantics: the record
+          key IS the upsert key).
+
+        Like Delta, a source with duplicate merge keys is an error (it
+        would write duplicate rows); ``validate_unique=False`` skips the
+        check on CoW when the caller already guarantees uniqueness (one
+        small extra job). The matched/inserted metrics derive from parquet
+        footer counts and are exact when keys are unique on both sides —
+        the same precondition Delta's UPDATE SET * carries. The MoR upsert
+        counts its matches with one semi-join pass over the table;
+        ``track_matches=False`` skips it (matched/inserted read -1)."""
         m = self.current
         target = self.read()
         # On MoR the check is NOT skippable: a duplicate-key source would
@@ -1175,116 +1300,176 @@ class ManagedTable:
                 f"mor merge key {on} must equal the declared primary key "
                 f"{self.primary_keys}"
             )
+        # CoW materializes the deduped source key set (skeys) ONCE: it
+        # drives candidate pruning, the touch probe and the kept-rows
+        # anti-join (or the flagged match join) — consumers that would
+        # otherwise each re-run the full source scan + dedup shuffle.
+        # O(source keys); the payload-bearing source itself is never
+        # checkpointed. MoR always runs the dup check above, so it knows
+        # source_rows.
+        cols = target.columns
         if when_not_matched_by_source:
-            if self.table_mode == "mor":
-                return self._merge_mor_full_sync(
-                    m, target, source, on, source_scope, source_rows
-                )
-            return self._merge_full_sync_cow(
-                m, target, source, on, source_scope, source_rows
+            in_scope = F.coalesce(
+                F.expr(source_scope) if source_scope else F.lit(True), F.lit(False)
             )
-        if self.table_mode == "mor":
-            if when_matched == "delete":
-                return self._merge_mor_delete(m, target, source, on, source_rows)
-            return self._merge_mor(m, target, source, on, track_matches, source_rows)
-        # Materialize the deduped key set ONCE: it drives candidate
-        # pruning, the touch probe, and the kept-rows anti-join — three
-        # consumers that would otherwise each re-run the full source
-        # scan + dedup shuffle. O(source keys), the "decide with small
-        # rows" proxy of guide §8; the payload-bearing source itself is
-        # never checkpointed.
-        skeys = source.select(*on).dropDuplicates().localCheckpoint()
-        if when_matched == "delete":
-            # WHEN MATCHED DELETE: drop matched rows from the touched
-            # files; insert only the source rows that matched NOTHING
-            # (one anti-join against the probe's pruned key columns).
-            def incoming(probe: DataFrame) -> tuple[DataFrame, int]:
-                inserts = source.select(*probe.columns).join(
+            matched_flag = F.sum(F.when(F.col("_m").isNotNull(), 1).otherwise(0))
+
+            def cow() -> dict:
+                # Rewrite set = files holding a matched key ∪ files holding
+                # an in-scope row. Kept rows are the out-of-scope unmatched
+                # ones; every source row lands (matched as the update
+                # post-image, the rest as inserts).
+                skeys = source.select(*on).dropDuplicates().localCheckpoint()
+                n = source_rows if source_rows is not None else _count_job(source)
+                target_f = target.withColumn("_file", F.input_file_name())
+                matched = 0
+
+                def rebuild(touched: DataFrame, rows: int) -> DataFrame:
+                    # ONE read of the touched files serves both the matched
+                    # count and the kept rows: a left join against the
+                    # source keys carries a match flag, and the counting
+                    # aggregation fills the lazy checkpoint the kept-side
+                    # read then hits.
+                    nonlocal matched
+                    flagged = (
+                        touched.select(*cols)
+                        .withColumn("_s", in_scope)
+                        .join(skeys.withColumn("_m", F.lit(True)), on, "left")
+                        .localCheckpoint(eager=False, storageLevel=_ckpt_level(rows))
+                    )
+                    matched = int(flagged.agg(matched_flag).collect()[0][0] or 0)
+                    return flagged.filter(
+                        F.col("_m").isNull() & ~F.col("_s")
+                    ).select(*cols)
+
+                return dict(
+                    hits=target_f.join(skeys, on, "left_semi")
+                    .select("_file")
+                    .union(target_f.filter(in_scope).select("_file")),
+                    rebuild=rebuild,
+                    incoming=(source.select(*cols), n),
+                    metrics=lambda touched, out: {
+                        "matched_updated": matched,
+                        "inserted": n - matched,
+                        "deleted_not_matched_by_source": touched - (out - n) - matched,
+                    },
+                )
+
+            def mor() -> dict:
+                # ONE pass over source and target each: the source
+                # projection is materialized once (the delta write's range
+                # sampling would re-evaluate it), and the target keys ride
+                # a single left join against the source keys, materialized
+                # with the match flag so one aggregation yields both the
+                # matched count and the dead-key count that sizes the
+                # tombstone. Lazy checkpoints at _ckpt_level bounds: at
+                # 100 TB these frames are table-keys-sized.
+                src = source.select(*cols).localCheckpoint(
+                    eager=False, storageLevel=_ckpt_level(source_rows)
+                )
+                skeys = src.select(*on).dropDuplicates().withColumn("_m", F.lit(True))
+                flagged = (
+                    target.select(*on, in_scope.alias("_s"))
+                    .join(skeys, on, "left")
+                    .localCheckpoint(eager=False, storageLevel=_ckpt_level(m.num_rows))
+                )
+                dead = F.col("_s") & F.col("_m").isNull()
+                crow = flagged.agg(
+                    matched_flag.alias("_matched"),
+                    F.sum(F.when(dead, 1).otherwise(0)).alias("_dead"),
+                ).collect()[0]
+                matched = int(crow["_matched"] or 0)
+                return dict(
+                    tombstone=(flagged.filter(dead).select(*on), int(crow["_dead"] or 0)),
+                    delta=(src, source_rows),
+                    metrics=lambda ts, _: {
+                        "matched_updated": matched,
+                        "inserted": source_rows - matched,
+                        "deleted_not_matched_by_source": sum(e.rows for e in ts),
+                    },
+                )
+
+            return self._apply("MERGE", cow, mor)
+
+        deleting = when_matched == "delete"
+
+        def cow() -> dict:
+            skeys = source.select(*on).dropDuplicates().localCheckpoint()
+            probe, hits = self._key_probe(target, on, skeys)
+            if deleting:
+                # insert only the source rows that matched NOTHING (one
+                # anti-join against the probe's key columns — exact, since
+                # every file holding a source key is a candidate)
+                new = source.select(*probe.columns).join(
                     probe.select(*on), on, "left_anti"
                 )
-                return inserts, _count_job(inserts)
-        else:
-            # Every source row lands; the count is reused from the fused
-            # dup-check pass when it ran.
-            def incoming(probe: DataFrame) -> tuple[DataFrame, int]:
+                n = _count_job(new)
+            else:
+                new = source.select(*probe.columns)
                 n = source_rows if source_rows is not None else _count_job(source)
-                return source.select(*probe.columns), n
 
-        carried, rewritten, added, n_in = self._rewrite_keys(
-            m, target, on, skeys, incoming
-        )
-        # Footer math, exact given unique keys on both sides (validated
-        # above): new_rows = (rewritten_rows - matched) + incoming rows.
-        matched = (
-            sum(e.rows for e in rewritten) + n_in - sum(e.rows for e in added)
-        )
-        if when_matched == "delete":
-            metrics = {"matched_deleted": matched, "inserted": n_in}
-        else:
-            metrics = {"matched_updated": matched, "inserted": n_in - matched}
-        metrics.update(files_rewritten=len(rewritten), files_added=len(added))
-        return self._commit(m, "MERGE", carried, added, metrics)
+            def metrics(touched: int, out: int) -> dict[str, int]:
+                # exact given unique keys on both sides (validated above):
+                # out = (touched - matched) + incoming rows
+                matched = touched + n - out
+                if deleting:
+                    return {"matched_deleted": matched, "inserted": n}
+                return {"matched_updated": matched, "inserted": n - matched}
 
-    def _rewrite_keys(
-        self,
-        m: Manifest,
-        target: DataFrame,
-        keys: list[str],
-        skeys: DataFrame,
-        incoming: Callable[[DataFrame], tuple[DataFrame, int]],
-    ) -> tuple[list[FileEntry], list[FileEntry], list[FileEntry], int]:
-        """CoW key rewrite — the change set of merge (update and matched
-        delete) and apply_changes. Touch probe: the candidate files that
-        hold a key of ``skeys``; kept rows: the touched files anti-joined
-        on those keys; ``incoming(probe)`` gives the rows that land in
-        their place and their count; kept ∪ incoming is staged as data
-        files sized by the rewrite-set row bound. Returns (carried,
-        rewritten, added, incoming row count) for the caller's commit.
-
-        Candidate pruning runs BEFORE the touch probe — the range stage
-        of Hudi's bloom index: a file whose manifest [min,max] range on
-        the first key contains NO incoming key cannot hold a match, so
-        it is excluded from the probe scan entirely (at 100 TB a
-        1%-keys merge probes ~1% of the files). Stats are true ranges,
-        so every file holding an incoming key IS a candidate — which
-        also makes an insert anti-join against the probe exact (a key
-        absent from every candidate is absent from the table)."""
-        keys = list(keys)
-        candidates = self._maybe_prune_candidates(m.files, skeys, keys[0])
-        # _read_conformed keeps the FULL current schema even when no
-        # candidate file carries an evolved column — the insert path
-        # selects probe.columns, which must never drop one.
-        probe = self._read_conformed(candidates) if candidates else target.limit(0)
-        # No forced broadcast on the key set: the reference's refresh
-        # merges touch ~3% of the base table per round
-        # (experiment-instructions.md:277-296) — billions of keys at
-        # 100 TB, far beyond broadcast. AQE converts the semi-join to a
-        # broadcast automatically when the source is actually small.
-        carried, rewritten = self._split_touched(
-            m.files,
-            probe.withColumn("_file", F.input_file_name()).join(
-                skeys, keys, "left_semi"
-            ),
-        )
-        new_data, n_in = incoming(probe)
-        if rewritten:
-            kept = (
-                self._read_conformed(rewritten)
-                .select(*probe.columns)
-                .join(skeys, keys, "left_anti")
+            return dict(
+                hits=hits,
+                rebuild=lambda touched, _: touched.select(*probe.columns).join(
+                    skeys, on, "left_anti"
+                ),
+                incoming=(new, n),
+                metrics=metrics,
             )
-            new_data = kept.unionByName(new_data)
-        bound = sum(e.rows for e in rewritten) + n_in
-        if m.cluster_by:
-            # Clustered commit: the range write would evaluate the
-            # kept ∪ incoming lineage (touched-file reads + anti-join)
-            # twice — sampling pass + shuffle. Materialize once. The
-            # storage level follows the known rewrite-set row bound
-            # (_ckpt_level): a 100 TB rewrite set must not pin executor
-            # storage memory (r10 VERDICT #5), a bench-scale one keeps
-            # the cheap deserialized blocks.
-            new_data = new_data.localCheckpoint(storageLevel=_ckpt_level(bound))
-        return carried, rewritten, self._stage(m, new_data, rows=bound), n_in
+
+        def mor() -> dict:
+            if deleting:
+                # The target keys are materialized once (lazy) so the
+                # semi + anti pair resolves the table ONCE (r10 VERDICT
+                # #3). Matched keys are bounded by both the source and
+                # the table; inserts by the source.
+                tkeys = target.select(*on).localCheckpoint(
+                    eager=False, storageLevel=_ckpt_level(m.num_rows)
+                )
+                return dict(
+                    tombstone=(
+                        source.select(*on).dropDuplicates().join(tkeys, on, "left_semi"),
+                        min(source_rows, m.num_rows),
+                    ),
+                    delta=(
+                        source.select(*cols).join(tkeys, on, "left_anti"),
+                        source_rows,
+                    ),
+                    metrics=lambda ts, dl: {
+                        "matched_deleted": sum(e.rows for e in ts),
+                        "inserted": sum(e.rows for e in dl),
+                    },
+                )
+            # ONE evaluation of the source projection: on clustered
+            # tables the range write alone evaluates it twice, and the
+            # matched-count semi join would add a third.
+            src = source.select(*cols)
+            if m.cluster_by:
+                src = src.localCheckpoint(
+                    eager=False, storageLevel=_ckpt_level(source_rows)
+                )
+            # The matched count is a semi-join pass over the table — the
+            # one part of a MoR merge whose cost is not O(source); a
+            # format with a record-level index gets it for free.
+            skeys = src.select(*on).dropDuplicates()
+            matched = target.join(skeys, on, "left_semi").count() if track_matches else -1
+            return dict(
+                delta=(src, source_rows),
+                metrics=lambda *_: {
+                    "matched_updated": matched,
+                    "inserted": source_rows - matched if matched >= 0 else -1,
+                },
+            )
+
+        return self._apply("MERGE", cow, mor)
 
     def _maybe_prune_candidates(
         self, files: list[FileEntry], skeys: DataFrame, key: str
@@ -1353,246 +1538,6 @@ class ManagedTable:
             return files
         hit = {r["_path"] for r in hits}
         return [e for e in ranged if self._abs(e) in hit] + unranged
-
-    def _merge_mor(
-        self,
-        m: Manifest,
-        target: DataFrame,
-        source: DataFrame,
-        on: list[str],
-        track_matches: bool = True,
-        source_rows: int | None = None,
-    ) -> dict[str, int]:
-        """Merge-on-read commit: write the source as DELTA files and
-        reference every existing file unchanged — write cost is O(source),
-        independent of which/how many target files hold matched keys (the
-        whole point of MoR; the reference measures Hudi/Iceberg MoR merges
-        1.3-1.4x faster than CoW, README.md:33-36). One metadata-sized
-        counting job derives the matched count for history parity with
-        the CoW path."""
-        # ONE evaluation of the source projection: on clustered tables
-        # the range write alone evaluates it twice (sampling + shuffle),
-        # and the matched-count semi join would add a third — lazy
-        # localCheckpoint, level by the source row bound when the caller
-        # supplied one (spill-safe at unbounded feed scale).
-        src = source.select(*target.columns)
-        if m.cluster_by:
-            src = src.localCheckpoint(
-                eager=False, storageLevel=_ckpt_level(source_rows)
-            )
-        # matched-count metric: a semi-join PASS OVER THE TABLE
-        # (O(table-read) — the one part of a MoR merge whose cost is not
-        # O(source)). Strategy is left to AQE: small sources broadcast
-        # automatically, SF-scaled sources shuffle instead of OOMing. A
-        # format with a record-level index gets this for free; without
-        # one, callers that don't need history match counts pass
-        # track_matches=False and the merge touches only the source.
-        if track_matches:
-            skeys = src.select(*on).dropDuplicates()
-            matched = target.join(skeys, on, "left_semi").count()
-        else:
-            matched = -1
-        if source_rows is None:
-            source_rows = _count_job(src)
-        added = self._stage(m, src, "delta", rows=source_rows)
-        return self._commit(m, "MERGE", m.files, added, {
-            "matched_updated": matched,
-            "inserted": source_rows - matched if matched >= 0 else -1,
-            "files_rewritten": 0,
-            "files_added": len(added),
-        })
-
-    def _merge_mor_delete(
-        self,
-        m: Manifest,
-        target: DataFrame,
-        source: DataFrame,
-        on: list[str],
-        source_rows: int | None = None,
-    ) -> dict[str, int]:
-        """MoR tombstone-merge: WHEN MATCHED DELETE writes the matched
-        keys as a deletion-vector TOMBSTONE file and WHEN NOT MATCHED
-        INSERT appends the unmatched source rows as a DELTA file — ONE
-        commit, zero data files rewritten. Write cost is O(source); the
-        one O(table-read) pass is the resolved-key semi/anti join that
-        splits the source (the same pass the CoW path pays for touch
-        detection). Metrics derive from the two files' footer counts.
-
-        The target keys projection is materialized once (lazy
-        DISK_ONLY localCheckpoint) so the semi+anti pair reads — and,
-        on a multi-version layout, latest-per-key-resolves — the table
-        ONCE (r10 VERDICT #3). Both writes are sized by the source row count
-        (matched ∪ inserted ⊆ source), not pinned to one partition."""
-        tkeys = target.select(*on).localCheckpoint(
-            eager=False, storageLevel=_ckpt_level(sum(e.rows for e in m.files))
-        )
-        skeys = source.select(*on).dropDuplicates()
-        matched_keys = skeys.join(tkeys, on, "left_semi")
-        inserts = source.select(*target.columns).join(tkeys, on, "left_anti")
-        if source_rows is None:
-            source_rows = _count_job(source)
-        ts_entries = self._stage(m, matched_keys, "tombstone", rows=source_rows)
-        row_entries = self._stage(m, inserts, "delta", rows=source_rows)
-        deleted = sum(e.rows for e in ts_entries)
-        inserted = sum(e.rows for e in row_entries)
-        # drop an all-empty side from the commit (its staged file is
-        # orphan garbage, same class as a losing racer's)
-        added = ([] if deleted == 0 else ts_entries) + (
-            [] if inserted == 0 else row_entries
-        )
-        return self._commit(m, "MERGE", m.files, added, {
-            "matched_deleted": deleted,
-            "inserted": inserted,
-            "files_rewritten": 0,
-            "files_added": len(added),
-        })
-
-    def _merge_full_sync_cow(
-        self,
-        m: Manifest,
-        target: DataFrame,
-        source: DataFrame,
-        on: list[str],
-        source_scope: str | None,
-        source_rows: int | None = None,
-    ) -> dict[str, int]:
-        """CoW WHEN NOT MATCHED BY SOURCE DELETE (+ matched update +
-        unmatched insert): rewrite set = files holding a matched key ∪
-        files holding an in-scope row; kept rows are the out-of-scope
-        unmatched ones, and every source row lands (matched as the
-        update post-image, the rest as inserts), so
-        new_data = kept ∪ source. Two counting jobs (source; matched
-        within the touched files — the same bounded count the CoW UPDATE
-        path pays); the delete count then derives from footers."""
-        scope = F.expr(source_scope) if source_scope else F.lit(True)
-        in_scope = F.coalesce(scope, F.lit(False))
-        # 2 consumers (touch probe, flagged match join) — one
-        # materialization instead of repeated source scans (see merge()).
-        skeys = source.select(*on).dropDuplicates().localCheckpoint()
-        target_f = target.withColumn("_file", F.input_file_name())
-        carried, rewritten = self._split_touched(
-            m.files,
-            target_f.join(skeys, on, "left_semi")
-            .select("_file")
-            .union(target_f.filter(in_scope).select("_file")),
-        )
-        rewritten_rows = sum(e.rows for e in rewritten)
-        if source_rows is None:
-            source_rows = _count_job(source)
-        if rewritten:
-            # ONE read of the touched files serves both the matched
-            # count and the kept rows (the r10 shape read them twice:
-            # semi-join count + anti-join kept). The left join against
-            # the deduped source keys carries a match flag; the
-            # materializing aggregation below returns the matched count
-            # and populates the checkpoint cache the kept-side read then
-            # hits. Spill-safe above the row bound (r10 VERDICT #5): the
-            # frame is rewrite-set-sized, released after the commit.
-            touched_df = self._read_conformed(rewritten)
-            flagged = (
-                touched_df.select(*target.columns)
-                .withColumn("_s", in_scope)
-                .join(skeys.withColumn("_m", F.lit(True)), on, "left")
-                .localCheckpoint(
-                    eager=False, storageLevel=_ckpt_level(rewritten_rows)
-                )
-            )
-            matched = int(
-                flagged.agg(
-                    F.sum(F.when(F.col("_m").isNotNull(), 1).otherwise(0))
-                ).collect()[0][0]
-                or 0
-            )
-            kept = (
-                flagged.filter(F.col("_m").isNull() & ~F.col("_s"))
-                .select(*target.columns)
-            )
-            new_data = kept.unionByName(source.select(*target.columns))
-        else:
-            matched = 0
-            new_data = source.select(*target.columns)
-        bound = rewritten_rows + source_rows
-        if m.cluster_by:
-            # same single-evaluation rationale (and storage-level rule)
-            # as _rewrite_keys: the range write's sampling pass would
-            # otherwise re-evaluate kept ∪ source.
-            new_data = new_data.localCheckpoint(storageLevel=_ckpt_level(bound))
-        added = self._stage(m, new_data, rows=bound)
-        kept_rows = sum(e.rows for e in added) - source_rows
-        return self._commit(m, "MERGE", carried, added, {
-            "matched_updated": matched,
-            "inserted": source_rows - matched,
-            "deleted_not_matched_by_source": rewritten_rows - kept_rows - matched,
-            "files_rewritten": len(rewritten),
-            "files_added": len(added),
-        })
-
-    def _merge_mor_full_sync(
-        self,
-        m: Manifest,
-        target: DataFrame,
-        source: DataFrame,
-        on: list[str],
-        source_scope: str | None,
-        source_rows: int | None = None,
-    ) -> dict[str, int]:
-        """MoR WHEN NOT MATCHED BY SOURCE DELETE: ONE commit carrying a
-        deletion-vector tombstone for the in-scope keys the source does
-        not name, plus the whole source as a delta (matched keys
-        supersede at read time, fresh keys insert) — zero rewrites,
-        write cost O(source + dead keys)."""
-        scope = F.expr(source_scope) if source_scope else F.lit(True)
-        # ONE pass over source and target each (r10 VERDICT #3; the r10
-        # shape read the target twice — dead-keys anti + matched semi —
-        # and, on clustered tables, the source three times). The source
-        # projection is materialized once (the delta write's range
-        # sampling would re-evaluate it); the target keys ride a single
-        # left join against the deduped source keys, materialized with
-        # the match flag so ONE aggregation yields both the matched
-        # count and the exact dead-key count that sizes the tombstone
-        # write. Lazy localCheckpoints with _ckpt_level bounds: at
-        # 100 TB these frames are table-keys-sized and must not pin
-        # executor storage memory (r10 VERDICT #5); the blocks die with
-        # the lineage.
-        src = source.select(*target.columns).localCheckpoint(
-            eager=False, storageLevel=_ckpt_level(source_rows)
-        )
-        skeys = src.select(*on).dropDuplicates()
-        flagged = (
-            target.select(*on, F.coalesce(scope, F.lit(False)).alias("_in_scope"))
-            .join(skeys.withColumn("_m", F.lit(True)), on, "left")
-            .localCheckpoint(
-                eager=False,
-                storageLevel=_ckpt_level(sum(e.rows for e in m.files)),
-            )
-        )
-        # Materializing aggregation: computes src + flagged into their
-        # caches and returns both counts in one job (the r10 shape paid
-        # a dedicated semi-join count pass for `matched` alone).
-        crow = flagged.agg(
-            F.sum(F.when(F.col("_m").isNotNull(), 1).otherwise(0)).alias("_matched"),
-            F.sum(
-                F.when(F.col("_in_scope") & F.col("_m").isNull(), 1).otherwise(0)
-            ).alias("_dead"),
-        ).collect()[0]
-        matched = int(crow["_matched"] or 0)
-        dead_rows = int(crow["_dead"] or 0)
-        dead_keys = flagged.filter(
-            F.col("_in_scope") & F.col("_m").isNull()
-        ).select(*on)
-        ts_entries = self._stage(m, dead_keys, "tombstone", rows=dead_rows)
-        if source_rows is None:
-            source_rows = _count_job(src)
-        row_entries = self._stage(m, src, "delta", rows=source_rows)
-        deleted = sum(e.rows for e in ts_entries)
-        added = ([] if deleted == 0 else ts_entries) + row_entries
-        return self._commit(m, "MERGE", m.files, added, {
-            "matched_updated": matched,
-            "inserted": source_rows - matched,
-            "deleted_not_matched_by_source": deleted,
-            "files_rewritten": 0,
-            "files_added": len(added),
-        })
 
     # ---------- APPEND (writer append mode + schema evolution) ----------
 
@@ -1741,7 +1686,7 @@ class ManagedTable:
             "pathological contention, reload and retry"
         )
 
-    # ---------- DELETE / UPDATE (file-level copy-on-write DML) ----------
+    # ---------- DELETE / UPDATE ----------
 
     def _read_conformed(self, entries: list[FileEntry]) -> DataFrame:
         """Read a file subset for a rewrite, conformed to the CURRENT
@@ -1759,239 +1704,159 @@ class ManagedTable:
                 df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
         return df
 
-    def _split_by_predicate(
-        self, condition: str
-    ) -> tuple[list[FileEntry], list[FileEntry]]:
-        """(carried, rewritten) for a CoW DELETE/UPDATE: rewritten are
-        the files holding at least one row where ``condition`` is TRUE.
-
-        The probe reads only files whose manifest stats say the
-        predicate MAY hold (``_StatsPredicate``, the Delta data-skipping
-        evaluation): a ``DELETE WHERE date < cutoff`` on a time-ordered
-        table probes only the old slices, not the whole table. Files the
-        evaluator rules out contain no TRUE row by construction (true
-        ranges, tri-state logic), so the split is exact."""
-        files = self.current.files
-        pred = _StatsPredicate(self.spark, condition)
-        probe = [e for e in files if pred.may_match(e.stats)]
-        if not probe:
-            return files, []
-        return self._split_touched(
-            files,
-            self._read_conformed(probe)
-            .withColumn("_file", F.input_file_name())
-            .filter(F.expr(condition)),
-        )
-
     def delete(self, condition: str) -> dict[str, int]:
-        """DELETE WHERE (Delta `DELETE FROM t WHERE ...` analog): rewrite
-        only the files that contain a matching row, dropping those rows;
-        every other file carries over by reference. SQL semantics: rows
-        where the predicate is TRUE are deleted — FALSE *and* NULL rows
-        are kept (hence the coalesce below, a bare ``~cond`` would also
-        drop NULL-predicate rows). ``rows_deleted`` derives from parquet
-        footer counts — no extra counting job.
+        """DELETE WHERE (Delta ``DELETE FROM t WHERE ...`` analog). SQL
+        semantics: rows where the predicate is TRUE are deleted — FALSE
+        *and* NULL rows are kept (hence the coalesce below; a bare
+        ``~cond`` would also drop NULL-predicate rows).
 
-        On a ``mor`` table DELETE writes a DELETION VECTOR instead (the
-        Delta deletion-vector / Iceberg delete-file analog at key
-        granularity): see ``_delete_mor``."""
-        if self.table_mode == "mor":
-            return self._delete_mor(condition)
-        self._fold_deltas_if_any()
-        m = self.current
-        carried, rewritten = self._split_by_predicate(condition)
-        if not rewritten:
-            return {"rows_deleted": 0, "files_rewritten": 0, "files_added": 0}
-        rewritten_rows = sum(e.rows for e in rewritten)
-        kept = self._read_conformed(rewritten).filter(
-            ~F.coalesce(F.expr(condition), F.lit(False))
-        )
-        if m.cluster_by:
-            # A range-clustered commit write evaluates its input twice
-            # (partition-boundary sampling + the shuffle); materialize
-            # the kept rows once instead. Storage level from the
-            # rewrite-set row bound (r10 VERDICT #5).
-            kept = kept.localCheckpoint(storageLevel=_ckpt_level(rewritten_rows))
-        added = self._stage(m, kept, rows=rewritten_rows)
-        return self._commit(m, "DELETE", carried, added, {
-            "rows_deleted": rewritten_rows - sum(e.rows for e in added),
-            "files_rewritten": len(rewritten),
-            "files_added": len(added),
-        })
+        The verb matches with ``scan(condition)``, which reads only the
+        files whose manifest stats say the predicate MAY hold
+        (``_StatsPredicate``, the Delta data-skipping evaluation; on MoR
+        only resolve losers are pruned), and hands the change to the
+        table mode's applier (``_apply``):
 
-    def _delete_mor(self, condition: str) -> dict[str, int]:
-        """MoR DELETE WHERE via a deletion-vector commit: the matching
-        keys are written as one pk-only TOMBSTONE file — write cost is
-        O(deleted keys), zero data files are rewritten (the whole point:
-        Delta's deletion vectors / Iceberg's delete files, realized at
-        key granularity since the primary key IS this format's record
-        identity). Reads hide a tombstoned key until a NEWER commit
-        re-inserts it (latest-per-key: the tombstone simply wins until
-        superseded); OPTIMIZE folds tombstones away with the deltas.
-        NULL-predicate rows are kept (same tri-state rule as the CoW
-        path); ``rows_deleted`` derives from the tombstone file's footer
-        count — no extra counting job."""
-        m = self.current
-        pk = self.primary_keys
-        if not pk:
-            raise ValueError(f"mor delete needs primary_keys ({self.root})")
-        # scan() stats-prunes base files the predicate cannot reach
-        # (sound on MoR: only resolve LOSERS can be pruned; deltas and
-        # tombstones always participate).
-        keys = self.scan(condition).select(*pk)
-        # Tombstone write sizing (r10 VERDICT #4): when the manifest row
-        # bound proves the keys fit one file, write the single file
-        # directly (no sizing job — every small/bench-scale delete);
-        # past the bound, materialize the keys once (DISK_ONLY) and size
-        # the write by the EXACT key count, so write parallelism scales
-        # with the deletion vector instead of serializing through one
-        # straggler partition.
-        rows = sum(e.rows for e in m.files)
-        if rows > TOMBSTONE_TARGET_FILE_ROWS:
-            keys = keys.localCheckpoint(eager=False, storageLevel=_ckpt_level(rows))
-            rows = _count_job(keys)
-        added = self._stage(m, keys, "tombstone", rows=rows)
-        deleted = sum(e.rows for e in added)
-        if deleted == 0:
-            # Nothing matched: no commit. The staged empty file is
-            # unreferenced garbage — same orphan class as a losing
-            # concurrent writer's staging dir.
-            return {"rows_deleted": 0, "files_rewritten": 0, "files_added": 0}
-        return self._commit(m, "DELETE", m.files, added, {
-            "rows_deleted": deleted,
-            "files_rewritten": 0,
-            "files_added": len(added),
-            "tombstones_added": len(added),
-        })
+        - copy-on-write: the files holding a matching row are rewritten
+          without it; every other file carries over by reference;
+        - merge-on-read: the matching keys become a pk-only TOMBSTONE
+          (the Delta deletion-vector / Iceberg delete-file analog at key
+          granularity, since the primary key IS this format's record
+          identity) — zero data files rewritten; a newer commit that
+          re-inserts a key supersedes it, and OPTIMIZE folds it away.
 
-    def _update_mor(
-        self, assignments: dict[str, str], condition: str
-    ) -> dict[str, int]:
-        """MoR UPDATE WHERE: append the POST-IMAGE of the matching rows
-        as a DELTA commit — write cost O(matched), zero rewrites; the
-        latest-per-key resolve supersedes the old images (the matched
-        keys are unique by construction, since the resolve itself is
-        per-key unique). Assignment RHS is evaluated against the OLD row
-        and CAST back to the declared column type, exactly like the CoW
-        path. One counting job sizes the output files (same job the CoW
-        path pays for its metric).
+        ``rows_deleted`` derives from parquet footer counts — no counting
+        job. A DELETE that matches nothing commits nothing."""
+        matches = self.scan(condition)
 
-        Assignments may NOT target a primary-key column: the post-image
-        would land under the NEW key, the old row (old key) would never
-        be superseded by the latest-per-key resolve, and the "update"
-        would silently duplicate rows. Hudi likewise forbids mutating
-        the record key; key-rewriting updates belong on a CoW table
-        (whose path rewrites the touched files and stays correct)."""
-        pk_targets = sorted(set(assignments) & set(self.primary_keys))
-        if pk_targets:
-            raise ValueError(
-                f"mor UPDATE cannot assign primary-key column(s) {pk_targets}: "
-                "the delta post-image would carry a new key and the old row "
-                "would survive the resolve (use a cow table to rewrite keys)"
+        def mor() -> dict:
+            keys = matches.select(*self.primary_keys)
+            # Tombstone sizing (r10 VERDICT #4): when the manifest row
+            # bound proves the keys fit one file, write it directly (no
+            # sizing job — every small/bench-scale delete); past the
+            # bound, materialize the keys once and size the write by the
+            # EXACT key count, so write parallelism scales with the
+            # deletion vector.
+            rows = self.current.num_rows
+            if rows > TOMBSTONE_TARGET_FILE_ROWS:
+                keys = keys.localCheckpoint(eager=False, storageLevel=_ckpt_level(rows))
+                rows = _count_job(keys)
+            return dict(
+                tombstone=(keys, rows),
+                metrics=lambda ts, _: {
+                    "rows_deleted": sum(e.rows for e in ts),
+                    "tombstones_added": len(ts),
+                },
             )
-        m = self.current
-        cur_schema = self._stored_schema(m)
-        if cur_schema is None:
-            cur_schema = self.read().schema
-        types = {f.name: f.dataType for f in cur_schema.fields}
-        cur_cols = [f.name for f in cur_schema.fields]
-        # stats-pruned matching scan (see _delete_mor for soundness)
-        matched = self.scan(condition)
-        # Materialize the post-image once: the matching scan (which may
-        # include a MoR latest-per-key resolve window) would otherwise
-        # re-run for the checks probe, the sizing count, the range
-        # sampling, AND the write. O(matched rows). The sizing count is
-        # the job that populates the checkpoint cache (one job fewer
-        # than the r10 eager-checkpoint shape, and above the row bound
-        # nothing pinned in executor storage memory — r10 VERDICT #5).
-        updated = matched.select(
-            *[
-                F.expr(assignments[c]).cast(types[c]).alias(c)
-                if c in assignments
-                else F.col(c)
-                for c in cur_cols
-            ]
-        ).localCheckpoint(
-            eager=False, storageLevel=_ckpt_level(sum(e.rows for e in m.files))
-        )
-        rows_updated = _count_job(updated)
-        if rows_updated == 0:
-            return {"rows_updated": 0, "files_rewritten": 0, "files_added": 0}
-        if self.checks:
-            _enforce_checks(updated, self.checks)
-        added = self._stage(m, updated, "delta", rows=rows_updated)
-        return self._commit(m, "UPDATE", m.files, added, {
-            "rows_updated": rows_updated,
-            "files_rewritten": 0,
-            "files_added": len(added),
-        })
+
+        return self._apply("DELETE", lambda: dict(
+            hits=matches.withColumn("_file", F.input_file_name()),
+            rebuild=lambda touched, _: touched.filter(
+                ~F.coalesce(F.expr(condition), F.lit(False))
+            ),
+            metrics=lambda touched, out: {"rows_deleted": touched - out},
+        ), mor) or {"rows_deleted": 0, "files_rewritten": 0, "files_added": 0}
 
     def update(self, assignments: dict[str, str], condition: str) -> dict[str, int]:
-        """UPDATE SET ... WHERE ...: copy-on-write rewrite of the touched
-        files with every assignment RHS evaluated against the OLD row (one
-        projection — Delta/ANSI UPDATE semantics, so assignments never see
-        each other's results). Assignment results are CAST back to the
-        column's declared type (ANSI UPDATE semantics; without this, an
-        expression like ``v + 0.25`` on a decimal column would silently
-        widen the rewritten files' schema and corrupt later multi-file
-        reads). ``rows_updated`` needs one counting job over the touched
-        files only (row counts don't change, so footer math can't derive
-        it).
+        """UPDATE SET ... WHERE ...: every assignment RHS is evaluated
+        against the OLD row (one projection — Delta/ANSI UPDATE semantics,
+        so assignments never see each other's results) and CAST back to
+        the column's declared type (without the cast, ``v + 0.25`` on a
+        decimal column would silently widen the written files' schema and
+        corrupt later multi-file reads). CHECK constraints probe the
+        post-image before anything commits.
 
-        On a ``mor`` table UPDATE appends the post-image as a delta
-        commit instead of rewriting: see ``_update_mor``."""
-        if self.table_mode == "mor":
-            return self._update_mor(assignments, condition)
-        self._fold_deltas_if_any()
-        m = self.current
-        cond = F.expr(condition)
-        carried, rewritten = self._split_by_predicate(condition)
-        if not rewritten:
-            return {"rows_updated": 0, "files_rewritten": 0, "files_added": 0}
-        rewritten_rows = sum(e.rows for e in rewritten)
+        The verb matches with ``scan(condition)`` (stats-pruned, as in
+        ``delete``) and hands the change to the table mode's applier
+        (``_apply``):
+
+        - copy-on-write: the touched files are rewritten with the
+          post-image in place. ``rows_updated`` rides the rewrite's
+          projection as an Observation (row counts don't change, so
+          footer math can't derive it), and the post-image is
+          materialized once, so the checks probe and the write read
+          blocks instead of the files;
+        - merge-on-read: the post-image of the matching rows is appended
+          as a delta — zero rewrites; the latest-per-key resolve
+          supersedes the old images. One counting job sizes it. No
+          assignment may target a primary-key column: the post-image
+          would land under the NEW key, the old row would never be
+          superseded, and the update would silently duplicate rows (Hudi
+          likewise forbids mutating the record key; key-rewriting updates
+          belong on a CoW table).
+
+        An UPDATE that matches nothing commits nothing."""
         from pyspark.sql import Observation
 
-        # One pass over the touched files where the pre-r10 code paid
-        # four: the updated-row count rides the projection as an
-        # Observation metric, the checkpoint materializes the
-        # post-image once, and the range-sampling + write (+ optional
-        # checks probe) then read blocks instead of re-reading the
-        # files. DISK_ONLY checkpoint — the frame is rewrite-set-sized
-        # and must not pin executor storage memory (r10 VERDICT #5).
-        obs = Observation()
-        touched_df = self._read_conformed(rewritten).observe(
-            obs, F.sum(F.when(cond, 1).otherwise(0)).alias("updated")
-        )
-        types = {f.name: f.dataType for f in touched_df.schema.fields}
-        updated = touched_df.select(
-            *[
-                F.when(cond, F.expr(assignments[c]).cast(types[c]))
-                .otherwise(F.col(c))
-                .alias(c)
-                if c in assignments
-                else F.col(c)
-                for c in touched_df.columns
-            ]
-        ).localCheckpoint(storageLevel=_ckpt_level(rewritten_rows))
-        rows_updated = int(obs.get["updated"] or 0)
-        if self.checks:
-            # assignments can produce violating values; probe the
-            # REWRITTEN rows (touched files only — bounded) before commit
-            _enforce_checks(updated, self.checks)
-        added = self._stage(m, updated, rows=rewritten_rows)
-        return self._commit(m, "UPDATE", carried, added, {
-            "rows_updated": rows_updated,
-            "files_rewritten": len(rewritten),
-            "files_added": len(added),
-        })
+        cond = F.expr(condition)
+        matches = self.scan(condition)
+
+        def post_image(df: DataFrame, where=None) -> DataFrame:
+            def value(f):
+                new = F.expr(assignments[f.name]).cast(f.dataType)
+                return new if where is None else F.when(where, new).otherwise(F.col(f.name))
+
+            return df.select(*[
+                value(f).alias(f.name) if f.name in assignments else F.col(f.name)
+                for f in df.schema.fields
+            ])
+
+        def cow() -> dict:
+            obs = Observation()
+
+            def rebuild(touched: DataFrame, rows: int) -> DataFrame:
+                # One pass over the touched files: the updated-row count
+                # rides the projection as an Observation, and the
+                # checkpoint materializes the post-image once (spill-safe
+                # above the rewrite-set bound, r10 VERDICT #5) for the
+                # checks probe, the range sampling and the write.
+                updated = post_image(
+                    touched.observe(obs, F.sum(F.when(cond, 1).otherwise(0)).alias("n")),
+                    cond,
+                ).localCheckpoint(storageLevel=_ckpt_level(rows))
+                if self.checks:
+                    _enforce_checks(updated, self.checks)
+                return updated
+
+            return dict(
+                hits=matches.withColumn("_file", F.input_file_name()),
+                rebuild=rebuild,
+                materialized=True,
+                metrics=lambda *_: {"rows_updated": int(obs.get["n"] or 0)},
+            )
+
+        def mor() -> dict:
+            pk_targets = sorted(set(assignments) & set(self.primary_keys))
+            if pk_targets:
+                raise ValueError(
+                    f"mor UPDATE cannot assign primary-key column(s) {pk_targets}: "
+                    "the delta post-image would carry a new key and the old row "
+                    "would survive the resolve (use a cow table to rewrite keys)"
+                )
+            # Materialize the post-image once: the matching scan (maybe a
+            # latest-per-key resolve window) would otherwise re-run for
+            # the checks probe, the range sampling AND the write. The
+            # sizing count is the job that fills the checkpoint.
+            updated = post_image(matches).localCheckpoint(
+                eager=False, storageLevel=_ckpt_level(self.current.num_rows)
+            )
+            n = _count_job(updated)
+            if n and self.checks:
+                _enforce_checks(updated, self.checks)
+            return dict(
+                delta=(updated, n) if n else None,
+                metrics=lambda *_: {"rows_updated": n},
+            )
+
+        return self._apply("UPDATE", cow, mor) or {
+            "rows_updated": 0, "files_rewritten": 0, "files_added": 0,
+        }
 
     # ---------- OPTIMIZE (compaction, IncrementalTPCDSBenchmark.scala:186-204) ----------
 
     def _fold_deltas_if_any(self) -> None:
-        """Rewriting maintenance (Z-ORDER; formerly CoW DML too) on a MoR
-        table first folds outstanding deltas AND tombstones — file-level
-        touch detection is only meaningful over base files that each own
-        their rows."""
+        """Rewriting maintenance (Z-ORDER) on a MoR table first folds
+        outstanding deltas AND tombstones — a whole-layout rewrite is only
+        meaningful over base files that each own their rows."""
         if self._needs_resolve(self.current.files):
             self.optimize()
 
@@ -2229,7 +2094,9 @@ class ManagedTable:
 
     def history(self) -> DataFrame:
         """DESCRIBE HISTORY analog: one row per version, newest first
-        (MergeMicroBenchmark.scala:277)."""
+        (MergeMicroBenchmark.scala:277). ``operation_metrics`` carries the
+        commit's full metrics (Delta's ``operationMetrics``);
+        ``matched_updated`` and ``inserted`` stay as their own columns."""
         rows = [
             (
                 m.version,
@@ -2238,13 +2105,15 @@ class ManagedTable:
                 m.num_rows,
                 int(m.metrics.get("matched_updated", 0)),
                 int(m.metrics.get("inserted", 0)),
+                {k: int(v) for k, v in m.metrics.items()},
             )
             for m in reversed(self.manifests)
         ]
         return self.spark.createDataFrame(
             rows,
             "version INT, operation STRING, num_files INT, num_rows BIGINT, "
-            "matched_updated BIGINT, inserted BIGINT",
+            "matched_updated BIGINT, inserted BIGINT, "
+            "operation_metrics MAP<STRING,BIGINT>",
         )
 
     def detail(self) -> DataFrame:
@@ -2490,20 +2359,34 @@ class ManagedTable:
         self, changes: DataFrame, keys: list[str] | None = None
     ) -> dict[str, int]:
         """CDC APPLY — the consumer side of :meth:`changes`: replay a
-        change-feed frame onto this table in ONE copy-on-write commit.
-        Downstream replicas / training-data mirrors stay in sync by
-        shipping only the feed, never re-reading the source table.
+        change-feed frame onto this table in ONE commit. Downstream
+        replicas / training-data mirrors stay in sync by shipping only
+        the feed, never re-reading the source table.
 
         Semantics (the Delta ``APPLY CHANGES INTO`` shape): per key, the
         LAST action in the feed wins — ``_commit_version`` orders
         actions, preimage rows are ignored — then post rows upsert and
-        tombstones delete. Cost is O(changed keys + touched files): one
-        semi-join finds touched files, kept rows are anti-joined on the
-        final key set, and untouched files carry over by reference."""
-        keys = keys if keys is not None else self.primary_keys
+        deletes delete. The verb resolves the feed once and hands the
+        change to the table mode's applier (``_apply``):
+
+        - copy-on-write: the touch probe scans only the files whose key
+          range may hold a feed key, the touched files are rewritten
+          without the feed's keys, the upserts land beside them, and
+          untouched files carry over by reference — O(changed keys +
+          touched files), never O(table);
+        - merge-on-read: the final delete keys become a tombstone and
+          the final upserts a delta — zero rewrites; ``keys`` must equal
+          the declared primary key. A feed delete of a key the table does
+          not hold is a harmless tombstone: it hides no row, and a later
+          commit that inserts the key supersedes it."""
+        keys = list(keys if keys is not None else self.primary_keys)
         if not keys:
             raise ValueError("apply_changes() needs key columns")
-        m = self.current
+        if self.table_mode == "mor" and keys != self.primary_keys:
+            raise ValueError(
+                f"mor apply_changes keys {keys} must equal the declared "
+                f"primary key {self.primary_keys}"
+            )
         target = self.read()
         acted = changes.filter(
             F.col("_change_type").isin("insert", "update_postimage", "delete")
@@ -2512,38 +2395,39 @@ class ManagedTable:
         # Materialize the resolved feed ONCE: its lineage (the feed
         # producer's per-commit exceptAll when replaying changes()) would
         # otherwise be recomputed by every downstream job here — the
-        # counts, the touched-file probe, and the rewrite each re-run it.
+        # counts, the touched-file probe, and the writes each re-run it.
         # O(changed rows), the same bounded footprint the feed itself has.
         final = (
             acted.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         ).localCheckpoint()
-        upserts = final.filter(F.col("_change_type") != "delete").select(
-            *target.columns
-        )
-        by_type = {
-            r["_change_type"]: r["_n"]
-            for r in final.groupBy("_change_type")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .collect()
-        }
-        n_deletes = int(by_type.get("delete", 0))
-        n_upserts = int(sum(v for k, v in by_type.items() if k != "delete"))
-        allkeys = final.select(*keys).dropDuplicates()
+        deleted = F.col("_change_type") == "delete"
+        upserts = final.filter(~deleted).select(*target.columns)
+        crow = final.agg(
+            F.count(F.lit(1)).alias("_n"), F.sum(F.when(deleted, 1).otherwise(0)).alias("_d")
+        ).collect()[0]
+        n_deletes = int(crow["_d"] or 0)
+        n_upserts = int(crow["_n"]) - n_deletes
+        applied = {"upserts_applied": n_upserts, "deletes_applied": n_deletes}
 
-        # Same key rewrite as a CoW merge: the touch probe scans only
-        # files whose key range may hold a feed key — a CDC feed touches
-        # O(feed) files, never O(table).
-        carried, rewritten, added, _ = self._rewrite_keys(
-            m, target, keys, allkeys, lambda _probe: (upserts, n_upserts)
-        )
-        return self._commit(m, "APPLY_CHANGES", carried, added, {
-            "upserts_applied": n_upserts,
-            "deletes_applied": n_deletes,
-            "files_rewritten": len(rewritten),
-            "files_added": len(added),
-        })
+        def cow() -> dict:
+            allkeys = final.select(*keys).dropDuplicates()
+            probe, hits = self._key_probe(target, keys, allkeys)
+            return dict(
+                hits=hits,
+                rebuild=lambda touched, _: touched.select(*probe.columns).join(
+                    allkeys, keys, "left_anti"
+                ),
+                incoming=(upserts, n_upserts),
+                metrics=lambda *_: applied,
+            )
+
+        return self._apply("APPLY_CHANGES", cow, lambda: dict(
+            tombstone=(final.filter(deleted).select(*keys), n_deletes),
+            delta=(upserts, n_upserts),
+            metrics=lambda *_: applied,
+        ))
 
 
 def _strip_uri(p: str) -> str:

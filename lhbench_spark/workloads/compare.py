@@ -54,7 +54,7 @@ def run(
 
     for name in configs:
         cfg = replace(CONFIGS[name], rows=rows, rounds=rounds, name_prefix=f"{name}-")
-        runner = BenchmarkRunner(spark, iterations=1)
+        runner = BenchmarkRunner(spark)
         sub = run_merge_micro(spark, cfg, runner=runner)
         report.query_results.extend(runner.results)
         medians = runner.medians()

@@ -81,7 +81,7 @@ def run(
 ) -> BenchmarkReport:
     cfg = cfg or MergeMicroConfig()
     root = tempfile.mkdtemp(prefix="lhbench_merge_micro_") + "/t"
-    runner = runner or BenchmarkRunner(spark, iterations=1)
+    runner = runner or BenchmarkRunner(spark)
     px = cfg.name_prefix
     report = BenchmarkReport(
         benchmark_id="merge-micro",
@@ -176,7 +176,7 @@ def run_grid(spark: SparkSession, cfg: MergeGridConfig | None = None) -> Benchma
     cell that matched rows and 0 for every MoR cell (MoR appends deltas,
     the whole point)."""
     cfg = cfg or MergeGridConfig()
-    runner = BenchmarkRunner(spark, iterations=1)
+    runner = BenchmarkRunner(spark)
     report = BenchmarkReport(
         benchmark_id="merge-micro-grid",
         specs={

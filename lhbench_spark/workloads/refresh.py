@@ -156,7 +156,7 @@ class RefreshConfig:
 
 def run(spark: SparkSession, sf_dir: str, cfg: RefreshConfig | None = None) -> BenchmarkReport:
     cfg = cfg or RefreshConfig()
-    runner = BenchmarkRunner(spark, iterations=1)
+    runner = BenchmarkRunner(spark)
     report = BenchmarkReport(benchmark_id="refresh", specs={"rounds": str(cfg.rounds)})
     work = tempfile.mkdtemp(prefix="lhbench_refresh_")
 

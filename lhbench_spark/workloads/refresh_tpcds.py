@@ -1076,7 +1076,7 @@ def run(
     (IncrementalTPCDSBenchmark.scala:259-283). csv_dense and the seven
     fact views refresh every round, the other dense chains in round 1."""
     cfg = cfg or MultiRefreshConfig()
-    runner = BenchmarkRunner(spark, iterations=1)
+    runner = BenchmarkRunner(spark)
     report = BenchmarkReport(
         benchmark_id="refresh-tpcds",
         specs={"rounds": str(cfg.rounds), "facts": str(len(FACTS))},

@@ -18,7 +18,7 @@ from lhbench_spark.tables import LakeCatalog
 
 
 def run(spark: SparkSession) -> BenchmarkReport:
-    runner = BenchmarkRunner(spark, iterations=1)
+    runner = BenchmarkRunner(spark)
     report = BenchmarkReport(
         benchmark_id="smoke",
         specs={},

@@ -28,7 +28,7 @@ def test_upper_median_is_upper_not_mean():
 
 
 def test_runner_captures_errors_and_drops_errored_medians(spark):
-    r = BenchmarkRunner(spark, iterations=2)
+    r = BenchmarkRunner(spark)
     for it in (1, 2):
         r.run_query("ok", lambda: spark.range(3).selectExpr("sum(id) AS s"), it)
     r.run_query("boom", lambda: spark.sql("SELECT broken_fn(1)"), 1)
@@ -54,7 +54,7 @@ def test_runner_captures_errors_and_drops_errored_medians(spark):
 
 
 def test_report_round_trips_json_and_csv(spark, tmp_path):
-    r = BenchmarkRunner(spark, iterations=1)
+    r = BenchmarkRunner(spark)
     r.run_query("one", lambda: spark.range(5).selectExpr("count(*) AS c"))
     rep = BenchmarkReport(
         benchmark_id="t",
@@ -100,7 +100,7 @@ def test_run_query_setup_failure_is_captured(spark):
     query capture, ignore_errors semantics) — never abort the suite."""
     from lhbench_spark.harness.runner import BenchmarkRunner
 
-    r = BenchmarkRunner(spark, iterations=1)
+    r = BenchmarkRunner(spark)
 
     def boom():
         raise RuntimeError("setup exploded")
@@ -116,7 +116,7 @@ def test_run_query_setup_failure_is_captured(spark):
 def test_run_query_setup_jobs_are_not_billed_to_the_query(spark):
     """setup() runs before the query's job group opens: its Spark jobs
     must not inflate the measured query's ``jobs`` count."""
-    r = BenchmarkRunner(spark, iterations=1)
+    r = BenchmarkRunner(spark)
 
     def make():
         return spark.range(10).selectExpr("sum(id) AS s")

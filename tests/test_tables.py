@@ -121,6 +121,16 @@ def test_history_and_detail_and_time_travel(spark, tdir):
     assert t.read(version=0).count() == 100
     assert t.read(version=1).count() == 120
 
+    # operation_metrics carries every metric of the commit
+    assert hist[1]["operation_metrics"] == t.version_manifest(1).metrics
+    t.merge(
+        src2.filter("key < 50"), on=["key"],
+        when_not_matched_by_source="delete", source_scope="key >= 40",
+    )
+    ops = t.history().collect()[0]["operation_metrics"]
+    assert ops["deleted_not_matched_by_source"] == 80  # keys 50-129
+    assert ops["matched_updated"] == 50 and ops["files_rewritten"] >= 1
+
 
 def test_manifest_file_skipping(spark, tdir):
     t = ManagedTable.create(
@@ -910,6 +920,136 @@ def test_apply_changes_last_action_per_key_wins(spark, tmp_path):
     got = {r.k: r.v for r in b.read().collect()}
     assert 11 not in got and got[10] == 0.0 and got[5] == 200.0
     assert len(got) == 11
+
+
+# ---------- CoW / MoR agreement ----------
+#
+# Every DML verb matches once and hands its change to the CoW or the MoR
+# applier; both must leave the same table. The MoR copy carries an
+# outstanding delta (keys 0-9 merged as "d1") and an outstanding
+# tombstone (keys 90-99 deleted) when the call runs, so the MoR applier
+# works over unresolved files; the CoW copy takes the same two commits.
+
+
+def _agree_rows(spark, keys, tag):
+    return spark.createDataFrame(
+        [(k, k % 7, k * 2.5, tag) for k in keys],
+        "key BIGINT, part BIGINT, value DOUBLE, tag STRING",
+    )
+
+
+_AGREE_SRC = [5, 20, 50, 95, 120]
+
+
+def _agree_feed(spark):
+    rows = [
+        (5, 5 % 7, 5 * 2.5, "fed", "update_postimage", 1),
+        (5, 5 % 7, 5 * 2.5, "old", "update_preimage", 1),
+        (20, 20 % 7, 20 * 2.5, "gone", "delete", 1),
+        (50, 50 % 7, 50 * 2.5, "gone", "delete", 1),
+        (50, 50 % 7, -1.0, "fed", "insert", 2),  # last action per key wins
+        (95, 95 % 7, 95 * 2.5, "gone", "delete", 1),  # already absent
+        (130, 130 % 7, 130 * 2.5, "fed", "insert", 2),
+    ]
+    return spark.createDataFrame(
+        rows,
+        "key BIGINT, part BIGINT, value DOUBLE, tag STRING, "
+        "_change_type STRING, _commit_version BIGINT",
+    )
+
+
+def _agree_upsert(model, keys, tag):
+    for k in keys:
+        model[k] = (k, k % 7, k * 2.5, tag)
+
+
+def _agree_merge_delete(model, keys, tag):
+    for k in keys:
+        if k in model:
+            del model[k]
+        else:
+            model[k] = (k, k % 7, k * 2.5, tag)
+
+
+def _agree_full_sync(model, keys, tag):
+    for k in [k for k, r in model.items() if r[1] == 3 and k not in keys]:
+        del model[k]
+    _agree_upsert(model, keys, tag)
+
+
+def _agree_delete(model):
+    for k in [k for k, r in model.items() if r[1] == 3 or k < 3]:
+        del model[k]
+
+
+def _agree_update(model):
+    for k, r in list(model.items()):
+        if k < 8 or r[1] == 2:
+            model[k] = (r[0], r[1], r[2] + 1, r[3])
+
+
+def _agree_apply(model):
+    model[5] = (5, 5, 12.5, "fed")
+    model.pop(20)
+    model[50] = (50, 1, -1.0, "fed")
+    model[130] = (130, 130 % 7, 325.0, "fed")
+
+
+# call -> (run on a table, apply to the dict model)
+_AGREE_CALLS = {
+    "merge": (
+        lambda s, t: t.merge(_agree_rows(s, _AGREE_SRC, "m"), on=["key"]),
+        lambda md: _agree_upsert(md, _AGREE_SRC, "m"),
+    ),
+    "merge_delete": (
+        lambda s, t: t.merge(
+            _agree_rows(s, _AGREE_SRC, "m"), on=["key"], when_matched="delete"
+        ),
+        lambda md: _agree_merge_delete(md, _AGREE_SRC, "m"),
+    ),
+    "merge_full_sync": (
+        lambda s, t: t.merge(
+            _agree_rows(s, _AGREE_SRC, "m"), on=["key"],
+            when_not_matched_by_source="delete", source_scope="part = 3",
+        ),
+        lambda md: _agree_full_sync(md, _AGREE_SRC, "m"),
+    ),
+    "delete": (lambda s, t: t.delete("part = 3 OR key < 3"), _agree_delete),
+    "update": (
+        lambda s, t: t.update({"value": "value + 1"}, "key < 8 OR part = 2"),
+        _agree_update,
+    ),
+    "apply_changes": (lambda s, t: t.apply_changes(_agree_feed(s)), _agree_apply),
+}
+
+
+@pytest.mark.parametrize("call", sorted(_AGREE_CALLS))
+def test_dml_cow_and_mor_agree(spark, tmp_path, call):
+    run, apply_model = _AGREE_CALLS[call]
+    model: dict[int, tuple] = {}
+    _agree_upsert(model, range(100), "base")
+    _agree_upsert(model, range(10), "d1")
+    for k in range(90, 100):
+        del model[k]
+    apply_model(model)
+    want = sorted(model.values())
+
+    got = {}
+    for mode in ("cow", "mor"):
+        t = ManagedTable.create(
+            spark, str(tmp_path / mode), _agree_rows(spark, range(100), "base"),
+            cluster_by=("key",), num_files=4, table_mode=mode,
+            primary_keys=("key",),
+        )
+        t.merge(_agree_rows(spark, range(10), "d1"), on=["key"])
+        t.delete("key >= 90")
+        if mode == "mor":
+            kinds = {e.kind for e in t.current.files}
+            assert kinds == {"data", "delta", "tombstone"}
+        run(spark, t)
+        got[mode] = sorted(tuple(r) for r in t.read().collect())
+        assert got[mode] == want, f"{mode} {call}: read() != model"
+    assert got["cow"] == got["mor"]
 
 
 def test_update_preserves_column_type(spark, tmp_path):
@@ -1902,8 +2042,8 @@ def test_scan_conforms_schema_after_evolution(spark, tmp_path):
 # and read(prune=) must therefore never stats-prune such a file — its
 # rows failing the predicate is exactly the case where pruning it would
 # resurrect the superseded older row as a false resolve winner (and,
-# since _delete_mor/_update_mor match via scan(), tombstone or rewrite
-# keys whose live row does NOT match — persistent corruption).
+# since MoR delete/update match via scan(), tombstone or rewrite keys
+# whose live row does NOT match — persistent corruption).
 
 
 def _mor_upsert_table(spark, root):
@@ -1956,7 +2096,7 @@ def test_read_prune_respects_mor_supersede(spark, tmp_path):
 
 
 def test_mor_delete_matches_live_rows_not_superseded(spark, tmp_path):
-    """_delete_mor matches via scan(): deleting value>9000 must remove
+    """MoR delete matches via scan(): deleting value>9000 must remove
     exactly the keys whose LIVE row matches (0-9, 15-19) and leave the
     appended keys 10-14 (live value=-1) alone."""
     t = _mor_upsert_table(spark, str(tmp_path / "t"))
@@ -2275,10 +2415,10 @@ _MATRIX_PINNED = {
         {
             "upserts_applied": 20,
             "deletes_applied": 5,
-            "files_rewritten": 2,
-            "files_added": 1,
+            "files_rewritten": 0,
+            "files_added": 2,
         },
-        13,
+        8,
     ),
     ("mor", "clone"): ({"source_version": 0, "files_referenced": 4}, 0),
     ("mor", "create"): ({"num_output_rows": 200}, 6),
