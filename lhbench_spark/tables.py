@@ -17,13 +17,15 @@ Layout (Iceberg-style, not Hive-style):
   planning is O(manifest), not O(S3 LIST). Data files are immutable;
   a version references any subset of files from any earlier write.
 - Files carry ALL columns (no Hive key=value path encoding), so a
-  version's files can be handed to ``spark.read.parquet(*files)``
-  directly. Clustering (``cluster_by``) range-partitions + sorts on the
-  cluster keys before write, and the manifest records per-file min/max
-  stats on the cluster keys PLUS every other stat-able column up to
-  ``STATS_MAX_COLS`` (Delta's dataSkippingNumIndexedCols analog) — file
-  skipping happens manifest-side (``read(prune=…)``) on ANY statted
-  column, the moral equivalent of Delta data skipping.
+  version's files are read by one reader (``ManagedTable._read_files``)
+  under the schema the manifest records. Clustering (``cluster_by``)
+  range-partitions + sorts on the cluster keys before write, and the
+  manifest records per-file min/max stats on the cluster keys PLUS every
+  other stat-able column up to ``STATS_MAX_COLS`` (Delta's
+  dataSkippingNumIndexedCols analog). File skipping is one evaluator
+  over those stats (``_StatsPredicate``): ``read(prune=…)``, ``scan`` and
+  ``optimize(where=…)`` all select files through it, on ANY statted
+  column — the moral equivalent of Delta data skipping.
 - MERGE is file-level copy-on-write: only files that contain a matched
   key are rewritten; untouched files carry over by reference. The
   only driver-side collect is the matched FILE list (metadata-sized,
@@ -49,6 +51,11 @@ Layout (Iceberg-style, not Hive-style):
   merge source as DELTA files and resolves latest-row-per-key at read
   time — writes are cheap, reads pay the resolve, OPTIMIZE folds the
   deltas back into base files (the Hudi ``run_compaction`` analog).
+  MoR precedence is recorded in each file's ``kind`` at commit, like
+  Delta's file actions: only delta and tombstone files supersede rows
+  (an append over live keys is recorded as a delta), so data files never
+  share a key, every data file may be stats-skipped, and a read resolves
+  exactly when a delta or tombstone is present.
 """
 
 from __future__ import annotations
@@ -61,7 +68,7 @@ import threading
 import time
 import uuid
 from collections.abc import Callable
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass, field, replace
 
 import pyarrow.parquet as pq
 from pyspark import StorageLevel
@@ -182,8 +189,9 @@ class FileEntry:
     bytes: int
     # per-file min/max of the cluster columns (stringified), for skipping
     stats: dict[str, list] = field(default_factory=dict)
-    # "data" = base file; "delta" = MoR merge delta (latest-per-key wins
-    # at read time until OPTIMIZE folds it in); "tombstone" = MoR
+    # "data" = base file (shares no key with any other data file);
+    # "delta" = MoR merge delta or append over live keys (latest-per-key
+    # wins at read time until OPTIMIZE folds it in); "tombstone" = MoR
     # deletion vector (pk-only rows: the key is deleted as of this
     # file's commit version unless a NEWER commit re-inserts it)
     kind: str = "data"
@@ -263,16 +271,21 @@ def _stat_value(v):
 
 
 class _StatsPredicate:
-    """Conservative may-match evaluation of a SQL predicate against a
-    file's manifest [min,max] stats — the Delta data-skipping analog
-    for arbitrary DML predicates (``DELETE WHERE``/``UPDATE WHERE``).
+    """Conservative may-match evaluation of a predicate against a file's
+    manifest [min,max] stats — the one data-skipping evaluator. ``read``
+    (``prune={col: value}``, an equality conjunction), ``scan`` and
+    ``optimize(where=)`` all select files through it.
 
-    The predicate STRING is parsed by Catalyst's own SQL parser (no
-    hand-rolled grammar to mis-parse), and the unresolved expression
-    tree is walked with tri-state logic: a node answers "can this be
-    TRUE for some row of the file?" and anything the walker does not
-    understand — functions, modulo, casts, IS NULL (no null counts in
-    the manifest), NOT — answers True. Soundness: And propagates only
+    A SQL predicate STRING is parsed by Catalyst's own SQL parser (no
+    hand-rolled grammar to mis-parse), and the unresolved expression is
+    converted ONCE into a plain Python tree, so per-file evaluation makes
+    no JVM call. Nodes are ``("and", children)``, ``("or", children)``,
+    leaf comparisons ``(op, col, literal)`` with op one of
+    ``= < <= > >=`` (literal-first comparisons are flipped, ``IN`` is an
+    OR of equalities, ``BETWEEN`` an AND of ``>=`` and ``<=``), and
+    ``None`` for anything the converter does not understand —
+    functions, modulo, casts, IS NULL (no null counts in the manifest),
+    NOT — which answers "may match". Soundness: And propagates only
     definite impossibility (may(A∧B) = may(A) ∧ may(B) is conservative
     because a file where either side can never be true has no row
     satisfying the conjunction), Or is may(A) ∨ may(B), and leaf
@@ -281,80 +294,80 @@ class _StatsPredicate:
     file range by ±26h before comparing (timezone-realization slack —
     widening only ever ADDS candidates)."""
 
-    _FLIP = {
-        "LessThan": "GreaterThan",
-        "LessThanOrEqual": "GreaterThanOrEqual",
-        "GreaterThan": "LessThan",
-        "GreaterThanOrEqual": "LessThanOrEqual",
-        "EqualTo": "EqualTo",
-        "EqualNullSafe": "EqualNullSafe",
+    _OPS = {
+        "EqualTo": "=",
+        "EqualNullSafe": "=",
+        "LessThan": "<",
+        "LessThanOrEqual": "<=",
+        "GreaterThan": ">",
+        "GreaterThanOrEqual": ">=",
     }
+    _FLIP = {"=": "=", "<": ">", "<=": ">=", ">": "<", ">=": "<="}
 
-    def __init__(self, spark, cond: str):
-        self._expr = None
+    def __init__(self, tree):
+        self.tree = tree
+
+    @classmethod
+    def parse(cls, spark, cond: str) -> "_StatsPredicate":
         try:
             parser = spark._jsparkSession.sessionState().sqlParser()
-            self._expr = parser.parseExpression(cond)
+            return cls(cls._convert(parser.parseExpression(cond)))
         except Exception:  # noqa: BLE001 — unevaluable predicate: no pruning
-            self._expr = None
+            return cls(None)
+
+    @classmethod
+    def equals(cls, values: dict) -> "_StatsPredicate":
+        """``col = value`` for every item, ANDed (``read(prune=…)``)."""
+        return cls(("and", [("=", c, v) for c, v in values.items()]))
+
+    def select(self, files: list[FileEntry]) -> list[FileEntry]:
+        """The files a read must open: every data file whose stats may
+        match, and every delta/tombstone file (their rows out-rank data
+        rows in the MoR resolve)."""
+        return [e for e in files if e.kind != "data" or self.may_match(e.stats)]
 
     def may_match(self, stats: dict) -> bool:
-        if self._expr is None or not stats:
+        if not stats:
             return True
         try:
-            return self._may(self._expr, stats)
+            return self._may(self.tree, stats)
         except Exception:  # noqa: BLE001 — evaluation is an optimization
             return True
 
-    # -- tree walk ----------------------------------------------------------
-    def _may(self, e, stats) -> bool:
-        cls = e.getClass().getSimpleName()
-        if cls == "And":
-            return self._may(e.left(), stats) and self._may(e.right(), stats)
-        if cls == "Or":
-            return self._may(e.left(), stats) or self._may(e.right(), stats)
-        if cls in self._FLIP:
-            return self._cmp(cls, e.left(), e.right(), stats)
-        if cls == "In":
-            col = self._attr_name(e.value())
-            if col is None:
-                return True
+    # -- Catalyst → Python tree (constructor-time JVM calls only) -----------
+    @classmethod
+    def _convert(cls, e):
+        kind = e.getClass().getSimpleName()
+        if kind in ("And", "Or"):
+            return (kind.lower(), [cls._convert(e.left()), cls._convert(e.right())])
+        if kind in cls._OPS:
+            return cls._leaf(cls._OPS[kind], e.left(), e.right())
+        if kind == "In":
             lst = e.list()
-            for i in range(lst.size()):
-                v = self._lit_value(lst.apply(i))
-                if v is _UNKNOWN:
-                    return True
-                iv = self._interval(stats, col, v)
-                if iv is None or iv[0] <= iv[2] <= iv[1]:
-                    return True
-            return False
-        return True
+            return ("or", [
+                cls._leaf("=", e.value(), lst.apply(i)) for i in range(lst.size())
+            ])
+        if kind == "UnresolvedFunction" and str(e.nameParts().last()).lower() == "between":
+            args = e.arguments()
+            return ("and", [
+                cls._leaf(">=", args.apply(0), args.apply(1)),
+                cls._leaf("<=", args.apply(0), args.apply(2)),
+            ])
+        return None
 
-    def _cmp(self, op: str, left, right, stats) -> bool:
-        col, lit = self._attr_name(left), self._lit_value(right)
+    @classmethod
+    def _leaf(cls, op: str, left, right):
+        col, lit = cls._attr_name(left), cls._lit_value(right)
         if col is None or lit is _UNKNOWN:
             # maybe written literal-first: v < col  ≡  col > v
-            col, lit = self._attr_name(right), self._lit_value(left)
+            col, lit = cls._attr_name(right), cls._lit_value(left)
             if col is None or lit is _UNKNOWN:
-                return True
-            op = self._FLIP[op]
+                return None
+            op = cls._FLIP[op]
         if lit is None:
-            return True  # comparison with NULL never TRUE, but stay safe
-        iv = self._interval(stats, col, lit)
-        if iv is None:
-            return True
-        lo, hi, lit = iv
-        if op in ("EqualTo", "EqualNullSafe"):
-            return lo <= lit <= hi
-        if op == "LessThan":
-            return lo < lit
-        if op == "LessThanOrEqual":
-            return lo <= lit
-        if op == "GreaterThan":
-            return hi > lit
-        return hi >= lit  # GreaterThanOrEqual
+            return None  # comparison with NULL never TRUE, but stay safe
+        return (op, col, lit)
 
-    # -- leaves -------------------------------------------------------------
     @staticmethod
     def _attr_name(e):
         if e.getClass().getSimpleName() == "UnresolvedAttribute":
@@ -389,6 +402,29 @@ class _StatsPredicate:
             except ValueError:
                 return _UNKNOWN
         return _UNKNOWN
+
+    # -- per-file evaluation (pure Python) ------------------------------------
+    def _may(self, node, stats) -> bool:
+        if node is None:
+            return True
+        if node[0] == "and":
+            return all(self._may(c, stats) for c in node[1])
+        if node[0] == "or":
+            return any(self._may(c, stats) for c in node[1])
+        op, col, lit = node
+        iv = self._interval(stats, col, lit)
+        if iv is None:
+            return True
+        lo, hi, lit = iv
+        if op == "=":
+            return lo <= lit <= hi
+        if op == "<":
+            return lo < lit
+        if op == "<=":
+            return lo <= lit
+        if op == ">":
+            return hi > lit
+        return hi >= lit  # >=
 
     @staticmethod
     def _parse_iso(s: str):
@@ -522,41 +558,6 @@ def _entry_version(e: FileEntry) -> int:
     if os.path.isabs(e.path):
         return 0
     return int(e.path.split(os.sep)[1][1:].split("-")[0])
-
-
-def _mor_prunable_paths(
-    files: list[FileEntry], keys: tuple[str, ...] | list[str]
-) -> set[str]:
-    """Paths of the data files that are SAFE to stats-prune when the
-    latest-per-key MoR resolve will run over the result.
-
-    Under the resolve, a data file's rows may SUPERSEDE rows of any
-    older file sharing a key (MoR append is an upsert — see append()).
-    Pruning such a file because its own rows fail the predicate would
-    let the superseded older row win the resolve instead — resurrecting
-    a dead row, so scan()/read(prune=) would diverge from
-    read().filter() and the DML paths built on scan() could tombstone
-    or rewrite the wrong keys. A data file is therefore prunable only
-    when it provably cannot out-rank anyone: it sits at the minimum
-    commit version (nothing is older), or its pk-range stats are
-    disjoint from every older file's. Missing or string-realized pk
-    stats prove nothing (string realizations can differ across writers
-    for temporal keys), so such files are kept. Same-version files
-    never share keys (every commit is validated pk-unique within
-    itself), so they don't block each other."""
-    vers = [_entry_version(e) for e in files]
-    vmin = min(vers, default=0)
-    out: set[str] = set()
-    for e, ev in zip(files, vers):
-        if e.kind != "data":
-            continue
-        if ev == vmin or all(
-            fv >= ev or _pk_disjoint(e, f, keys)
-            for f, fv in zip(files, vers)
-            if f is not e
-        ):
-            out.add(e.path)
-    return out
 
 
 def _pk_disjoint(
@@ -756,32 +757,30 @@ class ManagedTable:
     def _abs(self, e: FileEntry) -> str:
         return os.path.join(self.root, e.path)
 
-    # ---------- schema-from-manifest ----------
+    # ---------- schema-from-manifest: the one table-file reader ----------
     #
     # Every commit records the table schema in manifest properties
-    # (Delta stores it in the log for the same reason): reads pass it to
-    # ``spark.read.schema(...)`` instead of ``mergeSchema``, which
-    # otherwise runs a footer-sampling job over EVERY referenced file at
-    # plan time — O(files) metadata work per read that at 100 TB is the
-    # planning bottleneck manifest formats exist to remove (guide §6:
-    # "table formats avoid directory listing/footer sampling
-    # altogether"). Parquet files written before an additive evolution
-    # read under the newer, wider schema with the missing columns as
-    # typed NULLs — exactly what mergeSchema produced, minus the footer
-    # pass. Manifests without the property (older layouts) fall back to
-    # mergeSchema.
+    # (Delta stores it in the log for the same reason), and every read of
+    # table files passes it to ``spark.read.schema(...)``: no footer
+    # sampling job over the referenced files at plan time — O(files)
+    # metadata work per read that at 100 TB is the planning bottleneck
+    # manifest formats exist to remove (guide §6: "table formats avoid
+    # directory listing/footer sampling altogether"). Parquet files
+    # written before an additive evolution read under the newer, wider
+    # schema with the missing columns as typed NULLs, and pk-only
+    # tombstone files read with NULL payload columns.
 
-    def _stored_schema(self, m: Manifest | None = None) -> StructType | None:
-        sj = (m or self.current).properties.get("schema")
-        if not sj:
-            return None
-        return StructType.fromJson(json.loads(sj))
+    @staticmethod
+    def _stored_schema(m: Manifest) -> StructType:
+        return StructType.fromJson(json.loads(m.properties["schema"]))
 
-    def _reader(self, m: Manifest | None = None):
+    def _read_files(self, m: Manifest, entries: list[FileEntry]) -> DataFrame:
+        """Rows of ``entries`` under version ``m``'s stored schema; an empty
+        frame of that schema for an empty list."""
         st = self._stored_schema(m)
-        if st is not None:
-            return self.spark.read.schema(st)
-        return self.spark.read.option("mergeSchema", "true")
+        if not entries:
+            return self.spark.createDataFrame([], st)
+        return self.spark.read.schema(st).parquet(*[self._abs(e) for e in entries])
 
     def _claim_data_dir(self, version: int) -> str:
         """PRIVATE staging directory for the next commit. The name
@@ -898,54 +897,17 @@ class ManagedTable:
         )
 
     def read(self, version: int | None = None, prune: dict | None = None) -> DataFrame:
-        """Scan a table version. ``prune={col: value}`` drops files whose
-        manifest [min, max] range for ``col`` excludes ``value`` BEFORE the
-        scan — planning-side file skipping; Spark never opens the file.
+        """Scan a table version. ``prune={col: value}`` drops data files
+        whose manifest [min, max] range for ``col`` excludes ``value``
+        BEFORE the scan — planning-side file skipping through the stats
+        evaluator (``_StatsPredicate``); Spark never opens the file.
 
-        MoR tables with outstanding delta files resolve latest-row-per-key
-        here (one window over the pk — the documented MoR read penalty;
-        the reference measures it at ~3.2x, README.md:33-36). File-skip
-        pruning applies only to data files that cannot out-rank other
-        files' rows in that resolve (``_mor_prunable_paths``): delta
-        files always read, and a data file appended ABOVE older
-        deltas/base never prunes unless its pk range is provably
-        disjoint — pruning it would resurrect the rows it supersedes."""
+        MoR tables with outstanding delta or tombstone files resolve
+        latest-row-per-key here (one window over the pk — the documented
+        MoR read penalty; the reference measures it at ~3.2x,
+        README.md:33-36)."""
         m = self.current if version is None else self.version_manifest(version)
-        files = m.files
-        if prune:
-            prunable = (
-                _mor_prunable_paths(files, self.primary_keys)
-                if self._needs_resolve(files)
-                else None
-            )
-
-            def _in_range(e: FileEntry, col: str, value) -> bool:
-                if e.kind != "data" or col not in e.stats:
-                    return True
-                if prunable is not None and e.path not in prunable:
-                    return True
-                lo, hi = e.stats[col]
-                try:
-                    return lo <= value <= hi
-                except TypeError:
-                    # prune value not comparable with the stored stat
-                    # realization (e.g. a date object vs the ISO string
-                    # the manifest carries) — never false-skip, scan it.
-                    return True
-
-            for col, value in prune.items():
-                files = [e for e in files if _in_range(e, col, value)]
-        if not files:
-            empty = self._reader(m).parquet(self._abs(m.files[0])).limit(0)
-            return empty
-        if self._needs_resolve(files):
-            return self._resolve_mor(m, files)
-        # Manifest schema (or mergeSchema fallback): versions appended
-        # with evolved (wider) schemas reconcile deterministically —
-        # pre-evolution files surface the new columns as NULL, and the
-        # result schema is the union, not whichever file's footer Spark
-        # happened to sample first.
-        return self._reader(m).parquet(*[self._abs(e) for e in files])
+        return self._select_read(m, _StatsPredicate.equals(prune or {}))
 
     def scan(self, where: str, version: int | None = None) -> DataFrame:
         """Filtered read with manifest data skipping for an ARBITRARY
@@ -955,82 +917,28 @@ class ManagedTable:
         tri-state — the Delta data-skipping read path), then the same
         predicate filters the surviving rows, so the result equals
         ``read().filter(where)`` exactly while a time-bounded scan of
-        an append-ordered table opens only the slices it can reach.
-        MoR deltas/tombstones always participate (a skipped base row
-        may be superseded) — the resolve runs over pruned base files
-        plus all non-data files, mirroring ``read(prune=…)``; and a
-        data file that could itself supersede older rows (an append
-        above outstanding deltas) is never pruned either
-        (``_mor_prunable_paths`` — pruning it would resurrect the rows
-        it out-ranks as false resolve winners)."""
+        an append-ordered table opens only the slices it can reach."""
         m = self.current if version is None else self.version_manifest(version)
-        pred = _StatsPredicate(self.spark, where)
-        prunable = (
-            _mor_prunable_paths(m.files, self.primary_keys)
-            if self._needs_resolve(m.files)
-            else None
+        return self._select_read(m, _StatsPredicate.parse(self.spark, where)).filter(
+            F.expr(where)
         )
-        files = [
-            e
-            for e in m.files
-            if e.kind != "data"
-            or (prunable is not None and e.path not in prunable)
-            or pred.may_match(e.stats)
-        ]
-        cond = F.expr(where)
-        if not files:
-            return self.read(version=version).filter(cond).limit(0)
-        if self._needs_resolve(files):
-            df = self._resolve_mor(m, files)
-        else:
-            df = self._reader(m).parquet(*[self._abs(e) for e in files])
-        # Conform to the FULL version schema before filtering: after
-        # additive evolution, pruning can drop every file that carries
-        # an evolved column — without the typed-null fill the predicate
-        # could not even reference it, and the result schema would
-        # silently narrow (breaking the read().filter() equivalence and
-        # the MoR UPDATE post-image projection). With the manifest
-        # schema the reader already returned exactly these fields, so
-        # the loop no-ops without ever constructing a full-table frame.
-        full_schema = self._stored_schema(m)
-        if full_schema is None:
-            full_schema = self.read(version=version).schema
-        for f in full_schema.fields:
-            if f.name not in df.columns:
-                df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-        return df.select(*[f.name for f in full_schema.fields]).filter(cond)
 
-    def _needs_resolve(self, files: list[FileEntry]) -> bool:
-        """Whether a read of ``files`` must run the latest-per-key
-        resolve. Any non-data file (delta/tombstone) obviously does;
-        but on a MoR table a DATA-ONLY layout spanning multiple commit
-        versions must too — append() is an upsert (a newer appended row
-        supersedes an older data/base row with the same pk), so a plain
-        union would surface BOTH rows and downstream DML matching via
-        scan() would tombstone/rewrite superseded images (the r10
-        random-history property test caught exactly that: an
-        append-superseded key wrongly deleted because the OLD image
-        matched the predicate). A single-version layout (fresh create,
-        post-OPTIMIZE) never resolves — compaction is what buys the
-        resolve cost back. And a multi-version layout whose cross-
-        version pk ranges are provably DISJOINT (the fresh-key
-        streaming-ingest pattern: every append carries new keys, the
-        clustered write keeps their ranges tight) skips the resolve
-        too — an O(files²) metadata check with early exit, worth it
-        because it spares every read a whole-table pk window shuffle."""
-        if any(e.kind != "data" for e in files):
-            return True
-        if self.table_mode != "mor" or len(files) <= 1:
-            return False
-        vers = [_entry_version(e) for e in files]
-        if len(set(vers)) == 1:
-            return False
-        keys = self.primary_keys
-        for i, (e, ev) in enumerate(zip(files, vers)):
-            for f, fv in zip(files[i + 1:], vers[i + 1:]):
-                if fv != ev and not _pk_disjoint(e, f, keys):
-                    return True
-        return False
+    def _select_read(self, m: Manifest, pred: _StatsPredicate) -> DataFrame:
+        """Read of version ``m`` over the files ``pred`` selects. Every
+        data file may be skipped: MoR precedence is recorded in the file
+        kind at commit (see ``append``), so a data file out-ranks no
+        other file and skipping it can never let a superseded row win the
+        resolve; delta and tombstone files always participate."""
+        files = pred.select(m.files)
+        if self._needs_resolve(files):
+            return self._resolve_mor(m, files)
+        return self._read_files(m, files)
+
+    @staticmethod
+    def _needs_resolve(files: list[FileEntry]) -> bool:
+        """A read of ``files`` resolves latest-per-key iff it holds a delta
+        or tombstone file, the only kinds that supersede rows."""
+        return any(e.kind != "data" for e in files)
 
     def _resolve_mor(self, m: Manifest, files: list[FileEntry]) -> DataFrame:
         """Latest-row-per-key over base + delta files: each file carries
@@ -1055,15 +963,13 @@ class ManagedTable:
             ver_entries.append(F.lit(_entry_version(e)))
         ver_map = F.create_map(*ver_entries)
         norm = F.regexp_replace(F.input_file_name(), "^file://", "")
-        union = (
-            self._reader(m)
-            .parquet(*[self._abs(e) for e in files])
-            .withColumn("_cv", F.element_at(ver_map, norm))
+        union = self._read_files(m, files).withColumn(
+            "_cv", F.element_at(ver_map, norm)
         )
         has_ts = any(e.kind == "tombstone" for e in files)
         if has_ts:
-            # Tombstone files carry ONLY the pk columns (mergeSchema
-            # fills the rest with NULL); they compete in the same
+            # Tombstone files carry ONLY the pk columns (the stored
+            # schema reads the rest as NULL); they compete in the same
             # latest-per-key pick, and a key whose WINNER is a tombstone
             # is deleted — a newer data/delta row resurrects it. The
             # flag rides the same path→literal map as the version.
@@ -1131,19 +1037,23 @@ class ManagedTable:
         returns rows it has ``materialized`` itself.
         ``metrics(touched rows, staged rows)`` gives the verb's
         footer-derived metrics. A change that touches no file and brings
-        no incoming rows commits nothing (returns None)."""
+        no incoming rows commits nothing (returns None); one that touches
+        no file and brings an empty incoming frame commits the carried
+        files with nothing staged, as the MoR applier does."""
         carried, rewritten = self._split_touched(m.files, hits)
         if not rewritten and incoming is None:
             return None
         touched_rows = sum(e.rows for e in rewritten)
         bound = touched_rows + (incoming[1] if incoming else 0)
-        new_data = incoming[0] if incoming else None
-        if rewritten:
-            kept = rebuild(self._read_conformed(rewritten), touched_rows)
-            new_data = kept if new_data is None else kept.unionByName(new_data)
-        if m.cluster_by and not materialized:
-            new_data = new_data.localCheckpoint(storageLevel=_ckpt_level(bound))
-        added = self._stage(m, new_data, rows=bound)
+        added: list[FileEntry] = []
+        if bound:
+            new_data = incoming[0] if incoming else None
+            if rewritten:
+                kept = rebuild(self._read_files(m, rewritten), touched_rows)
+                new_data = kept if new_data is None else kept.unionByName(new_data)
+            if m.cluster_by and not materialized:
+                new_data = new_data.localCheckpoint(storageLevel=_ckpt_level(bound))
+            added = self._stage(m, new_data, rows=bound)
         return self._commit(m, operation, carried, added, {
             **metrics(touched_rows, sum(e.rows for e in added)),
             "files_rewritten": len(rewritten),
@@ -1185,18 +1095,18 @@ class ManagedTable:
         })
 
     def _key_probe(
-        self, target: DataFrame, keys: list[str], skeys: DataFrame
+        self, keys: list[str], skeys: DataFrame
     ) -> tuple[DataFrame, DataFrame]:
         """(probe, hits) of a key-matched CoW change (merge, apply_changes).
         ``probe`` reads the files that may hold a key of ``skeys``
-        (``_maybe_prune_candidates``), conformed to the full table schema;
+        (``_maybe_prune_candidates``) under the table schema;
         ``hits`` are its rows whose key is in ``skeys``, tagged with
         ``_file``. No forced broadcast on the key set: the reference's
         refresh merges touch ~3% of the base table per round
         (experiment-instructions.md:277-296) — billions of keys at 100 TB,
         far beyond broadcast; AQE broadcasts a small key set by itself."""
-        candidates = self._maybe_prune_candidates(self.current.files, skeys, keys[0])
-        probe = self._read_conformed(candidates) if candidates else target.limit(0)
+        m = self.current
+        probe = self._read_files(m, self._maybe_prune_candidates(m.files, skeys, keys[0]))
         return probe, probe.withColumn("_file", F.input_file_name()).join(
             skeys, keys, "left_semi"
         )
@@ -1208,7 +1118,6 @@ class ManagedTable:
         source: DataFrame,
         on: list[str],
         validate_unique: bool = True,
-        track_matches: bool = True,
         when_matched: str = "update",
         when_not_matched_by_source: str | None = None,
         source_scope: str | None = None,
@@ -1252,8 +1161,7 @@ class ManagedTable:
         small extra job). The matched/inserted metrics derive from parquet
         footer counts and are exact when keys are unique on both sides —
         the same precondition Delta's UPDATE SET * carries. The MoR upsert
-        counts its matches with one semi-join pass over the table;
-        ``track_matches=False`` skips it (matched/inserted read -1)."""
+        counts its matches with one semi-join pass over the table."""
         m = self.current
         target = self.read()
         # On MoR the check is NOT skippable: a duplicate-key source would
@@ -1395,7 +1303,7 @@ class ManagedTable:
 
         def cow() -> dict:
             skeys = source.select(*on).dropDuplicates().localCheckpoint()
-            probe, hits = self._key_probe(target, on, skeys)
+            probe, hits = self._key_probe(on, skeys)
             if deleting:
                 # insert only the source rows that matched NOTHING (one
                 # anti-join against the probe's key columns — exact, since
@@ -1460,12 +1368,12 @@ class ManagedTable:
             # one part of a MoR merge whose cost is not O(source); a
             # format with a record-level index gets it for free.
             skeys = src.select(*on).dropDuplicates()
-            matched = target.join(skeys, on, "left_semi").count() if track_matches else -1
+            matched = target.join(skeys, on, "left_semi").count()
             return dict(
                 delta=(src, source_rows),
                 metrics=lambda *_: {
                     "matched_updated": matched,
-                    "inserted": source_rows - matched if matched >= 0 else -1,
+                    "inserted": source_rows - matched,
                 },
             )
 
@@ -1563,18 +1471,23 @@ class ManagedTable:
         replayed after a crash-restart commits exactly once no matter
         how many times it is retried. Both must be passed together.
 
-        On a MoR table, appended rows participate in the latest-per-key
-        resolve like any newer commit: appending a row whose primary key
-        already exists SUPERSEDES the old row at read time (i.e. it
-        behaves as an upsert, not a duplicate). Each MoR append batch is
-        validated pk-unique WITHIN itself (O(incoming) probe); appends
-        should also carry keys fresh vs earlier commits — that
-        cross-commit disjointness check would cost an O(table) pass, so
-        it is a contract, not a runtime guard (use merge() for updates). With ``merge_schema`` the incoming
-        frame may carry NEW columns (Delta ``mergeSchema`` semantics:
-        additive only); existing rows surface them as NULL at read time
-        via parquet schema merging. Without it, a schema mismatch is an
-        error — silent widening is how tables rot."""
+        On a MoR table an append is an upsert: a row whose primary key
+        already exists SUPERSEDES the old row at read time. The batch is
+        validated pk-unique WITHIN itself (O(incoming) probe), and the
+        precedence is decided once, at commit, from manifest stats: a
+        staged file whose pk range ``_pk_disjoint`` proves disjoint from
+        every file of the version it commits on top of stays ``data``
+        (the fresh-key ingest pattern — reads skip the resolve and may
+        stats-prune it), while one that may overlap live keys is recorded
+        as ``delta``, so the latest-per-key resolve lets it win. The
+        decision is re-made against the winner's files whenever the
+        commit rebases past a concurrent writer.
+
+        With ``merge_schema`` the incoming frame may carry NEW columns
+        (Delta ``mergeSchema`` semantics: additive only); the recorded
+        table schema gains them, and existing rows read them as NULL.
+        Without it, a schema mismatch is an error — silent widening is
+        how tables rot."""
         if (txn_app_id is None) != (txn_version is None):
             raise ValueError("txn_app_id and txn_version must be passed together")
         m = self.current
@@ -1593,14 +1506,12 @@ class ManagedTable:
             return txn_noop
         if self.checks:
             _enforce_checks(df, self.checks)
-        if self.table_mode == "mor":
-            # Within-batch uniqueness only (O(incoming)); cross-commit
-            # disjointness stays a documented contract — checking it
-            # would cost an O(table) pass.
-            _validate_pk_unique(df, self.primary_keys, "mor append batch")
+        mor_keys = self.primary_keys if self.table_mode == "mor" else None
+        if mor_keys:
+            # Within-batch uniqueness (O(incoming)); overlap with earlier
+            # commits is decided per staged file at commit time.
+            _validate_pk_unique(df, mor_keys, "mor append batch")
         table_schema = self._stored_schema(m)
-        if table_schema is None:
-            table_schema = self.read().schema
         existing = {f.name for f in table_schema.fields}
         extra = [c for c in df.columns if c not in existing]
         missing = [c for c in existing if c not in df.columns]
@@ -1615,45 +1526,28 @@ class ManagedTable:
             cur_types = {f.name: f.dataType for f in table_schema.fields}
             for c in missing:
                 df = df.withColumn(c, F.lit(None).cast(cur_types[c]))
-        # Stage, rebasing past writers that got ahead since this handle
-        # loaded (the eager writer-is-behind check in _claim_data_dir
-        # would otherwise surface a conflict a blind append need not
-        # have).
-        for _ in range(20):
-            try:
-                added = self._stage(m, df, num_files=num_files)
-                break
-            except ConcurrentWriteError:
-                self.manifests = _load_manifests(self.root, self.fs)
-                m = self.current
-                if _txn_committed():
-                    return txn_noop
-        else:
-            raise ConcurrentWriteError(
-                f"append could not claim a staging dir in {self.root} "
-                "after 20 rebases — pathological contention"
-            )
-        metrics = {
-            "rows_appended": sum(e.rows for e in added),
-            "files_added": len(added),
-            "columns_added": len(extra),
-        }
-        # Commit with automatic REBASE on a concurrent winner — the
-        # Delta/Iceberg "blind appends never conflict" rule: an append
-        # reads no table state, so losing the version race just means
-        # re-pointing the SAME already-written data files at the next
-        # version on top of the winner's manifest (the staging dir name
-        # carries the attempted version but entries are path-referenced,
-        # so no data is rewritten or copied). DML (DELETE/UPDATE/MERGE/
-        # OPTIMIZE) deliberately does NOT rebase: its rewrite set was
-        # derived from the loaded snapshot, and a concurrent commit may
-        # have changed exactly those files — the caller must reload and
-        # re-derive (ConcurrentWriteError, Delta's ConcurrentModification
-        # class). Bounded retries guard against livelock.
+        # Stage and commit with automatic REBASE on a concurrent winner —
+        # the Delta/Iceberg "blind appends never conflict" rule: an append
+        # reads no table state, so a writer that got ahead (caught early
+        # by the writer-is-behind check in _claim_data_dir, or late by
+        # losing the version race) just means re-pointing the SAME
+        # already-written data files at the next version on top of the
+        # winner's manifest (the staging dir name carries the attempted
+        # version but entries are path-referenced, so no data is
+        # rewritten or copied). The one exception is a MoR file that may
+        # supersede rows: its path version is its resolve rank, so it is
+        # restaged to out-rank every file of the version it commits on.
+        # DML (DELETE/UPDATE/MERGE/OPTIMIZE) deliberately does NOT
+        # rebase: its rewrite set was derived from the loaded snapshot,
+        # and a concurrent commit may have changed exactly those files —
+        # the caller must reload and re-derive (ConcurrentWriteError,
+        # Delta's ConcurrentModification class). Bounded retries guard
+        # against livelock.
+        added: list[FileEntry] = []
         for _ in range(20):
             if _txn_committed():
-                # Our staged files become orphans (vacuum-class
-                # garbage); the batch is already in.
+                # Staged files become orphans (vacuum-class garbage);
+                # the batch is already in.
                 return txn_noop
             props = m.properties
             if txn_app_id is not None:
@@ -1662,11 +1556,11 @@ class ManagedTable:
                     **props.get("txns", {}),
                     txn_app_id: int(txn_version),
                 }
-            if extra and props.get("schema"):
+            if extra:
                 # Additive evolution: extend the recorded table
                 # schema with the new columns (df order), so future
-                # reads get the union without a mergeSchema pass.
-                base_st = StructType.fromJson(json.loads(props["schema"]))
+                # reads get the union.
+                base_st = self._stored_schema(m)
                 have = {f.name for f in base_st.fields}
                 new_fields = list(base_st.fields) + [
                     f for f in df.schema.fields if f.name not in have
@@ -1674,12 +1568,29 @@ class ManagedTable:
                 props = dict(props)
                 props["schema"] = StructType(new_fields).json()
             try:
-                return self._commit(
-                    m, "APPEND", m.files, added, metrics, properties=props
-                )
+                if not added:
+                    added = self._stage(m, df, num_files=num_files)
+                if mor_keys:
+                    # MoR precedence, decided against THIS attempt's base:
+                    # a file that may share a key with any file there is a
+                    # delta, and must rank above all of them
+                    added = [
+                        replace(e, kind="data" if not e.rows or all(
+                            _pk_disjoint(e, f, mor_keys) for f in m.files
+                        ) else "delta")
+                        for e in added
+                    ]
+                    if any(e.kind == "delta" and _entry_version(e) <= m.version
+                           for e in added):
+                        added = []
+                        continue
+                return self._commit(m, "APPEND", m.files, added, {
+                    "rows_appended": sum(e.rows for e in added),
+                    "files_added": len(added),
+                    "columns_added": len(extra),
+                }, properties=props)
             except ConcurrentWriteError:
                 self.manifests = _load_manifests(self.root, self.fs)
-                self.manifests.sort(key=lambda mm: mm.version)
                 m = self.current
         raise ConcurrentWriteError(
             f"append lost the commit race 20 times in {self.root} — "
@@ -1687,22 +1598,6 @@ class ManagedTable:
         )
 
     # ---------- DELETE / UPDATE ----------
-
-    def _read_conformed(self, entries: list[FileEntry]) -> DataFrame:
-        """Read a file subset for a rewrite, conformed to the CURRENT
-        table schema. mergeSchema + typed-null fill matter after additive
-        evolution: a plain read of mixed-schema files silently DROPS the
-        evolved columns of the newer files (their values would be lost in
-        the rewrite), and a pre-evolution subset lacks the new columns
-        entirely (a union with full-schema sources would fail)."""
-        df = self._reader().parquet(*[self._abs(e) for e in entries])
-        cur_schema = self._stored_schema()
-        if cur_schema is None:
-            cur_schema = self.read().schema
-        for f in cur_schema.fields:
-            if f.name not in df.columns:
-                df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-        return df
 
     def delete(self, condition: str) -> dict[str, int]:
         """DELETE WHERE (Delta ``DELETE FROM t WHERE ...`` analog). SQL
@@ -1712,9 +1607,8 @@ class ManagedTable:
 
         The verb matches with ``scan(condition)``, which reads only the
         files whose manifest stats say the predicate MAY hold
-        (``_StatsPredicate``, the Delta data-skipping evaluation; on MoR
-        only resolve losers are pruned), and hands the change to the
-        table mode's applier (``_apply``):
+        (``_StatsPredicate``, the Delta data-skipping evaluation), and
+        hands the change to the table mode's applier (``_apply``):
 
         - copy-on-write: the files holding a matching row are rewritten
           without it; every other file carries over by reference;
@@ -1884,11 +1778,6 @@ class ManagedTable:
         ``where`` does not combine with MoR compaction (the resolve is
         inherently whole-table)."""
         m = self.current
-        # _needs_resolve, not just "any non-data file": a data-only MoR
-        # layout spanning versions (append-superseded keys) must ALSO
-        # compact through the resolve — bin-packing it as a plain union
-        # would write pk-duplicate files (both images of a superseded
-        # key in one version, which nothing can disambiguate afterward).
         if self._needs_resolve(m.files):
             if where is not None:
                 raise ValueError(
@@ -1898,17 +1787,16 @@ class ManagedTable:
             return self._compact_mor(m, target_file_rows)
         in_scope = m.files
         if where is not None:
-            pred = _StatsPredicate(self.spark, where)
-            in_scope = [e for e in m.files if pred.may_match(e.stats)]
+            in_scope = _StatsPredicate.parse(self.spark, where).select(m.files)
         scope_paths = {e.path for e in in_scope}
         out_of_scope = [e for e in m.files if e.path not in scope_paths]
         small = [e for e in in_scope if e.rows < target_file_rows]
         big = [e for e in in_scope if e.rows >= target_file_rows] + out_of_scope
         if len(small) <= 1:
             return {"files_removed": 0, "files_added": 0}
-        df = self._reader(m).parquet(*[self._abs(e) for e in small])
         added = self._stage(
-            m, df, rows=sum(e.rows for e in small), per_file=target_file_rows
+            m, self._read_files(m, small), rows=sum(e.rows for e in small),
+            per_file=target_file_rows,
         )
         return self._commit(m, "OPTIMIZE", big, added, {
             "files_removed": len(small),
@@ -2076,12 +1964,7 @@ class ManagedTable:
         ``zorder()``/``optimize()`` when the old files' scan cost
         warrants it."""
         m = self.current
-        st = self._stored_schema(m)
-        cols = (
-            {f.name for f in st.fields}
-            if st is not None
-            else set(self.read().columns)
-        )
+        cols = set(self._stored_schema(m).fieldNames())
         missing = [k for k in keys if k not in cols]
         if missing:
             raise ValueError(f"cluster keys not in schema: {missing}")
@@ -2201,11 +2084,22 @@ class ManagedTable:
 
         OPTIMIZE/VACUUM commits rewrite bytes, not rows — they are
         skipped (Delta CDF does the same). Delta-kind files (MoR) are
-        post-images like any added file."""
+        post-images like any added file; with no pre-image in the commit
+        their rows are tagged ``upsert`` — a MoR merge's delta, and a MoR
+        append whose rows supersede live keys (``append`` records it as
+        ``delta``)."""
         keys = keys if keys is not None else self.primary_keys
         if not keys:
             raise ValueError("changes() needs key columns (pass keys=… or declare primary_keys)")
         versions = [m for m in self.manifests if m.version > from_version]
+
+        def ts_keys(entries: list[FileEntry]) -> DataFrame:
+            # Tombstone files carry ONLY the pk columns, and the CDF
+            # contract preserves that (a delete-only feed has no payload
+            # columns) — read them under their own schema, not the
+            # manifest's.
+            return self.spark.read.parquet(*[self._abs(e) for e in entries])
+
         out: DataFrame | None = None
         prev = self.version_manifest(from_version)
         for m in versions:
@@ -2220,21 +2114,6 @@ class ManagedTable:
             if not removed and not added:
                 continue
 
-            def read_files(
-                entries: list[FileEntry], table_schema: bool = True
-            ) -> DataFrame | None:
-                if not entries:
-                    return None
-                if not table_schema:
-                    # Tombstone files carry ONLY the pk columns, and the
-                    # CDF contract preserves that (a delete-only feed has
-                    # no payload columns) — read them under their own
-                    # schema, not the manifest's.
-                    return self.spark.read.parquet(
-                        *[self._abs(e) for e in entries]
-                    )
-                return self._reader(m).parquet(*[self._abs(e) for e in entries])
-
             # Tombstone files are deletion vectors: their pk-only rows
             # are row-level DELETES (Delta CDF would carry the full
             # pre-image; resolving it here would cost the O(table) read
@@ -2246,7 +2125,7 @@ class ManagedTable:
             added = [e for e in added if e.kind != "tombstone"]
             ts_delta = None
             if added_ts:
-                ts_delta = read_files(added_ts, table_schema=False).select(
+                ts_delta = ts_keys(added_ts).select(
                     F.lit("delete").alias("_change_type"),
                     F.lit(m.version).alias("_commit_version"),
                     "*",
@@ -2269,7 +2148,7 @@ class ManagedTable:
             removed = [e for e in removed if e.kind != "tombstone"]
             res_delta = None
             if removed_ts:
-                res_keys = read_files(removed_ts, table_schema=False).select(*keys).dropDuplicates()
+                res_keys = ts_keys(removed_ts).select(*keys).dropDuplicates()
                 res_delta = (
                     self.read(version=m.version)
                     .join(res_keys, keys, "left_semi")
@@ -2279,14 +2158,16 @@ class ManagedTable:
                         "*",
                     )
                 )
-            pre, post = read_files(removed), read_files(added)
+            pre = self._read_files(m, removed) if removed else None
+            post = self._read_files(m, added) if added else None
             ver = F.lit(m.version).alias("_commit_version")
             if pre is None and post is None:
                 delta = ts_delta
             elif pre is None:
                 # No pre-images in this commit: plain APPEND rows are
-                # inserts; a MoR MERGE's delta rows (kind=='delta') are
-                # upserts — their pre-images still live in base files,
+                # inserts; delta rows (a MoR MERGE, or a MoR APPEND over
+                # live keys) are upserts — their pre-images still live in
+                # base files,
                 # and classifying them would cost an O(table) read, which
                 # CDF must never do. A CoW MERGE whose source matched
                 # NOTHING also lands here (no files rewritten, added
@@ -2347,12 +2228,11 @@ class ManagedTable:
                 delta, allowMissingColumns=True
             )
         if out is None:
-            base = self.read().limit(0)
-            return base.select(
+            return self._read_files(self.current, []).select(
                 F.lit("insert").alias("_change_type"),
                 F.lit(0).alias("_commit_version"),
                 "*",
-            ).limit(0)
+            )
         return out
 
     def apply_changes(
@@ -2365,8 +2245,8 @@ class ManagedTable:
 
         Semantics (the Delta ``APPLY CHANGES INTO`` shape): per key, the
         LAST action in the feed wins — ``_commit_version`` orders
-        actions, preimage rows are ignored — then post rows upsert and
-        deletes delete. The verb resolves the feed once and hands the
+        actions, preimage rows are ignored — then post rows (``insert``,
+        ``update_postimage`` and ``upsert``) upsert and deletes delete. The verb resolves the feed once and hands the
         change to the table mode's applier (``_apply``):
 
         - copy-on-write: the touch probe scans only the files whose key
@@ -2389,7 +2269,7 @@ class ManagedTable:
             )
         target = self.read()
         acted = changes.filter(
-            F.col("_change_type").isin("insert", "update_postimage", "delete")
+            F.col("_change_type").isin("insert", "update_postimage", "upsert", "delete")
         )
         w = Window.partitionBy(*keys).orderBy(F.desc("_commit_version"))
         # Materialize the resolved feed ONCE: its lineage (the feed
@@ -2413,7 +2293,7 @@ class ManagedTable:
 
         def cow() -> dict:
             allkeys = final.select(*keys).dropDuplicates()
-            probe, hits = self._key_probe(target, keys, allkeys)
+            probe, hits = self._key_probe(keys, allkeys)
             return dict(
                 hits=hits,
                 rebuild=lambda touched, _: touched.select(*probe.columns).join(

@@ -135,3 +135,36 @@ def test_driver_mem_default_is_half_of_ram_capped():
     assert _driver_mem_for(f"MemTotal:       {15 * gib + 512} kB") == "7680m"
     assert _driver_mem_for(f"MemTotal: {512 * gib} kB") == "49152m"  # 48g cap
     assert _driver_mem_for("") == "49152m"  # unknown host: the cap
+
+
+def test_bench_diff_compares_query_stats_of_bench_reports(tmp_path, capsys, monkeypatch):
+    """Two bench_report.json files diff on MIN seconds and job counts; a
+    slower min or a job-count increase fails the check, a drop does not.
+    BENCH_rNN.json wrappers keep the per-query median diff."""
+    import sys
+
+    from tools import bench_diff
+
+    def report(path, stats):
+        path.write_text(json.dumps({"query_stats": {
+            n: {"median_sec": s * 2, "min_sec": s, "jobs": j, "iters": 3}
+            for n, (s, j) in stats.items()
+        }}))
+        return str(path)
+
+    def run(old, new):
+        monkeypatch.setattr(sys, "argv", ["bench_diff", old, new])
+        rc = bench_diff.main()
+        return rc, capsys.readouterr().out
+
+    base = report(tmp_path / "a.json", {"q1": (1.0, 5), "q2": (2.0, 7)})
+    assert run(base, base)[0] == 0
+    rc, out = run(base, report(tmp_path / "b.json", {"q1": (1.0, 6), "q2": (2.0, 6)}))
+    assert rc == 1 and "job counts changed on 2 of 2" in out
+    assert run(base, report(tmp_path / "c.json", {"q1": (1.0, 5), "q2": (2.0, 4)}))[0] == 0
+    rc, out = run(base, report(tmp_path / "d.json", {"q1": (1.6, 5), "q2": (2.0, 7)}))
+    assert rc == 1 and "(min_sec)" in out and "REGRESSED" in out
+    wrapped = tmp_path / "BENCH_r01.json"
+    wrapped.write_text(json.dumps({"parsed": {"queries": {"q1": 1.0}}}))
+    rc, out = run(str(wrapped), str(wrapped))
+    assert rc == 0 and "(median sec)" in out

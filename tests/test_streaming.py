@@ -218,7 +218,7 @@ def test_stream_ingest_into_mor_with_deletion_vectors(spark, tmp_path):
 
     def ingest(batch_df, batch_id):
         if not batch_df.isEmpty():
-            t.merge(batch_df, on=["k"], track_matches=False)
+            t.merge(batch_df, on=["k"])
 
     q = (
         stream.writeStream.foreachBatch(ingest)

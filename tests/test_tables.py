@@ -533,26 +533,6 @@ def test_crashed_writer_remnants_are_harmless(spark, tmp_path):
     assert all("deadbeef" not in e.path for e in t2.current.files)
 
 
-def test_mor_merge_without_match_tracking(spark, tmp_path):
-    """track_matches=False: the MoR merge touches only the source (no
-    O(table) metric pass); metrics mark the counts unknown (-1) and the
-    resolve still produces the correct state."""
-    from lhbench_spark.tables import ManagedTable
-
-    base = spark.range(0, 100).selectExpr("id AS k", "CAST(1.0 AS DOUBLE) AS v")
-    t = ManagedTable.create(
-        spark, str(tmp_path / "mnt"), base, num_files=2,
-        table_mode="mor", primary_keys=("k",),
-    )
-    m = t.merge(
-        spark.range(90, 120).selectExpr("id AS k", "CAST(2.0 AS DOUBLE) AS v"),
-        on=["k"], track_matches=False,
-    )
-    assert m["matched_updated"] == -1 and m["files_rewritten"] == 0
-    assert t.read().count() == 120
-    assert t.read().filter("v = 2.0").count() == 30
-
-
 def test_check_constraints_enforced(spark, tmp_path):
     """CHECK constraints (Delta ADD CONSTRAINT analog): declared at
     create, enforced on the load and on every append/merge SOURCE — a
@@ -920,6 +900,27 @@ def test_apply_changes_last_action_per_key_wins(spark, tmp_path):
     got = {r.k: r.v for r in b.read().collect()}
     assert 11 not in got and got[10] == 0.0 and got[5] == 200.0
     assert len(got) == 11
+
+
+def test_apply_changes_replays_mor_upsert_feed(spark, tmp_path):
+    """A MoR table's feed tags merge deltas and superseding appends as
+    ``upsert``; replaying it onto a replica applies them as post rows."""
+    a = ManagedTable.create(
+        spark, str(tmp_path / "s"), _base_df(spark, 100), num_files=2,
+        cluster_by=("key",), table_mode="mor", primary_keys=("key",),
+    )
+    b = ManagedTable.create(
+        spark, str(tmp_path / "r"), _base_df(spark, 100), num_files=2,
+        cluster_by=("key",), primary_keys=("key",),
+    )
+    a.merge(
+        _base_df(spark, 120).filter("key >= 90").withColumn("value", F.lit(-1.0)),
+        on=["key"],
+    )
+    a.append(_base_df(spark, 20).filter("key >= 10").withColumn("value", F.lit(-2.0)))
+    a.delete("key < 5")
+    b.apply_changes(a.changes(0))
+    assert sorted(b.read().collect()) == sorted(a.read().collect())
 
 
 # ---------- CoW / MoR agreement ----------
@@ -1858,7 +1859,7 @@ def test_stats_predicate_may_match(spark):
              "ts": ["1997-01-01T00:00:00", "1997-06-30T00:00:00"]}
 
     def may(cond, st=stats):
-        return _StatsPredicate(spark, cond).may_match(st)
+        return _StatsPredicate.parse(spark, cond).may_match(st)
 
     assert may("part = 3") and not may("part = 9")
     assert may("3 = part") and not may("9 = part")  # literal-first flip
@@ -1867,6 +1868,9 @@ def test_stats_predicate_may_match(spark):
     assert not may("key >= 700 AND part = 3")  # And: one side impossible
     assert may("key >= 700 OR part = 3")       # Or: one side possible
     assert may("part IN (2, 9)") and not may("part IN (8, 9)")
+    assert may("part BETWEEN 5 AND 9") and not may("part BETWEEN 7 AND 9")
+    assert not may("key BETWEEN -9 AND -1") and may("7 BETWEEN part AND key")
+    assert may("part NOT BETWEEN 0 AND 6")  # NOT: unknown, stays candidate
     assert may("tag = 'row-5'") and not may("tag = 'zzz'")
     assert not may("ts >= TIMESTAMP '1998-01-01'")   # beyond the 26h slack
     assert may("ts >= TIMESTAMP '1997-06-29 12:00:00'")  # inside slack
@@ -1879,8 +1883,16 @@ def test_stats_predicate_may_match(spark):
     assert may("part = 3 AND nonsense_func(key) > 2") is True
     assert not may("part = 9 AND nonsense_func(key) > 2")
     # empty stats / unparseable predicate: always candidate
-    assert _StatsPredicate(spark, "part = 9").may_match({})
-    assert _StatsPredicate(spark, "this is ( not sql").may_match(stats)
+    assert _StatsPredicate.parse(spark, "part = 9").may_match({})
+    assert _StatsPredicate.parse(spark, "this is ( not sql").may_match(stats)
+    # the parsed predicate is a plain Python tree: evaluating it per file
+    # makes no JVM call
+    assert _StatsPredicate.parse(spark, "part = 3 AND key IN (1, 2)").tree == (
+        "and", [("=", "part", 3), ("or", [("=", "key", 1), ("=", "key", 2)])]
+    )
+    assert _StatsPredicate.parse(spark, "key BETWEEN 5 AND 8").tree == (
+        "and", [(">=", "key", 5), ("<=", "key", 8)]
+    )
 
 
 def test_delete_prunes_probe_by_predicate_stats(spark, tmp_path):
@@ -1983,7 +1995,7 @@ def test_stats_predicate_string_literal_vs_temporal_stats(spark):
     stats = {"ts": ["1997-01-01T00:00:00", "1997-01-01T23:00:00"]}
 
     def may(cond):
-        return _StatsPredicate(spark, cond).may_match(stats)
+        return _StatsPredicate.parse(spark, cond).may_match(stats)
 
     # all four would false-skip under lexicographic ordering
     assert may("ts = '1997-01-01 12:30:00'")
@@ -1996,7 +2008,7 @@ def test_stats_predicate_string_literal_vs_temporal_stats(spark):
     # unparseable literal vs temporal-looking stats: stay a candidate
     assert may("ts = 'not-a-time'")
     # plain string stats keep lexicographic semantics
-    assert not _StatsPredicate(spark, "tag = 'zzz'").may_match(
+    assert not _StatsPredicate.parse(spark, "tag = 'zzz'").may_match(
         {"tag": ["row-0", "row-99"]}
     )
 
@@ -2037,9 +2049,9 @@ def test_scan_conforms_schema_after_evolution(spark, tmp_path):
 
 
 # -- MoR supersede-aware stats pruning (round 10; r9 ADVICE high) -------------
-# MoR append() is an upsert: a data-kind file at a HIGHER commit version
-# out-ranks older delta/base rows in the latest-per-key resolve. scan()
-# and read(prune=) must therefore never stats-prune such a file — its
+# MoR append() is an upsert: an appended file at a HIGHER commit version
+# out-ranks older delta/base rows in the latest-per-key resolve, so it is
+# recorded as a delta and scan()/read(prune=) never stats-prune it — its
 # rows failing the predicate is exactly the case where pruning it would
 # resurrect the superseded older row as a false resolve winner (and,
 # since MoR delete/update match via scan(), tombstone or rewrite keys
@@ -2110,9 +2122,11 @@ def test_mor_delete_matches_live_rows_not_superseded(spark, tmp_path):
 
 def test_mor_disjoint_append_still_prunes(spark, tmp_path):
     """The scale path survives the soundness fix: an appended file whose
-    pk range is DISJOINT from every older file is still prunable, so a
-    time-ordered MoR ingest keeps its slice skipping."""
-    from lhbench_spark.tables import _mor_prunable_paths
+    pk range is DISJOINT from every older file stays a data file, so a
+    time-ordered MoR ingest keeps its slice skipping — the evaluator
+    selects (and the scan plan reads) only the base file whose range can
+    hold the predicate, plus the delta."""
+    from lhbench_spark.tables import _StatsPredicate, _strip_uri
 
     t = ManagedTable.create(
         spark, str(tmp_path / "t"), _base_df(spark, 100), num_files=2,
@@ -2126,20 +2140,17 @@ def test_mor_disjoint_append_still_prunes(spark, tmp_path):
     )
     t.append(_base_df(spark, 300).filter("key >= 200"), num_files=2)
     files = t.current.files
-    prunable = _mor_prunable_paths(files, ("key",))
-    base = {e.path for e in files if e.kind == "data"
-            and e.path.split(os.sep)[1].startswith("v00000")}
-    appended = {e.path for e in files if e.kind == "data"} - base
-    assert base <= prunable            # min version: trivially safe
-    assert appended <= prunable        # disjoint pk range: provably safe
-    # and scan actually skips the appended slice for an out-of-range probe
-    opened = (
-        t.scan("key BETWEEN 5 AND 8")
-        .select(F.input_file_name()).distinct().count()
-    )
-    assert opened < len(files)
-    want = sorted(t.read().filter("key BETWEEN 5 AND 8").collect())
-    assert sorted(t.scan("key BETWEEN 5 AND 8").collect()) == want
+    assert [e.kind for e in files] == ["data", "data", "delta", "data", "data"]
+    cond = "key BETWEEN 5 AND 8"
+    selected = _StatsPredicate.parse(spark, cond).select(files)
+    assert [e.kind for e in selected] == ["data", "delta"]
+    assert selected[0].stats["key"][0] == 0  # the base file holding 5-8
+    scan = t.scan(cond)
+    assert {_strip_uri(p) for p in scan.inputFiles()} == {
+        t._abs(e) for e in selected
+    }
+    want = sorted(t.read().filter(cond).collect())
+    assert sorted(scan.collect()) == want
 
 
 def test_merge_candidate_pruning_small_table_bypass(spark, tmp_path):
@@ -2201,6 +2212,7 @@ def _history_df(spark, rows):
 
 
 def test_mor_random_histories_scan_read_equivalence(spark, tmp_path):
+    import functools
     import os
     import random
 
@@ -2246,15 +2258,12 @@ def test_mor_random_histories_scan_read_equivalence(spark, tmp_path):
             elif op == "merge":
                 ks = rng.sample(range(60), rng.randint(1, 10))
                 rs = rows_for(ks)
-                t.merge(_history_df(spark, rs), on=["key"], track_matches=False)
+                t.merge(_history_df(spark, rs), on=["key"])
                 apply_rows(rs)
             elif op == "merge_delete":
                 ks = rng.sample(range(60), rng.randint(1, 8))
                 rs = rows_for(ks)
-                t.merge(
-                    _history_df(spark, rs), on=["key"],
-                    track_matches=False, when_matched="delete",
-                )
+                t.merge(_history_df(spark, rs), on=["key"], when_matched="delete")
                 for r in rs:
                     if r[0] in model:
                         del model[r[0]]
@@ -2284,6 +2293,16 @@ def test_mor_random_histories_scan_read_equivalence(spark, tmp_path):
             w = sorted(tuple(r) for r in t.read().filter(cond).collect())
             s = sorted(tuple(r) for r in t.scan(cond).collect())
             assert s == w, f"history {h}: scan({cond}) != read().filter"
+        # read(prune=) point lookups through the same evaluator, over
+        # layouts with overlapping appends, deltas and tombstones
+        ks = rng.sample(range(60), 3)
+        pruned = functools.reduce(lambda a, b: a.unionByName(b), [
+            t.read(prune={"key": k}).filter(F.col("key") == k) for k in ks
+        ])
+        w = sorted(tuple(r) for r in t.read().filter(F.col("key").isin(ks)).collect())
+        assert sorted(tuple(r) for r in pruned.collect()) == w, (
+            f"history {h}: read(prune={{key: k}}) != read().filter for {ks}"
+        )
 
 
 def test_mor_fresh_key_appends_skip_resolve(spark, tmp_path):
@@ -2308,6 +2327,83 @@ def test_mor_fresh_key_appends_skip_resolve(spark, tmp_path):
     assert t._needs_resolve(t.current.files)
     assert t.read().count() == 300
     assert t.read().filter("key = 50").collect()[0]["value"] == -5.0
+
+
+def test_mor_append_records_precedence_in_kind(spark, tmp_path):
+    """A MoR append whose pk range may overlap a live file is recorded as
+    a delta (it supersedes), a fresh-key append stays data, and the
+    change feed tags the superseding rows as upserts."""
+    t = ManagedTable.create(
+        spark, str(tmp_path / "t"), _base_df(spark, 100), num_files=2,
+        cluster_by=("key",), table_mode="mor", primary_keys=("key",),
+    )
+    t.append(_base_df(spark, 200).filter("key >= 150"))
+    assert t.current.files[-1].kind == "data"
+    t.append(_base_df(spark, 60).filter("key >= 50").withColumn("value", F.lit(-1.0)))
+    assert t.current.files[-1].kind == "delta"
+    live = {r["key"]: r["value"] for r in t.read().collect()}
+    assert len(live) == 150 and all(live[k] == -1.0 for k in range(50, 60))
+    feed = t.changes(1).collect()
+    assert {r["_change_type"] for r in feed} == {"upsert"}
+    assert sorted(r["key"] for r in feed) == list(range(50, 60))
+    assert t.optimize()["deltas_folded"] == 1
+
+
+def test_mor_append_kind_redecided_after_lost_race(spark, tmp_path):
+    """The append's kind is decided against the version it commits on
+    top of: keys fresh against the snapshot it staged on, but written by
+    a concurrent append that wins the commit race, make it a delta on
+    the rebased commit, restaged at that version so the later write wins
+    the resolve."""
+    from lhbench_spark.tables import TableFS
+
+    root = str(tmp_path / "t")
+    ManagedTable.create(
+        spark, root, _base_df(spark, 100), num_files=2,
+        cluster_by=("key",), table_mode="mor", primary_keys=("key",),
+    )
+
+    class RacingFS(TableFS):
+        racer = None
+
+        def commit_text(self, path, text):
+            racer, self.racer = self.racer, None
+            if racer is not None:
+                racer()
+            return super().commit_text(path, text)
+
+    fs = RacingFS()
+    t = ManagedTable(spark, root, fs)
+    fs.racer = lambda: ManagedTable(spark, root).append(
+        _base_df(spark, 110).filter("key >= 100").withColumn("value", F.lit(-1.0))
+    )
+    m = t.append(_base_df(spark, 105).filter("key >= 100").withColumn("value", F.lit(-2.0)))
+    assert m["rows_appended"] == 5
+    assert t.current.version == 2
+    assert [e.kind for e in t.current.files[-2:]] == ["data", "delta"]
+    assert t.current.files[-1].path.startswith(os.path.join("data", "v00002-"))
+    got = {r["key"]: r["value"] for r in t.read().filter("key >= 100").collect()}
+    assert got == {**{k: -2.0 for k in range(100, 105)},
+                   **{k: -1.0 for k in range(105, 110)}}
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_empty_source_merge_stages_no_file(spark, tmp_path, mode):
+    """A merge (update or matched-delete form) of an EMPTY source touches
+    no file and brings no row: both appliers commit the carried files
+    with nothing staged."""
+    t = ManagedTable.create(
+        spark, str(tmp_path / "t"), _base_df(spark, 100), num_files=4,
+        cluster_by=("key",), table_mode=mode, primary_keys=("key",),
+    )
+    files = [e.path for e in t.current.files]
+    empty = _base_df(spark, 100).limit(0)
+    for when_matched, counted in (("update", "matched_updated"), ("delete", "matched_deleted")):
+        m = t.merge(empty, on=["key"], when_matched=when_matched)
+        assert (m[counted], m["inserted"], m["files_added"]) == (0, 0, 0), when_matched
+        assert [e.path for e in t.current.files] == files
+    assert t.current.version == 2
+    assert t.read().count() == 100
 
 
 # ---------- commit-path matrix ----------
