@@ -27,6 +27,16 @@ from lhbench_spark.queries.registry import query
 from lhbench_spark.tables import ManagedTable
 
 
+def _files_scanned(t: ManagedTable, col: str, value) -> int:
+    """Files of ``t``'s current version a point lookup ``col = value``
+    must scan: those without stats on ``col`` or whose range holds it."""
+    return sum(
+        1
+        for e in t.current.files
+        if col not in e.stats or e.stats[col][0] <= value <= e.stats[col][1]
+    )
+
+
 def _tmp() -> str:
     # The returned DataFrame is collected by the caller AFTER this query
     # function returns, so the table directory must outlive the call —
@@ -476,13 +486,6 @@ def acid_zorder_skipping(spark, sf_dir):
     )
     total = len(t.current.files)
 
-    def scanned(col, value):
-        return sum(
-            1
-            for e in t.current.files
-            if col not in e.stats or e.stats[col][0] <= value <= e.stats[col][1]
-        )
-
     cust_cnt = (
         t.read(prune={"o_custkey": 42})
         .filter(F.col("o_custkey") == 42)
@@ -496,8 +499,8 @@ def acid_zorder_skipping(spark, sf_dir):
     return (
         cust_cnt.select(F.col("c").alias("cust_cnt"))
         .crossJoin(key_cnt.select(F.col("c").alias("key_cnt")))
-        .withColumn("cust_pruned", F.lit(scanned("o_custkey", 42) < total))
-        .withColumn("key_pruned", F.lit(scanned("o_orderkey", 1024) < total))
+        .withColumn("cust_pruned", F.lit(_files_scanned(t, "o_custkey", 42) < total))
+        .withColumn("key_pruned", F.lit(_files_scanned(t, "o_orderkey", 1024) < total))
     )
 
 
@@ -862,14 +865,7 @@ def acid_zorder_recluster(spark, sf_dir):
         cluster_by=("o_orderkey",), num_files=16, validate_count=False,
     )
     t.zorder(("o_custkey", "o_orderkey"), num_files=16)
-    total_files = len(t.current.files)
-
-    def scanned(col, value):
-        return sum(
-            1
-            for e in t.current.files
-            if col not in e.stats or e.stats[col][0] <= value <= e.stats[col][1]
-        )
+    total = len(t.current.files)
 
     cust_cnt = (
         t.read(prune={"o_custkey": 42})
@@ -886,8 +882,8 @@ def acid_zorder_recluster(spark, sf_dir):
         cust_cnt.select(F.col("c").alias("cust_cnt"))
         .crossJoin(key_cnt.select(F.col("c").alias("key_cnt")))
         .crossJoin(total_cnt.select(F.col("tc").alias("total_cnt")))
-        .withColumn("cust_pruned", F.lit(scanned("o_custkey", 42) < total_files))
-        .withColumn("key_pruned", F.lit(scanned("o_orderkey", 1024) < total_files))
+        .withColumn("cust_pruned", F.lit(_files_scanned(t, "o_custkey", 42) < total))
+        .withColumn("key_pruned", F.lit(_files_scanned(t, "o_orderkey", 1024) < total))
         .withColumn("operation", F.lit(t.current.operation))
     )
 
